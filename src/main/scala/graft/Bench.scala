@@ -26,15 +26,7 @@ object Bench {
     val preTouchSec = BenchPreTouch
       .parseGib(sys.env.get("SPARK_GRAFT_PRETOUCH"))
       .flatMap(BenchPreTouch.run)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus.toInt)
     // SELF-CALIBRATION canary (r16 verdict #6): fixed host
     // measurements bracketing the timed region, recorded in the
     // artifact so a degraded-host run carries its own multiplier

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.EnvelopeFeed
 import graft.streaming.StreamPipeline
 
@@ -14,13 +12,7 @@ import graft.streaming.StreamPipeline
   * contract; run with `sbt "runMain graft.PipelineDemo"`. */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(8)
 
     val feedDir = Files.createTempDirectory("graft_feed").toString
     val outDir = Files.createTempDirectory("graft_out").toString

@@ -35,6 +35,23 @@ object SparkEntry {
   val FixtureDir: String =
     sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/fixtures")
 
+  /** The one local-mode session every main and the test harness use:
+    * `local[cores]` with shuffle partitions = cores, session time zone
+    * UTC, TIMESTAMP(NANOS) parquet read as long (`events.parquet`'s
+    * older generations), AQE on, UI off, log level WARN. */
+  def localSession(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   // model + broadcast scorer cached per JVM (Verify/Bench are one-shot)
   @volatile private var cachedScorer: SentimentScorer = _
   def scorer(s: SparkSession): SentimentScorer = {

@@ -881,90 +881,6 @@ object DedupOps {
     * callers running many queries in one session (the Bench/Verify
     * harnesses clearCache between queries; library loops should
     * release explicitly after their action). */
-  /** Broadcast bound (keys) for [[adaptiveDupSemiPrune]]'s first tier:
-    * 2²⁰ census keys ≈ 24 MB packed (int window + 16-byte gram hash),
-    * a comfortably-built executor hash relation. Driver-memory math,
-    * not a data tune; override -Dgraft.span.broadcastKeys. */
-  private def spanBroadcastMaxKeys: Long =
-    sys.props.get("graft.span.broadcastKeys").flatMap(_.toLongOption)
-      .getOrElse(1L << 20)
-
-  /** Bloom bound (keys) for the middle tier: up to 2²³ keys get a
-    * 16-bits/key filter (≤ 16 MB bitmap as a plan literal, ~0.1% FP
-    * at k = 3). Override -Dgraft.span.bloomKeys. */
-  private def spanBloomMaxKeys: Long =
-    sys.props.get("graft.span.bloomKeys").flatMap(_.toLongOption)
-      .getOrElse(1L << 23)
-
-  /** Engagement gate for [[adaptiveDupSemiPrune]] — the tier choice
-    * costs one census-sized driver action (persist + count), and the
-    * r18 A/B at sf0.1 measured that action as a NET LOSS against the
-    * sort-merge semi join it replaces when the gram mass is small
-    * (+0.5 s per query for a sub-second saved exchange — guide §1.1's
-    * "the ideal plan is usually slower at first"). The gate is the
-    * optimizer's own STATIC size estimate of the gram table (free,
-    * driver-side, monotone in input bytes): below ~1 GiB of estimated
-    * gram mass the unhinted spillable sort-merge ships unchanged —
-    * byte-identical to the r17 plan — and above it the census action
-    * is amortized by the avoided full-mass exchange. A wrong gate
-    * choice costs only performance, never results. Override
-    * -Dgraft.span.adaptiveMinBytes (0 engages the tiers everywhere,
-    * as the specs do). */
-  private def spanAdaptiveMinBytes: Long =
-    sys.props.get("graft.span.adaptiveMinBytes").flatMap(_.toLongOption)
-      .getOrElse(1L << 30)
-
-  /** Semi-prune the (persisted) gram table to its duplicated keys
-    * WITHOUT re-shuffling the gram mass when the census allows it
-    * (guide §3.2; r17 verdict item 4). The unhinted spelling planned a
-    * SortMergeJoin at sf0.1 — the gram stream re-exchanged on the
-    * census key — because AQE prices the census STAGE by its
-    * pre-filter shuffle bytes (every distinct key), not the tiny
-    * occ ≥ 2 survivor set (measured: 503k gram rows, 22k duplicated
-    * keys — 96% of the census stage dies in the filter). The census
-    * is persisted and counted once (both the tier choice and the join
-    * consume it), then:
-    *
-    *  1. ≤ [[spanBroadcastMaxKeys]]: broadcast semi join — the gram
-    *     mass crosses ZERO exchanges here;
-    *  2. ≤ [[spanBloomMaxKeys]]: a Bloom bitmap sized from the
-    *     measured count (16 bits/key, [[SketchOps.bloomBitmap]])
-    *     drops definitely-non-duplicated grams MAP-SIDE before the
-    *     spillable sort-merge semi join; false positives only ride to
-    *     the exact join, so the result is unchanged;
-    *  3. else (a genuinely high-duplication corpus): today's unhinted
-    *     sort-merge semi join, AQE skew-split applicable.
-    *
-    * The composite key is pre-hashed (`xxhash64` over the key
-    * columns) for the bitmap — hash ambiguity is at worst a Bloom
-    * false positive, which the exact join removes. Returns the pruned
-    * gram rows plus the census's release hook. */
-  private def adaptiveDupSemiPrune(grams: DataFrame, dup: DataFrame,
-                                   keys: Seq[String])
-      : (DataFrame, () => Unit) = {
-    // small gram mass: the plain unhinted spillable semi join (the
-    // r17 plan, AQE skew-split applicable) — see [[spanAdaptiveMinBytes]]
-    if (grams.queryExecution.optimizedPlan.stats.sizeInBytes
-        < spanAdaptiveMinBytes)
-      return (grams.join(dup, keys, "left_semi"), () => ())
-    val dupP = dup.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDup = dupP.count()
-    val pruned =
-      if (nDup <= spanBroadcastMaxKeys)
-        grams.join(broadcast(dupP), keys, "left_semi")
-      else if (nDup <= spanBloomMaxKeys) {
-        val k = (c: DataFrame) => xxhash64(keys.map(c.apply): _*)
-        val bits = math.max(1 << 20,
-          Integer.highestOneBit(math.min(Int.MaxValue / 2,
-            16L * nDup).toInt) * 2)
-        val bitmap = graft.operators.SketchOps
-          .bloomBitmap(dupP, k(dupP), bits)
-        grams.filter(graft.operators.SketchOps.bloomProbe(bitmap, k(grams)))
-          .join(dupP, keys, "left_semi")
-      } else grams.join(dupP, keys, "left_semi")
-    (pruned, () => { dupP.unpersist(blocking = true); () })
-  }
-
   def exactSubstringSpansReleasable(docs: DataFrame, idCol: String,
                                     tokens: Column, window: Int)
       : (DataFrame, () => Unit) = {
@@ -979,8 +895,7 @@ object DedupOps {
       .filter(col("occ") >= 2)
       .select(col("gh"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val (prunedGrams, dupRelease) = adaptiveDupSemiPrune(grams, dup, Seq("gh"))
-    val out = prunedGrams
+    val out = grams.join(dup, Seq("gh"), "left_semi")
       .select(col("doc_id"), col("pos"))
       .withColumn("isl", col("pos") - row_number().over(w))
       .groupBy(col("doc_id"), col("isl"))
@@ -991,7 +906,7 @@ object DedupOps {
           .as("span_tokens"))
       .select(col("doc_id"), col("span_start"), col("span_end"),
         col("span_tokens"))
-    (out, () => { dupRelease(); grams.unpersist(blocking = true); () })
+    (out, () => { grams.unpersist(blocking = true); () })
   }
 
   /** The ACTION face of [[exactSubstringSpans]] — ExactSubstr span
@@ -1304,17 +1219,13 @@ object DedupOps {
         graft.plans.GramHashSweepGenerate.of(col("toks"), windows)
           .as(Seq("w", "pos", "gh")))
       .persist()
-    // skew-safe (w, gh) census — see [[exactSubstringSpans]]; the
-    // join-back rides the adaptive semi-prune (broadcast / bloom /
-    // sort-merge by measured census size — guide §3.2)
+    // skew-safe (w, gh) census — see [[exactSubstringSpans]]
     val dup = grams.groupBy(col("w"), col("gh"))
       .agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= 2)
       .select(col("w"), col("gh"))
     val wd = Window.partitionBy(col("w"), col("doc_id")).orderBy(col("pos"))
-    val (prunedGrams, dupRelease) =
-      adaptiveDupSemiPrune(grams, dup, Seq("w", "gh"))
-    val out = prunedGrams
+    val out = grams.join(dup, Seq("w", "gh"), "left_semi")
       .select(col("w"), col("doc_id"), col("pos"))
       .withColumn("isl", col("pos") - row_number().over(wd))
       .groupBy(col("w"), col("doc_id"), col("isl"))
@@ -1331,6 +1242,6 @@ object DedupOps {
       .select(col("w").cast("int").as("gram_window"),
         col("n_dup_gram_starts"), col("n_spans"), col("n_docs"),
         col("span_tokens"))
-    (out, () => { dupRelease(); grams.unpersist(blocking = true); () })
+    (out, () => { grams.unpersist(blocking = true); () })
   }
 }

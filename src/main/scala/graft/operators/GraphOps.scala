@@ -15,16 +15,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
-  /** Per-round timing lines are a debug hook, OFF by default (r7
-    * advice): a library operator must not write to every embedding
-    * app's stderr — tests and callers see clean logs. Enable with
-    * `-Dgraft.timing=true` or `GRAFT_TIMING=1` (the `GRAFT_CC_EXPLAIN`
-    * class of opt-in plan/perf probe). */
-  private def debugTiming(msg: => String): Unit =
-    if (sys.props.get("graft.timing").exists(_.equalsIgnoreCase("true")) ||
-        sys.env.contains("GRAFT_TIMING"))
-      System.err.println(msg)
-
   /** Connected components over an undirected edge list via the
     * alternating large-star / small-star algorithm (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", ACM SoCC 2014).
@@ -134,17 +124,12 @@ object GraphOps {
       // distributed rounds against. At corpus scale the count exceeds
       // the bound and the rounds below run exactly as before.
       if (curSig._1 <= finishBound)
-        return driverFinish(cur, curSig._1, curRelease)
+        return driverFinish(cur, curRelease)
       require(rounds < maxRounds,
         s"connectedComponents did not converge within $maxRounds rounds")
       rounds += 1
       val t0 = System.nanoTime()
       val next = smallStar(largeStar(cur))
-      if (rounds == 1 && sys.env.contains("GRAFT_CC_EXPLAIN"))
-        // plan-hygiene audit hook: one round's physical plan (exchange
-        // reuse, AQE shape) without spamming every round
-        System.err.println(next.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       val (nxt, nextSig, nextRelease) = materializeAndSign(next)
       // PRIMARY stop: the round's own change flags (r18). chg == 0
       // means large-star emitted no m ≠ a row and small-star saw no
@@ -165,7 +150,6 @@ object GraphOps {
       cur = nxt
       val roundSec = (System.nanoTime() - t0) / 1e9
       graft.PhaseLog.add(s"cc.round$rounds", roundSec)
-      debugTiming(f"[cc] round $rounds edges=${nextSig._1} chg=${nextSig._3} $roundSec%.2fs")
     }
     // fixpoint: every edge is (componentMin, member); roots map to
     // themselves (they appear only on the u side). The fixpoint edge
@@ -281,13 +265,11 @@ object GraphOps {
     if (edCnt > 0 && edCnt <= driverPrFinishMaxEdges) {
       val buildSec = (System.nanoTime() - tBuild0) / 1e9
       graft.PhaseLog.add("pr.build", buildSec)
-      debugTiming(f"[pr] edge build $buildSec%.2fs edges=$edCnt")
       return driverPageRank(ed, nodes, iters, dampNum, dampDen)
     }
     val n = nodes.count()  // bounded driver scalar, like the CMS probe
     val buildSec = (System.nanoTime() - tBuild0) / 1e9
     graft.PhaseLog.add("pr.build", buildSec)
-    debugTiming(f"[pr] edges+nodes build $buildSec%.2fs n=$n")
     if (n == 0) {
       // empty (or all-null / all-self-loop-free… i.e. no valid) edge
       // set: no nodes, no ranks — and no driver-side division by
@@ -342,7 +324,6 @@ object GraphOps {
       if (i < iters) {
         val iterSec = (System.nanoTime() - tIter0) / 1e9
         graft.PhaseLog.add(s"pr.iter$i", iterSec)
-        debugTiming(f"[pr] iter $i $iterSec%.2fs")
       }
     }
     val lastRelease = prevRelease
@@ -512,7 +493,6 @@ object GraphOps {
       spark.sparkContext.parallelize(out.toIndexedSeq, slices), schema)
     val sec = (System.nanoTime() - t0) / 1e9
     graft.PhaseLog.add("pr.driver_finish", sec)
-    debugTiming(f"[pr] driver finish edges=${edgeRows.length} n=$n $sec%.2fs")
     (df, () => ())
   }
 
@@ -524,8 +504,8 @@ object GraphOps {
     * an RDD-backed frame (never a plan-embedded LocalRelation, which
     * would ride every downstream task closure). Released leaf, no
     * persisted state — the returned release hook is a no-op. */
-  private def driverFinish(cur: DataFrame, nEdges: Long,
-                           release: () => Unit): (DataFrame, () => Unit) = {
+  private def driverFinish(cur: DataFrame, release: () => Unit)
+      : (DataFrame, () => Unit) = {
     val t0 = System.nanoTime()
     val spark = cur.sparkSession
     val edges = cur.select(col("u"), col("v")).collect()
@@ -566,7 +546,6 @@ object GraphOps {
       spark.sparkContext.parallelize(labels.toIndexedSeq, slices), schema)
     val sec = (System.nanoTime() - t0) / 1e9
     graft.PhaseLog.add("cc.driver_finish", sec)
-    debugTiming(f"[cc] driver finish edges=$nEdges nodes=${labels.length} $sec%.2fs")
     (out, () => ())
   }
 

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.multimodal.MultimodalOps
 import graft.multimodal.MultimodalOps.MediaRow
+import graft.tools.FixtureFiles.writeSingle
 
 /** One-shot fixture dump for the IMAGE near-dup oracle (the
   * DumpModelFixture device applied to the visual dedup family):
@@ -65,26 +64,8 @@ object DumpImageFixture {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "fixtures"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(4)
     import spark.implicits._
-
-    def writeSingle(df: org.apache.spark.sql.DataFrame, target: String): Unit = {
-      val tmp = target + ".tmpdir"
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file under $tmp"))
-      val dst = new java.io.File(target)
-      if (dst.exists()) dst.delete()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      new java.io.File(tmp).listFiles().foreach(_.delete())
-      new java.io.File(tmp).delete()
-    }
 
     def row(id: Long, bytes: Array[Byte], w: Int, h: Int): MediaRow =
       MediaRow(id, "image", "image/x-fixture", Some(w), Some(h), None, bytes)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 import graft.ml.ModelLoader
+import graft.tools.FixtureFiles.writeSingle
 
 /** One-shot fixture dump for the relational sentiment oracle: flattens
   * the frozen 5-stage PipelineModel into two parquet tables DuckDB can
@@ -19,28 +18,8 @@ import graft.ml.ModelLoader
 object DumpModelFixture {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "fixtures"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(4)
     import spark.implicits._
-
-    // flatten Spark's part-file directory into a single plain .parquet
-    // file (DuckDB's read_parquet takes a file path, not a directory)
-    def writeSingle(df: org.apache.spark.sql.DataFrame, target: String): Unit = {
-      val tmp = target + ".tmpdir"
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file under $tmp"))
-      val dst = new java.io.File(target)
-      if (dst.exists()) dst.delete()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      new java.io.File(tmp).listFiles().foreach(_.delete())
-      new java.io.File(tmp).delete()
-    }
 
     val m = ModelLoader.load(spark, SparkEntry.ModelDir)
     val vocab = new Array[(String, Int, Double, Double)](m.vocab.size())

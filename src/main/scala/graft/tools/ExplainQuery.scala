@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Print the formatted physical plan of named SparkEntry queries
@@ -16,13 +15,7 @@ object ExplainQuery {
     val rawMode = args.lift(1).getOrElse("formatted")
     val mode = ExplainMode.fromString(if (rawMode == "final") "simple" else rawMode)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

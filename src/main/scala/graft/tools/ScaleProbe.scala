@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupOps, GraphOps, SimilarityOps}
@@ -63,13 +63,7 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     require(factor >= 2 && factor <= 156, "factor in [2, 156]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val prOnly = args.length > 2 && args(2) == "pr"

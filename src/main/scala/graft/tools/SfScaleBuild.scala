@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builder-side ×F FULL-SCHEMA scale-up (round-13 verdict item 7; NOT
@@ -48,12 +48,7 @@ object SfScaleBuild {
     val factor = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val outDir = args.drop(2).headOption.getOrElse("/tmp/sf1")
     require(factor >= 2 && factor <= 156, "factor in [2, 156]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SparkEntry.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val Shift = 1000000000L
 

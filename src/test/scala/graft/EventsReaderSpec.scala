@@ -31,6 +31,18 @@ class EventsReaderSpec extends AnyFunSuite with SparkSessionFixture {
       .toSeq
       .sortBy(_._1)
 
+  test("the shared session carries SparkEntry.localSession's policy") {
+    val LocalN = """local\[(\d+)\]""".r
+    val LocalN(cores) = spark.sparkContext.master
+    val conf = spark.conf
+    assert(conf.get("spark.sql.shuffle.partitions") === cores)
+    assert(conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(conf.get("spark.sql.adaptive.enabled") === "true")
+    assert(conf.get("spark.ui.enabled") === "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+  }
+
   test("nanos and micros generations read to identical timestamps") {
     val ns = readTs(s"$fixturesDir/events_ns")
     val us = readTs(s"$fixturesDir/events_us")

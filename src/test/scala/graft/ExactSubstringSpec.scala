@@ -91,41 +91,6 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
       .toSet
   }
 
-  test("adaptive semi-prune tiers (broadcast / bloom / sort-merge) are " +
-      "result-identical — r18, guide §3.2") {
-    // real testdata so every tier sees a non-trivial census; the
-    // default run takes the broadcast tier (tiny dup set), the prop
-    // overrides force the bloom tier (broadcast bound 0) and the
-    // plain sort-merge tier (both bounds 0)
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def run(): (Seq[String], Seq[String]) = {
-      val a = DedupOps.exactSubstringSpans(
-        docs, "doc_id", graft.functions.TextOps.cleanTokens(col("text")),
-        window = 20).collect().map(_.toString).sorted.toSeq
-      val b = DedupOps.exactSubstringWindowSweep(
-        docs, "doc_id", graft.functions.TextOps.cleanTokens(col("text")),
-        Seq(10, 20)).collect().map(_.toString).sorted.toSeq
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      (a, b)
-    }
-    val viaGatedPlain = run() // default: below the engagement gate
-    def forced(props: (String, String)*): (Seq[String], Seq[String]) = {
-      // adaptiveMinBytes=0 engages the tiers at any input size
-      (("graft.span.adaptiveMinBytes" -> "0") +: props)
-        .foreach { case (k, v) => sys.props(k) = v }
-      try run() finally (("graft.span.adaptiveMinBytes" -> "") +: props)
-        .foreach { case (k, _) => sys.props.remove(k) }
-    }
-    assert(forced() === viaGatedPlain, "broadcast tier diverged")
-    assert(forced("graft.span.broadcastKeys" -> "0") === viaGatedPlain,
-      "bloom tier diverged")
-    assert(forced("graft.span.broadcastKeys" -> "0",
-      "graft.span.bloomKeys" -> "0") === viaGatedPlain,
-      "sort-merge tier diverged")
-  }
-
   test("vs-base spans: base grams censused, delta-only repeats ignored") {
     val shared = words("s", 8)
     val selfRep = words("r", 6)
