@@ -40,12 +40,14 @@ object Bench {
     trivialSumSec() // untimed codegen warm-up for the canary itself
     val canaryPrePage = BenchCanary.pageTouchGibps()
     val canaryPreTrivial = trivialSumSec()
-    // One-time model artifact load + 262k-dim broadcast, warmed here so
-    // it is not charged to whichever query first touches the scorer.
-    SparkEntry.scorer(spark)
     // optional comma-separated subset for isolated timing runs
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
+    // One-time model artifact load + 262k-dim broadcast, warmed here so
+    // it is not charged to whichever query first touches the scorer.
+    // m5_sentiment is the only query that reads it, so a subset without
+    // it neither pays the load nor needs the model artifact mounted.
+    if (selected.contains("m5_sentiment")) SparkEntry.scorer(spark)
     // WARM-UP PASS (round 10): run every selected query once against a
     // tiny SF dir BEFORE the timed region. Whole-stage-codegen classes
     // and JIT-compiled hot methods are JVM-global, so this moves each

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.plans.{CharEntropyTermSum, CleanTokens, EditDistanceBounded, HashedTrigrams32, Md5Hash32Array, MinHashSignature, NgramGenerate, QuantileSketchAgg, RepetitionStats, RollingHashMin, SimHash60, SketchBands, SortedIntersectCount, TopKRows, VectorDotProduct, ZValue}
+import graft.plans.{CharEntropyTermSum, CleanTokens, EditDistanceBounded, HashedTrigrams32, Md5Hash32Array, MinHashSignature, NgramGenerate, QuantileSketchAgg, RepetitionStats, RollingHashMin, SimHash60, SortedIntersectCount, TopKRows, VectorDotProduct, ZValue}
 
 /** Session-extension registration for the engine's custom Catalyst
   * machinery, so SQL users get the functions too:
@@ -24,7 +24,6 @@ import graft.plans.{CharEntropyTermSum, CleanTokens, EditDistanceBounded, Hashed
   *   simhash60(hs)            60-bit SimHash over hashed tokens
   *   hashed_trigrams32(s)     distinct hashed char-trigrams of a string
   *   rolling_hash_min(s)      min 8-char-window polynomial hash
-  *   sketch_bands(emb)        sign-LSH band-key strings of a vector
   *   edit_distance_bounded(a, b, k)  Myers bit-parallel levenshtein <= k
   *   sorted_intersect_count(a, b)    merge-scan |a ∩ b| of sorted arrays
   *   ngram_generate(toks, n)  generator: streamed space-joined n-grams
@@ -36,6 +35,9 @@ import graft.plans.{CharEntropyTermSum, CleanTokens, EditDistanceBounded, Hashed
   *                            (regex-delete + ws-split + empty-drop;
   *                            apply lower(trim(s)) first for the full
   *                            reference chain)
+  *   repetition_stats(toks)   Gopher repetition numerators of a token
+  *                            array in one pass (tok_chars, c2..c4,
+  *                            d5..d10)
   *   char_entropy_term_sum(s) DECIMAL(38,6) Σ c·round(ln(c/n),6) over
   *                            a string's distinct characters (the
   *                            t11 unigram-entropy numerator)
@@ -164,7 +166,6 @@ object GraftExtensions {
     unary("simhash60", classOf[SimHash60], SimHash60(_: Expression)),
     unary("hashed_trigrams32", classOf[HashedTrigrams32], HashedTrigrams32(_: Expression)),
     unary("rolling_hash_min", classOf[RollingHashMin], RollingHashMin(_: Expression)),
-    unary("sketch_bands", classOf[SketchBands], SketchBands(_: Expression)),
     unary("clean_tokens", classOf[CleanTokens], CleanTokens(_: Expression)),
     unary("repetition_stats", classOf[RepetitionStats],
       RepetitionStats(_: Expression)),

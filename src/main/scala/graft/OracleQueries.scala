@@ -269,6 +269,33 @@ GROUP BY sym"""
        |  ON a.cell = b.cell AND a.vec_id < b.vec_id
        |  WHERE ${OracleSql.cos6("a.embedding", "b.embedding")} >= 0.45)""".stripMargin
 
+  /** The s2 auto-geometry LSH candidate chain (lshTopKAuto): eb from
+    * the shared integer rule over the RAW corpus count(*) (before the
+    * zero-norm guards, matching the Spark side), max-width keys
+    * truncated to the 2-char band tag + eb bits, zero-norm guards on
+    * both sides, exact cosine on the distinct band collisions of the
+    * vec_id < 10 queries. Ends in `scored (q_id, vec_id, sim)`;
+    * shared verbatim by s2 and the q54 recall eval. */
+  private lazy val lshAutoScoredCte: String =
+    s"""geo AS (SELECT
+       |    ${OracleSql.autoBitsSql("SELECT count(*) FROM embeddings")} AS eb),
+       |qbf AS (SELECT vec_id AS q_id, embedding AS q_emb,
+       |  unnest(${OracleSql.sketchBandKeyAutoList("embedding")}) AS k
+       |  FROM embeddings
+       |  WHERE vec_id < 10 AND ${OracleSql.dot("embedding", "embedding")} > 0),
+       |cbf AS (SELECT vec_id, embedding,
+       |  unnest(${OracleSql.sketchBandKeyAutoList("embedding")}) AS k
+       |  FROM embeddings
+       |  WHERE ${OracleSql.dot("embedding", "embedding")} > 0),
+       |qb AS (SELECT q_id, q_emb,
+       |  substr(k, 1, 2 + (SELECT eb FROM geo)) AS bkey FROM qbf),
+       |cb AS (SELECT vec_id, embedding,
+       |  substr(k, 1, 2 + (SELECT eb FROM geo)) AS bkey FROM cbf),
+       |cand AS (SELECT DISTINCT q_id, q_emb, cb.vec_id, cb.embedding
+       |  FROM cb JOIN qb ON cb.bkey = qb.bkey AND cb.vec_id != qb.q_id),
+       |scored AS (SELECT q_id, vec_id,
+       |  ${OracleSql.cos6("q_emb", "embedding")} AS sim FROM cand)""".stripMargin
+
   /** The d7 connected-components labeling chain (banded candidate
     * pairs → symmetrized edges → recursive reachability → component
     * = min reachable id), shared verbatim by d7 and the d20
@@ -923,28 +950,9 @@ GROUP BY sym"""
          |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rn
          |  FROM scored)
          |WHERE rn <= 5""".stripMargin,
-    // s2: auto geometry since round 16 — eb from the CORPUS count
-    // (raw, before the zero-norm guards), max-width keys truncated
-    // to the 2-char band tag + eb bits; guards on both sides
+    // s2: auto geometry since round 16 (lshAutoScoredCte)
     "s2_ann_lsh" ->
-      s"""WITH geo AS (SELECT
-         |    ${OracleSql.autoBitsSql("SELECT count(*) FROM embeddings")} AS eb),
-         |qbf AS (SELECT vec_id AS q_id, embedding AS q_emb,
-         |  unnest(${OracleSql.sketchBandKeyAutoList("embedding")}) AS k
-         |  FROM embeddings
-         |  WHERE vec_id < 10 AND ${OracleSql.dot("embedding", "embedding")} > 0),
-         |cbf AS (SELECT vec_id, embedding,
-         |  unnest(${OracleSql.sketchBandKeyAutoList("embedding")}) AS k
-         |  FROM embeddings
-         |  WHERE ${OracleSql.dot("embedding", "embedding")} > 0),
-         |qb AS (SELECT q_id, q_emb,
-         |  substr(k, 1, 2 + (SELECT eb FROM geo)) AS bkey FROM qbf),
-         |cb AS (SELECT vec_id, embedding,
-         |  substr(k, 1, 2 + (SELECT eb FROM geo)) AS bkey FROM cbf),
-         |cand AS (SELECT DISTINCT q_id, q_emb, cb.vec_id, cb.embedding
-         |  FROM cb JOIN qb ON cb.bkey = qb.bkey AND cb.vec_id != qb.q_id),
-         |scored AS (SELECT q_id, vec_id,
-         |  ${OracleSql.cos6("q_emb", "embedding")} AS sim FROM cand)
+      s"""WITH $lshAutoScoredCte
          |SELECT q_id, vec_id, sim, rn FROM (
          |  SELECT q_id, vec_id, sim,
          |    row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rn
@@ -1150,6 +1158,8 @@ GROUP BY sym"""
          |  (1000000 * coalesce(CAST(h.c AS BIGINT), 0)) // 5 AS recall_mu
          |FROM q CROSS JOIN budgets b
          |LEFT JOIN h ON h.probe_budget = b.probe_budget AND h.q_id = q.q_id""".stripMargin,
+    // q54: recall@5 of s2's auto-geometry LSH (lshAutoScoredCte, top
+    // 5 instead of 3) against the unguarded brute-force top 5
     "q54_ann_recall" ->
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
          |  FROM embeddings WHERE vec_id < 10),
@@ -1159,18 +1169,10 @@ GROUP BY sym"""
          |ex AS (SELECT q_id, vec_id FROM (
          |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
          |    ORDER BY sim DESC, vec_id) AS rn FROM exs) WHERE rn <= 5),
-         |qb AS (SELECT q_id, q_emb,
-         |  unnest(${OracleSql.sketchBandKeyList("q_emb")}) AS bkey FROM q),
-         |cb AS (SELECT vec_id, embedding,
-         |  unnest(${OracleSql.sketchBandKeyList("embedding")}) AS bkey
-         |  FROM embeddings),
-         |cand AS (SELECT DISTINCT q_id, q_emb, cb.vec_id, cb.embedding
-         |  FROM cb JOIN qb ON cb.bkey = qb.bkey AND cb.vec_id != qb.q_id),
-         |aps AS (SELECT q_id, vec_id,
-         |  ${OracleSql.cos6("q_emb", "embedding")} AS sim FROM cand),
+         |$lshAutoScoredCte,
          |ap AS (SELECT q_id, vec_id FROM (
          |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY sim DESC, vec_id) AS rn FROM aps) WHERE rn <= 5),
+         |    ORDER BY sim DESC, vec_id) AS rn FROM scored) WHERE rn <= 5),
          |hits AS (SELECT ap.q_id, count(*) AS c
          |  FROM ap JOIN ex ON ap.q_id = ex.q_id AND ap.vec_id = ex.vec_id
          |  GROUP BY ap.q_id)

@@ -84,19 +84,6 @@ object OracleSql {
   private def planeLit(p: Array[Double]): String =
     p.map(lit3).mkString("[", ", ", "]")
 
-  /** Sign-LSH band key b for an embedding list column. */
-  def sketchBandKey(embCol: String, b: Int): String = {
-    val bits = (0 until PlaneBitsPerBand).map { j =>
-      val plane = planeLit(hyperplanes(b * PlaneBitsPerBand + j))
-      s"CASE WHEN ${dot(embCol, plane)} > 0 THEN '1' ELSE '0' END"
-    }
-    s"('$b:' || ${bits.mkString(" || ")})"
-  }
-
-  def sketchBandKeyList(embCol: String): String =
-    (0 until PlaneBandsCount).map(sketchBandKey(embCol, _))
-      .mkString("[", ", ", "]")
-
   /** AUTO-geometry sign-LSH (round 15): the data-adaptive bits rule,
     * as a scalar SQL expression over a row-count expression — the
     * EXACT integer rule [[graft.operators.DetParams.autoBitsPerBand]]

@@ -15,9 +15,9 @@ object TypedPipeline {
   /** A document to score. */
   final case class Doc(doc_id: Long, text: String)
 
-  /** Scoring result: tokens after cleaning, binary prediction
-    * (0.0 positive / 1.0 negative — StringIndexer dictionary), and
-    * the decoded training label. */
+  /** Scoring result: tokens after cleaning, binary prediction (the
+    * StringIndexer index), and the training label the model's
+    * dictionary decodes it to. */
   final case class ScoredDoc(
       doc_id: Long,
       cleaned_data: Seq[String],
@@ -28,10 +28,8 @@ object TypedPipeline {
     * same narrow, shuffle-free plan `scoreText` builds. */
   def score(docs: Dataset[Doc], scorer: SentimentScorer): Dataset[ScoredDoc] = {
     val scored = scorer.scoreText(docs.toDF(), "text")
-    val labeled = scored.withColumn("label",
-      when(col("prediction") === 0.0, "4").otherwise("0"))
-    labeled.select(col("doc_id"), col("cleaned_data"),
-        col("prediction"), col("label"))
+    scored.select(col("doc_id"), col("cleaned_data"),
+        col("prediction"), scorer.labelOf(col("prediction")).as("label"))
       .as(Encoders.product[ScoredDoc])
   }
 

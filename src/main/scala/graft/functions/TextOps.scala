@@ -72,10 +72,6 @@ object TextOps {
   /** Comma scrub (producer.py:40 `text.replace(',', '')`). */
   def scrubCommas(c: Column): Column = regexp_replace(c, ",", "")
 
-  /** Whether the stop set contains a (lowercased) word — driver-side. */
-  def isStopWord(w: String): Boolean =
-    stopWordsLower.contains(w.toLowerCase(java.util.Locale.UK))
-
   // ---- token-window chunking (t15/t16/d15 + chunkDedupStream) ------
   // ONE spelling shared by every batch query and the streaming twin
   // (the d14/d4 lesson: parity guaranteed by copy-paste is parity

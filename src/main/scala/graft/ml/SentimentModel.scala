@@ -178,9 +178,6 @@ final case class SentimentModel(
     if (margin(words) > t) 1.0 else 0.0
   }
 
-  def probabilityOf(words: Iterable[String]): Double =
-    1.0 / (1.0 + math.exp(-margin(words)))
-
   /** Decode a prediction index to the original training label
     * (StringIndexer dictionary; 0.0→"4" positive, 1.0→"0" negative). */
   def decodeLabel(prediction: Double): String = labels(prediction.toInt)
@@ -234,6 +231,13 @@ final class SentimentScorer(bc: Broadcast[SentimentModel]) extends Serializable 
     val stopSet = bc.value.stopWords.map(_.toLowerCase).distinct.toSeq.sorted
     filter(tokens, t => !lower(t).isInCollection(stopSet))
   }
+
+  /** prediction → original training label through the broadcast
+    * model's StringIndexer dictionary — the column form of
+    * [[SentimentModel.decodeLabel]] (`labels(i)` for prediction i;
+    * null prediction → null label). */
+  def labelOf(prediction: Column): Column =
+    typedLit(bc.value.labels.toSeq).getItem(prediction.cast("int"))
 
   /** tokens (pre-stop-word-removal) → prediction. */
   def predictFromTokens(tokens: Column): Column =

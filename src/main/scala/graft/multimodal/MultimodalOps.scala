@@ -179,12 +179,6 @@ object MultimodalOps {
       .toDF("media_id", "frame_ts_ms")
   }
 
-  /** DataFrame-level wrapper matching [[MediaSchema]] for SQL users. */
-  def imageFeaturesDF(spark: SparkSession, media: DataFrame, outW: Int, outH: Int): DataFrame = {
-    import spark.implicits._
-    imageFeatures(media.as[MediaRow], outW, outH).toDF()
-  }
-
   final case class ImageHash(
       media_id: Long, ok: Boolean, error: String, phash: Long)
 
@@ -246,8 +240,8 @@ object MultimodalOps {
     * WWW'07 §3). Band-keyed self-join on the concatenated subset
     * bits, exact `bit_count(xor)` verify.
     *
-    * `blocks = maxDist + 1` (the default) degenerates to the classic
-    * d+1-band split: C(d+1, 1) = d+1 keys of 64/(d+1) bits each.
+    * `blocks = maxDist + 1` degenerates to the classic d+1-band
+    * split: C(d+1, 1) = d+1 keys of 64/(d+1) bits each.
     * That is the right shape for bounded tables, but its candidate
     * volume on n uniform signatures is ≈ (d+1)·n²/2^(64/(d+1)) —
     * for d = 6 that is n²/81, a quadratic term with a small constant
@@ -255,16 +249,57 @@ object MultimodalOps {
     * `blocks` trades key fan-out for collision bits: each row emits
     * C(blocks, d) keys, but every key carries 64·(blocks−d)/blocks
     * bits, so e.g. d = 6, blocks = 8 emits 28 keys/row (4× the
-    * default's 7) while cutting uniform collision mass by
+    * d+1 split's 7) while cutting uniform collision mass by
     * 2^16/(28/7·2^9.14) ≈ 29× — the knob a 10⁸⁺-signature corpus
     * turns. Completeness is invariant in `blocks` (HammingBlocksSpec
     * pins pair-set equality across settings); only the candidate
     * volume moves. Output: (id_a, id_b, dist) with id_a < id_b, one
-    * row per pair. */
+    * row per pair.
+    *
+    * With no `blocks` the operator picks B ([[autoHammingBlocks]])
+    * from one count of the narrow (id, hash) projection, which it
+    * persists first (MEMORY_AND_DISK) so a decode-derived caller pays
+    * the decode once; the choice goes to [[graft.PhaseLog]]
+    * (`hamming auto-blocks`). The cache is left to Spark's LRU —
+    * release it through [[hammingNearDupPairsReleasable]]. An
+    * explicit `blocks` pins the geometry: no persist, no count. */
   def hammingNearDupPairs(hashes: DataFrame, idCol: String, hashCol: String,
                           maxDist: Int, blocks: Int = -1): DataFrame =
-    bandedHammingJoin(hashes, idCol, None, hashCol, maxDist, blocks)
-      .select(col("id_a"), col("id_b"), col("dist"))
+    hammingNearDupPairsReleasable(hashes, idCol, hashCol, maxDist, blocks)._1
+
+  /** [[hammingNearDupPairs]] plus a release hook for the persisted
+    * projection (a no-op for an explicit `blocks`); call it after the
+    * downstream action. */
+  def hammingNearDupPairsReleasable(hashes: DataFrame, idCol: String,
+                                    hashCol: String, maxDist: Int,
+                                    blocks: Int = -1)
+      : (DataFrame, () => Unit) = {
+    val (sig, b, release) =
+      signatureGeometry(hashes, idCol, hashCol, maxDist, blocks)
+    (bandedHammingJoin(sig, idCol, None, hashCol, maxDist, b)
+      .select(col("id_a"), col("id_b"), col("dist")), release)
+  }
+
+  /** The ok-filtered signature table, its block count, and the hook
+    * releasing what choosing that count persisted. */
+  private def signatureGeometry(hashes: DataFrame, idCol: String,
+                                hashCol: String, maxDist: Int, blocks: Int)
+      : (DataFrame, Int, () => Unit) = {
+    // failed decodes carry the sentinel hash 0L ([[imagePHash]]) — an
+    // unfiltered hash table would report every failed image as an
+    // exact dup of every other failure, so drop non-ok rows when the
+    // marker column is present (r11 advice)
+    val ok =
+      if (hashes.columns.contains("ok")) hashes.filter(col("ok")) else hashes
+    if (blocks != -1) (ok, blocks, () => ())
+    else {
+      val sig = ok.select(col(idCol), col(hashCol))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val b = autoHammingBlocks(sig.count(), maxDist)
+      graft.PhaseLog.add("hamming auto-blocks", b.toDouble)
+      (sig, b, () => { sig.unpersist(blocking = true); () })
+    }
+  }
 
   /** The banding engine behind [[hammingNearDupPairs]] and its
     * frame-ALIGNED variant: when `alignCol` is set, rows join only
@@ -274,20 +309,13 @@ object MultimodalOps {
     * way. */
   private def bandedHammingJoin(hashes: DataFrame, idCol: String,
                                 alignCol: Option[String], hashCol: String,
-                                maxDist: Int, blocks: Int): DataFrame = {
+                                maxDist: Int, nBlocks: Int): DataFrame = {
     require(maxDist >= 0 && maxDist < 64, "maxDist in [0, 63]")
-    val nBlocks = if (blocks == -1) maxDist + 1 else blocks
     require(nBlocks > maxDist && nBlocks <= 64,
       s"blocks must be in (maxDist, 64], got $nBlocks")
     require(nBlocks <= maxDist + 4,
       s"blocks = $nBlocks emits C($nBlocks,$maxDist) keys/row — cap " +
         "fan-out at C(d+4, d) until a corpus actually needs more")
-    // failed decodes carry the sentinel hash 0L ([[imagePHash]]) — an
-    // unfiltered hash table would report every failed image as an
-    // exact dup of every other failure, so drop non-ok rows here when
-    // the marker column is present (r11 advice)
-    val src =
-      if (hashes.columns.contains("ok")) hashes.filter(col("ok")) else hashes
     // one key per (nBlocks - maxDist)-subset of bit blocks, emitted by
     // the custom Generator: the declarative explode(array(struct…))
     // spelling materializes C(blocks,d) struct columns and its
@@ -295,7 +323,7 @@ object MultimodalOps {
     // (measured Janino fallback, r13 hm probe) — the Generator loops
     // the subsets per row with zero array allocation instead
     val alignSel = alignCol.map(a => col(a).cast("long").as("al")).toSeq
-    val keyed = src.select(
+    val keyed = hashes.select(
       Seq(col(idCol).as("id"), col(hashCol).as("h")) ++ alignSel ++
         Seq(graft.plans.HammingBandKeys
           .of(col(hashCol), maxDist, nBlocks)): _*)
@@ -371,8 +399,8 @@ object MultimodalOps {
     * 100 TB shape: frame table is |videos|·k rows of 20 bytes; all
     * joins keyed equi-joins; nothing all-pairs, nothing driver-side. */
   def videoFrameNearDupPairs(frameHashes: DataFrame, maxDist: Int,
-                             minMatchNum: Int = 3, minMatchDen: Int = 4,
-                             blocks: Int = -1): DataFrame = {
+                             minMatchNum: Int = 3,
+                             minMatchDen: Int = 4): DataFrame = {
     require(minMatchNum > 0 && minMatchDen >= minMatchNum,
       "match fraction must be in (0, 1]")
     val ok = (if (frameHashes.columns.contains("ok"))
@@ -381,7 +409,7 @@ object MultimodalOps {
     val nFrames = ok.groupBy(col("media_id"))
       .agg(count(lit(1)).as("nf"))
     val slotPairs = bandedHammingJoin(ok, "media_id", Some("frame_idx"),
-      "phash", maxDist, blocks)
+      "phash", maxDist, maxDist + 1)
     slotPairs.groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("matched"))
       .join(nFrames.select(col("media_id").as("id_a"), col("nf").as("n_a")),
@@ -397,8 +425,9 @@ object MultimodalOps {
   /** Pick the block-combination geometry `B` for
     * [[hammingNearDupPairs]] from the signature cardinality `n` —
     * the round-12 scale finding made self-tuning, re-calibrated
-    * against head-to-head measurement in round 14. The default
-    * `B = d+1` split dies at ~10⁶ uniform 64-bit signatures (its
+    * against head-to-head measurement in round 14; the operators'
+    * default geometry. The classic `B = d+1` split dies at ~10⁶
+    * uniform 64-bit signatures (its
     * uniform collision mass is C(d+1,d)·n²/2^(64/(d+1)) ≈ n²/161 for
     * d = 6 — measured ENOSPC at 1M in ScaleProbe hm mode), while
     * wider blocks carry 3M+ cheaply.
@@ -445,80 +474,34 @@ object MultimodalOps {
     (maxDist + 1 to cap).minBy(totalRows)
   }
 
-  /** [[hammingNearDupPairs]] with the band geometry CHOSEN BY THE
-    * OPERATOR from the observed signature cardinality (the verdict's
-    * "auto-select the hamming band geometry" item — removes the one
-    * silent at-scale cliff, a 100 TB user no longer needs to know
-    * the knob exists). Runs one eager `count()` over the narrow
-    * (id, hash) projection at construction time — the count is
-    * deliberate: geometry is a plan-shape decision and must precede
-    * planning, exactly like AQE's own runtime re-plan consulting
-    * observed statistics. The operator PERSISTS that narrow
-    * projection itself (MEMORY_AND_DISK) before counting, so a
-    * decode-derived caller pays the decode exactly once — the count
-    * materializes the 16-bytes-per-row cache and pair generation
-    * reads from it (pinned by HammingBlocksSpec's single-decode
-    * test). The plain face leaves the cache to Spark's LRU (the
-    * downstream pair plan is lazy, so there is no safe eager release
-    * point inside the operator; at ~16 B/signature even 10⁹
-    * signatures cache in 16 GB cluster-wide) — callers looping many
-    * queries in one session should use
-    * [[hammingNearDupPairsAutoReleasable]] and release after their
-    * action.
-    * Completeness is invariant in the choice (HammingBlocksSpec);
-    * only candidate volume moves, so results are hash-identical to
-    * any manual geometry. Records the choice via [[graft.PhaseLog]]
-    * (`hamming auto-blocks`, value = chosen B) for bench-artifact
-    * attribution. */
-  def hammingNearDupPairsAuto(hashes: DataFrame, idCol: String,
-                              hashCol: String, maxDist: Int): DataFrame =
-    hammingNearDupPairsAutoReleasable(hashes, idCol, hashCol, maxDist)._1
+  /** Signature-dedup END-TO-END — the d10 keeper-policy shape on the
+    * media side, composed from the library pieces: 64-bit signature
+    * table (image pHash / audio fingerprint) →
+    * [[hammingNearDupPairs]] (banded, ok=false dropped, geometry
+    * operator-chosen unless `blocks` pins it) →
+    * [[graft.operators.GraphOps.connectedComponents]] closure
+    * (near-duplication is transitive in practice) → keep the min-id
+    * representative per cluster, singletons self-kept.
+    *
+    * Returns (media_id, cluster, csize, keep). 100 TB shape: the
+    * banded pair join never goes all-pairs, the closure is the
+    * large-star/small-star fixpoint (lineage-truncated per round),
+    * and the label/keeper readout is one keyed agg + one join —
+    * identical scaling to the text-side d7/d10 family. */
+  def hammingDedupLabels(hashes: DataFrame, idCol: String, hashCol: String,
+                         maxDist: Int, blocks: Int = -1): DataFrame =
+    hammingDedupLabelsReleasable(hashes, idCol, hashCol, maxDist, blocks)._1
 
-  /** [[hammingNearDupPairsAuto]] plus a release hook for the persisted
-    * (id, hash) projection — the
-    * [[graft.operators.DedupOps.nearDuplicatePairsReleasable]]
-    * discipline (r14 advice): the Bench/Verify harnesses clearCache
-    * between queries, but a long-running caller looping auto-geometry
-    * calls would otherwise accumulate cached projections until LRU
-    * pressure. Release after the downstream action. */
-  def hammingNearDupPairsAutoReleasable(hashes: DataFrame, idCol: String,
-                                        hashCol: String, maxDist: Int)
+  /** [[hammingDedupLabels]] plus a release hook covering the
+    * persisted projection and the closure's fixpoint leaf. One
+    * signature table feeds both the pairs and the id universe. */
+  def hammingDedupLabelsReleasable(hashes: DataFrame, idCol: String,
+                                   hashCol: String, maxDist: Int,
+                                   blocks: Int = -1)
       : (DataFrame, () => Unit) = {
-    val src =
-      if (hashes.columns.contains("ok")) hashes.filter(col("ok")) else hashes
-    val sig = src.select(col(idCol), col(hashCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = sig.count()
-    val b = autoHammingBlocks(n, maxDist)
-    graft.PhaseLog.add("hamming auto-blocks", b.toDouble)
-    (hammingNearDupPairs(sig, idCol, hashCol, maxDist, blocks = b),
-      () => { sig.unpersist(blocking = true); () })
-  }
-
-  /** [[hammingDedupLabels]] end-to-end with the [[autoHammingBlocks]]
-    * geometry — signature table → auto-banded pairs → CC closure →
-    * min-id keeper. Persists the narrow (id, hash) projection ONCE
-    * and feeds both the pair generation and the id-universe scan from
-    * it, so a decode-derived caller pays the decode a single time
-    * across the whole pipeline. */
-  def hammingDedupLabelsAuto(hashes: DataFrame, idCol: String,
-                             hashCol: String, maxDist: Int): DataFrame =
-    hammingDedupLabelsAutoReleasable(hashes, idCol, hashCol, maxDist)._1
-
-  /** [[hammingDedupLabelsAuto]] plus a release hook covering BOTH its
-    * persisted (id, hash) projection and the closure's fixpoint leaf
-    * (composed like
-    * [[graft.operators.DedupOps.dedupPipelineReleasable]]). */
-  def hammingDedupLabelsAutoReleasable(hashes: DataFrame, idCol: String,
-                                       hashCol: String, maxDist: Int)
-      : (DataFrame, () => Unit) = {
-    val ok =
-      if (hashes.columns.contains("ok")) hashes.filter(col("ok")) else hashes
-    val sig = ok.select(col(idCol), col(hashCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = autoHammingBlocks(sig.count(), maxDist)
-    graft.PhaseLog.add("hamming auto-blocks", b.toDouble)
-    val pairs = hammingNearDupPairs(sig, idCol, hashCol, maxDist, blocks = b)
+    val (sig, b, sigRelease) =
+      signatureGeometry(hashes, idCol, hashCol, maxDist, blocks)
+    val pairs = bandedHammingJoin(sig, idCol, None, hashCol, maxDist, b)
     val (lab, ccRelease) = graft.operators.GraphOps
       .connectedComponentsReleasable(pairs, "id_a", "id_b",
         // banded pairs are distinct with id_a < id_b — skip the
@@ -530,46 +513,9 @@ object MultimodalOps {
         (col("cluster") === col(idCol)).as("keep"))
     (out, () => {
       ccRelease()
-      sig.unpersist(blocking = true)
-      ()
+      sigRelease()
     })
   }
-
-  /** [[hammingNearDupPairs]] under its original image-family name. */
-  def imageNearDupPairs(hashes: DataFrame, idCol: String, hashCol: String,
-                        maxDist: Int): DataFrame =
-    hammingNearDupPairs(hashes, idCol, hashCol, maxDist)
-
-  /** Signature-dedup END-TO-END — the d10 keeper-policy shape on the
-    * media side, composed from the library pieces: 64-bit signature
-    * table (image pHash / audio fingerprint) →
-    * [[hammingNearDupPairs]] (banded, ok=false dropped) →
-    * [[graft.operators.GraphOps.connectedComponents]] closure
-    * (near-duplication is transitive in practice) → keep the min-id
-    * representative per cluster, singletons self-kept.
-    *
-    * Returns (media_id, cluster, csize, keep). 100 TB shape: the
-    * banded pair join never goes all-pairs, the closure is the
-    * large-star/small-star fixpoint (lineage-truncated per round),
-    * and the label/keeper readout is one keyed agg + one join —
-    * identical scaling to the text-side d7/d10 family. */
-  def hammingDedupLabels(hashes: DataFrame, idCol: String, hashCol: String,
-                         maxDist: Int, blocks: Int = -1): DataFrame = {
-    val ok =
-      if (hashes.columns.contains("ok")) hashes.filter(col("ok")) else hashes
-    val pairs = hammingNearDupPairs(ok, idCol, hashCol, maxDist, blocks)
-    val lab = graft.operators.GraphOps
-      .connectedComponents(pairs, "id_a", "id_b", assumeCanonical = true)
-    graft.operators.DedupOps
-      .fullClusterLabels(ok.select(col(idCol)), idCol, lab)
-      .select(col(idCol), col("cluster"), col("csize"),
-        (col("cluster") === col(idCol)).as("keep"))
-  }
-
-  /** [[hammingDedupLabels]] under its original image-family name. */
-  def imageDedupLabels(hashes: DataFrame, idCol: String, hashCol: String,
-                       maxDist: Int): DataFrame =
-    hammingDedupLabels(hashes, idCol, hashCol, maxDist)
 }
 
 /** The codec seam. IMAGE decode is REAL (PNG/JPEG/GIF/BMP via

@@ -43,9 +43,28 @@ object DetParams {
     (a, b)
   }
 
-  /** Random hyperplanes for sign-LSH over 64-dim embeddings:
-    * values in [-1, 1] with 3 decimals (exact in double, so the SQL
-    * literal "0.123" parses to the identical double in Java and C++). */
+  /** Sign-LSH geometry over 64-dim embeddings: [[PlaneBandsCount]]
+    * bands whose width is DATA-ADAPTIVE (round 15 — the 100 TB path
+    * for the banded embedding joins). With a fixed 4-bit width a
+    * random pair collides in a given band with p = 2⁻⁴, so banded
+    * self/cross joins generate ≈ n²/2⁴ candidate rows per band —
+    * QUADRATIC in corpus size (measured at the 10× sf1 sweep: d5
+    * 52×, s8 135× their sf0.1 walls). Instead, bits-per-band grow
+    * with the corpus so expected band-bucket occupancy stays
+    * ≤ [[AutoBandOcc]]: candidates stay O(n · occ) — linear — at the
+    * standard LSH recall trade (longer bands admit fewer
+    * sub-identical pairs; exact duplicates collide at EVERY width
+    * because equal vectors share all signs).
+    *
+    * The rule is pure INTEGER arithmetic so Spark and the DuckDB
+    * oracle derive bit-identical geometry from the same count with
+    * no float/log2 edge cases: the smallest b in
+    * [[PlaneBitsPerBand]]..[[AutoMaxBitsPerBand]] with
+    * 2^b · AutoBandOcc ≥ n (max width when none suffices). 16-bit
+    * bands carry n ≈ 4.2M per join side; a 100 TB deployment raises
+    * [[AutoMaxBitsPerBand]] (the plane budget is the only bound) or
+    * moves to the IVF/PQ family, which bounds capacity by
+    * construction. */
   val EmbedDim: Int = 64
   val PlaneBandsCount: Int = 4
   // the DuckDB oracle's auto-band keys prefix each key with a
@@ -59,35 +78,8 @@ object DetParams {
     s"PlaneBandsCount = $PlaneBandsCount: oracle auto band keys " +
       "assume a 1-char band tag (<= 10 bands); widen the tag in " +
       "OracleSql.sketchBandKeyAutoFull before raising this")
+  /** Narrowest band width the auto rule picks. */
   val PlaneBitsPerBand: Int = 4
-  val NumPlanes: Int = PlaneBandsCount * PlaneBitsPerBand
-
-  val hyperplanes: Array[Array[Double]] = {
-    val it = stream(0x5eed0002L)
-    Array.fill(NumPlanes, EmbedDim)(((it.next().abs % 2001L) - 1000L) / 1000.0)
-  }
-
-  /** DATA-ADAPTIVE sign-LSH geometry (round 15 — the 100 TB path for
-    * the banded embedding joins). With the FIXED 4-bit bands above, a
-    * random pair collides in a given band with p = 2⁻⁴, so banded
-    * self/cross joins generate ≈ n²/2⁴ candidate rows per band —
-    * QUADRATIC in corpus size (measured at the 10× sf1 sweep: d5
-    * 52×, s8 135× their sf0.1 walls). The auto variants hold
-    * expected band-bucket occupancy at ≤ [[AutoBandOcc]] by growing
-    * bits-per-band with the corpus: candidates stay O(n · occ) —
-    * linear — at the standard LSH recall trade (longer bands admit
-    * fewer sub-identical pairs; exact duplicates collide at EVERY
-    * width because equal vectors share all signs).
-    *
-    * The rule is pure INTEGER arithmetic so Spark and the DuckDB
-    * oracle derive bit-identical geometry from the same count with
-    * no float/log2 edge cases: the smallest b in
-    * [[PlaneBitsPerBand]]..[[AutoMaxBitsPerBand]] with
-    * 2^b · AutoBandOcc ≥ n (max width when none suffices). 16-bit
-    * bands carry n ≈ 4.2M per join side; a 100 TB deployment raises
-    * [[AutoMaxBitsPerBand]] (the plane budget is the only bound) or
-    * moves to the IVF/PQ family, which bounds capacity by
-    * construction. */
   val AutoMaxBitsPerBand: Int = 16
   val AutoBandOcc: Int = 64
 
@@ -116,9 +108,9 @@ object DetParams {
     * `hyperplanesAuto(b * AutoMaxBitsPerBand + j)` — each band owns a
     * max-width run and a narrower key is a string PREFIX of the wider
     * one (the DuckDB oracle computes the max-width key and truncates;
-    * AutoLshSpec pins the prefix property). Seeded separately from
-    * [[hyperplanes]] so the fixed-geometry queries (d5/s2/s8) keep
-    * their published constants byte-for-byte. */
+    * AutoLshSpec pins the prefix property). Values in [-1, 1] with 3
+    * decimals (exact in double, so the SQL literal "0.123" parses to
+    * the identical double in Java and C++). */
   val hyperplanesAuto: Array[Array[Double]] = {
     val it = stream(0x5eed0003L)
     Array.fill(PlaneBandsCount * AutoMaxBitsPerBand, EmbedDim)(

@@ -46,35 +46,6 @@ object SimilarityOps {
   /** Cosine rounded to 6 dp — the cross-system comparison contract. */
   def cosine6(a: Column, b: Column): Column = round(cosine(a, b), 6)
 
-  /** Dot of an embedding column with a fixed hyperplane (literal). */
-  private def planeDot(emb: Column, plane: Array[Double]): Column =
-    aggregate(
-      zip_with(emb, typedLit(plane.toSeq), (x, p) => x.cast("double") * p),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Sign-LSH band keys as one array column — the codegen one-pass
-    * expression ([[graft.plans.SketchBands]]): all
-    * [[DetParams.NumPlanes]] plane dots accumulate in a single walk of
-    * the vector. Value-identical to [[sketchBandKeysHof]]; hot paths
-    * (d5 / s2) use this. */
-  def sketchBands(emb: Column): Column = graft.plans.SketchBands(emb)
-
-  /** Sign-LSH band keys, built-in HOF spelling ([[DetParams.NumPlanes]]
-    * interpreted `aggregate(zip_with(...))` passes per vector):
-    * [[DetParams.PlaneBandsCount]] keys, each a
-    * [[DetParams.PlaneBitsPerBand]]-char bit string from the signs of
-    * dots with fixed hyperplanes. Kept as the value-parity oracle for
-    * the codegen [[graft.plans.SketchBands]] — the DuckDB oracle SQL
-    * is written against this spelling. */
-  def sketchBandKeysHof(emb: Column): Seq[Column] =
-    (0 until PlaneBandsCount).map { b =>
-      val bits = (0 until PlaneBitsPerBand).map { j =>
-        when(planeDot(emb, hyperplanes(b * PlaneBitsPerBand + j)) > 0,
-          lit("1")).otherwise(lit("0"))
-      }
-      concat(lit(b.toString + ":") +: bits: _*)
-    }
-
   /** L2 norm of an embedding column (double). */
   def l2norm(emb: Column): Column = sqrt(dotD(emb, emb))
 
@@ -92,7 +63,7 @@ object SimilarityOps {
     *
     * 100 TB shape: the ONLY corpus-sized work is the pool stage
     * (here [[bruteForceTopK]] — broadcast queries, no corpus
-    * shuffle; swap in [[lshTopK]]/IVF for the ANN scale path since
+    * shuffle; swap in [[lshTopKAuto]]/IVF for the ANN scale path since
     * any (q_id, vec_id, sim) pool frame composes). Everything after
     * is bounded: poolK rows per anchor flow into one keyed
     * collect_list, and the O(poolK^2) pairwise cosines run inside
@@ -169,40 +140,23 @@ object SimilarityOps {
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** LSH-bucketed approximate top-k: candidates = vectors sharing at
-    * least one band key with the query, then exact cosine + top-k on
-    * the (bounded) candidate set. */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              embCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def banded(df: DataFrame, id: String, emb: String, nrm: String, key: String) =
-      df.withColumn(nrm, l2norm(col(emb)))
-        .withColumn(key, explode(sketchBands(col(emb))))
-    val qb = broadcast(banded(
-      queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb")),
-      "q_id", "q_emb", "q_nrm", "q_bkey"))
-    val cb = banded(corpus.select(col(idCol), col(embCol)),
-      idCol, embCol, "c_nrm", "bkey")
-    // score per band collision (codegen dot is cheap), THEN distinct on
-    // the small (q_id, id, sim) rows — deduplicating before scoring
-    // would shuffle full embedding arrays for a ~1.1x compute saving
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col(idCol))
-    cb.join(qb,
-        col("bkey") === col("q_bkey") && col(idCol) =!= col("q_id"))
-      .select(col("q_id"), col(idCol),
-        round(dotD(col("q_emb"), col(embCol)) /
-          (col("q_nrm") * col("c_nrm")), 6).as("sim"))
-      .distinct()
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
+  /** `df` plus its embedding norm `nrm`, zero-norm rows dropped (the
+    * s7 guard: 0/0 cosine is NULL in Spark but NaN in DuckDB), one row
+    * per [[graft.plans.SketchBandsAuto]] band key in `key`. */
+  private def bandKeys(df: DataFrame, emb: String, nrm: String,
+                       key: String, bits: Int): DataFrame =
+    df.withColumn(nrm, l2norm(col(emb)))
+      .filter(col(nrm) > 0.0)
+      .withColumn(key, explode(graft.plans.SketchBandsAuto(col(emb), bits)))
 
-  /** [[lshTopK]] with DATA-ADAPTIVE band width (round 16 — the
-    * headline s2 face): with FIXED 4-bit bands each query's bucket
-    * collects ≈ n/2⁴ corpus vectors per band, so the per-query
-    * candidate pool — and the exact-cosine rescore behind it — grows
-    * LINEARLY with the corpus, which defeats the point of an ANN
-    * index. Bits-per-band from ONE driver-side corpus count
+  /** LSH-bucketed approximate top-k with DATA-ADAPTIVE band width
+    * (round 16 — the headline s2 face): candidates = vectors sharing
+    * at least one band key with the query, then exact cosine + top-k
+    * on the (bounded) candidate set. With FIXED 4-bit bands each
+    * query's bucket collects ≈ n/2⁴ corpus vectors per band, so the
+    * per-query candidate pool — and the exact-cosine rescore behind
+    * it — grows LINEARLY with the corpus, which defeats the point of
+    * an ANN index. Bits-per-band from ONE driver-side corpus count
     * ([[DetParams.autoBitsPerBand]], before the zero-norm guard so
     * the DuckDB oracle's count(*) derives identical geometry) holds
     * expected bucket occupancy — and so per-query probe cost — at
@@ -215,15 +169,11 @@ object SimilarityOps {
                   occ: Int = DetParams.AutoBandOcc): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bits = DetParams.autoBitsPerBand(corpus.count(), occ)
-    def banded(df: DataFrame, id: String, emb: String, nrm: String, key: String) =
-      df.withColumn(nrm, l2norm(col(emb)))
-        .filter(col(nrm) > 0.0)
-        .withColumn(key, explode(graft.plans.SketchBandsAuto(col(emb), bits)))
-    val qb = broadcast(banded(
+    val qb = broadcast(bandKeys(
       queries.select(col(idCol).as("q_id"), col(embCol).as("q_emb")),
-      "q_id", "q_emb", "q_nrm", "q_bkey"))
-    val cb = banded(corpus.select(col(idCol), col(embCol)),
-      idCol, embCol, "c_nrm", "bkey")
+      "q_emb", "q_nrm", "q_bkey", bits))
+    val cb = bandKeys(corpus.select(col(idCol), col(embCol)),
+      embCol, "c_nrm", "bkey", bits)
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col(idCol))
     cb.join(qb,
@@ -235,70 +185,40 @@ object SimilarityOps {
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** Embedding JOIN between two LARGE tables via sign-LSH banding —
-    * the no-broadcast sibling of [[lshTopK]]. When the query side is
-    * itself a corpus (cross-corpus near-dup between a new crawl and a
-    * training set, retrieval candidate generation), a broadcast build
-    * is impossible; here BOTH sides explode to band keys and meet in
-    * a band-keyed shuffle-hash join — the posting-list shape: a pair
-    * is generated only where a band collides, never O(|L|·|R|) — with
-    * exact cosine on collisions only, and the per-left-row top-k
-    * riding the bounded-state [[graft.plans.TopKRows]] aggregate (no
-    * window sort; O(k) state per (partition, left row), so one hot
+  /** Embedding JOIN between two LARGE tables via sign-LSH banding
+    * (cross-corpus near-dup between a new crawl and a training set,
+    * retrieval candidate generation), where a broadcast build is
+    * impossible: BOTH sides explode to band keys and meet in a
+    * band-keyed join — the posting-list shape, a pair only where a
+    * band collides, never O(|L|·|R|) — with exact cosine on
+    * collisions only and the per-left-row top-k on the bounded-state
+    * [[graft.plans.TopKRows]] aggregate (no window sort, so one hot
     * left row cannot form a skewed sort partition). Zero-norm
     * embeddings are dropped on both sides (0/0 cosine is NULL in
     * Spark but NaN in DuckDB — the s7 guard). Deterministic: the
-    * (sim desc, id asc) total order matches the row_number oracle. */
-  def lshJoinTopK(left: DataFrame, right: DataFrame, idCol: String,
-                  embCol: String, k: Int): DataFrame = {
-    def banded(df: DataFrame, id: String, emb: String, nrm: String) =
-      df.select(col(idCol).as(id), col(embCol).as(emb))
-        .withColumn(nrm, l2norm(col(emb)))
-        .filter(col(nrm) > 0.0)
-        .withColumn("bkey", explode(sketchBands(col(emb))))
-    val lb = banded(left, "l_id", "l_emb", "l_nrm")
-    val rb = banded(right, "r_id", "r_emb", "r_nrm").hint("shuffle_hash")
-    lb.join(rb, "bkey")
-      .select(col("l_id"), col("r_id"),
-        round(dotD(col("l_emb"), col("r_emb")) /
-          (col("l_nrm") * col("r_nrm")), 6).as("sim"))
-      .distinct()
-      .groupBy(col("l_id"))
-      .agg(graft.plans.TopKRows.of(col("sim"), col("r_id"), k).as("top"))
-      .select(col("l_id"), posexplode(col("top")).as(Seq("pos", "r")))
-      .select(col("l_id"), (col("pos") + 1).as("rk"),
-        col("r.id").as("r_id"), col("r.ord").as("sim"))
-  }
-
-  /** [[lshJoinTopK]] with DATA-ADAPTIVE band width (round 15 — the
-    * 100 TB path): the fixed 4-bit geometry collides a random pair
-    * per band with p = 2⁻⁴, so the cross join generates
-    * ≈ |L|·|R|/2⁴ candidate rows per band — QUADRATIC in corpus
-    * size (measured at the 10× sf1 sweep: 135× the sf0.1 wall; at
-    * 20k vectors the band join already carries ~10⁸ rows each
-    * holding two 64-dim vectors). Here bits-per-band grows with the
-    * LARGER side ([[DetParams.autoBitsPerBand]]: smallest b with
-    * 2^b·64 ≥ n), holding expected bucket occupancy — and so
-    * candidate volume — LINEAR in n. The trade is the standard LSH
-    * one: longer bands admit fewer moderate-cosine pairs (exact
-    * duplicates still collide at every width — equal vectors share
-    * all signs); tune k-recall by raising
-    * [[DetParams.AutoBandOcc]]/band count, or move to [[ivfTopK]]
-    * whose capacity bound is structural. Geometry derives from ONE
-    * driver-side count per side (bounded scalars, the hammingAuto
-    * discipline) and is mirrored exactly by the DuckDB oracle's
-    * integer rule over `count(*)`. */
+    * (sim desc, id asc) total order matches the row_number oracle.
+    *
+    * DATA-ADAPTIVE band width (round 15 — the 100 TB path): a fixed
+    * 4-bit width collides a random pair per band with p = 2⁻⁴, so
+    * the join generates ≈ |L|·|R|/2⁴ candidate rows per band —
+    * QUADRATIC in corpus size (measured at the 10× sf1 sweep: 135×
+    * the sf0.1 wall). Here bits-per-band grow with the LARGER side
+    * ([[DetParams.autoBitsPerBand]]: smallest b with 2^b·occ ≥ n),
+    * holding bucket occupancy — and so candidate volume — LINEAR in
+    * n. The trade is the standard LSH one: longer bands admit fewer
+    * moderate-cosine pairs (exact duplicates still collide at every
+    * width); raise `occ` for recall, or move to [[ivfTopK]] whose
+    * capacity bound is structural. The geometry derives from one
+    * driver-side count per side, mirrored exactly by the DuckDB
+    * oracle's integer rule over `count(*)`. */
   def lshJoinTopKAuto(left: DataFrame, right: DataFrame, idCol: String,
                       embCol: String, k: Int,
                       occ: Int = DetParams.AutoBandOcc): DataFrame = {
     val n = math.max(left.count(), right.count())
     val bits = DetParams.autoBitsPerBand(n, occ)
     def banded(df: DataFrame, id: String, emb: String, nrm: String) =
-      df.select(col(idCol).as(id), col(embCol).as(emb))
-        .withColumn(nrm, l2norm(col(emb)))
-        .filter(col(nrm) > 0.0)
-        .withColumn("bkey",
-          explode(graft.plans.SketchBandsAuto(col(emb), bits)))
+      bandKeys(df.select(col(idCol).as(id), col(embCol).as(emb)),
+        emb, nrm, "bkey", bits)
     val lb = banded(left, "l_id", "l_emb", "l_nrm")
     // merge, not shuffle_hash (round 16, the q22 lesson): a
     // shuffle-hash build side of n×bands rows each carrying a 64-dim
@@ -664,34 +584,11 @@ object SimilarityOps {
   }
 
   /** Near-duplicate pairs by embedding cosine: sign-LSH banding for
-    * candidates, exact cosine filter at `threshold`. */
-  def embeddingNearDupPairs(corpus: DataFrame, idCol: String, embCol: String,
-                            threshold: Double): DataFrame = {
-    val banded = corpus.select(col(idCol), col(embCol))
-      .withColumn("nrm", l2norm(col(embCol)))
-      .withColumn("bkey", explode(sketchBands(col(embCol))))
-      // shuffle-hash, not broadcast: both self-join sides then shuffle
-      // the SAME child on the same keys and ReusedExchange computes the
-      // sketch pass once (mirrors minhashCandidatePairs / d3b).
-      .hint("shuffle_hash")
-    // score per band collision, filter at the threshold FIRST (cuts
-    // ~500k collision rows to the handful of near-dups), then distinct
-    // the small survivors — deduplicating collisions before scoring
-    // would shuffle full embedding arrays for a ~1.1x compute saving
-    banded.as("l").join(banded.as("r"),
-        col("l.bkey") === col("r.bkey") &&
-        col(s"l.$idCol") < col(s"r.$idCol"))
-      .select(col(s"l.$idCol").as("vec_a"), col(s"r.$idCol").as("vec_b"),
-        round(dotD(col(s"l.$embCol"), col(s"r.$embCol")) /
-          (col("l.nrm") * col("r.nrm")), 6).as("sim"))
-      .filter(col("sim") >= threshold)
-      .distinct()
-  }
-
-  /** [[embeddingNearDupPairs]] with DATA-ADAPTIVE band width (round
-    * 15 — the 100 TB path; see [[lshJoinTopKAuto]] for the quadratic
-    * fixed-geometry analysis, measured 52× at the 10× sf1 sweep):
-    * bits-per-band from ONE driver-side count holds the banded
+    * candidates, exact cosine filter at `threshold`, with
+    * DATA-ADAPTIVE band width (round 15 — the 100 TB path; see
+    * [[lshJoinTopKAuto]] for the quadratic fixed-geometry analysis,
+    * measured 52× at the 10× sf1 sweep): bits-per-band from ONE
+    * driver-side count holds the banded
     * self-join's candidate volume linear in corpus size. Recall
     * trade as there — exact/near-exact duplicates (the operator's
     * target at `threshold` ≥ 0.45) collide at every width; the
@@ -703,15 +600,11 @@ object SimilarityOps {
     // geometry from the RAW count (before the zero-norm guard) so the
     // oracle's count(*) derives the identical bits
     val bits = DetParams.autoBitsPerBand(corpus.count(), occ)
-    val banded = corpus.select(col(idCol), col(embCol))
-      .withColumn("nrm", l2norm(col(embCol)))
-      // zero-norm guard (the s7/s19 lesson): 0/0 cosine is NULL in
-      // Spark (silently filtered by sim >= threshold) but NaN in
-      // DuckDB, where NaN >= threshold is TRUE — drop degenerate
-      // vectors on BOTH engines instead of diverging on them
-      .filter(col("nrm") > 0.0)
-      .withColumn("bkey",
-        explode(graft.plans.SketchBandsAuto(col(embCol), bits)))
+    // bandKeys' zero-norm guard: 0/0 cosine is NULL in Spark
+    // (silently filtered by sim >= threshold) but NaN in DuckDB, where
+    // NaN >= threshold is TRUE
+    val banded = bandKeys(corpus.select(col(idCol), col(embCol)),
+        embCol, "nrm", "bkey", bits)
       // merge, not shuffle_hash: the hash build side is n×bands rows
       // of 64-dim vectors — linear in corpus and non-spillable (the
       // q22 cliff). SMJ spills; ReusedExchange still computes the
@@ -743,7 +636,7 @@ object SimilarityOps {
     * in-cell neighbor at ≥ `minCos`) is per-pair, not transitive —
     * greedy within-cell pruning, matching the paper; compose
     * [[graft.operators.GraphOps.connectedComponents]] over
-    * [[embeddingNearDupPairs]] (d10's shape) when full closure is
+    * [[embeddingNearDupPairsAuto]] (d10's shape) when full closure is
     * wanted.
     *
     * Returns the KEPT rows as (idCol, cell). */

@@ -15,84 +15,17 @@ import graft.operators.DetParams
 
 /** Codegen'd sign-LSH band keys for an embedding column: the
   * [[DetParams.PlaneBandsCount]] strings `"b:xxxx"` where bit j of
-  * band b is 1 iff the dot of the vector with hyperplane
-  * `b*PlaneBitsPerBand + j` is strictly positive.
-  *
-  * Why: the built-in spelling
-  * ([[graft.operators.SimilarityOps.sketchBandKeysHof]], kept as this
-  * expression's value-parity oracle) evaluates
-  * [[DetParams.NumPlanes]] interpreted `aggregate(zip_with(...))`
-  * passes per vector — the same interpreted-HOF hot-spot class the
-  * minhash/simhash codegen work eliminated. This expression makes ONE
-  * primitive pass over the vector, updating all plane accumulators
-  * per element. The sketch sits on every corpus vector in d5/s2.
-  *
-  * Null handling matches the HOF spelling exactly: each plane dot is
-  * `aggregate(zip_with(emb, plane, (x,p) => x*p), 0.0, _+_)`, which
-  * is NULL whenever the input array is null, its length differs from
-  * [[DetParams.EmbedDim]] (zip_with pads the shorter side with nulls)
-  * or any element is null — and `when(dot > 0, "1").otherwise("0")`
-  * maps a NULL dot to "0". So every invalid input yields the fixed
-  * all-zero-bits keys, and this expression is never null. A NaN dot
-  * compares false to 0 in both spellings ("0" bit).
-  *
-  * Per-plane accumulation is an ascending-index left fold of
-  * `x_i.toDouble * plane(i)` — bit-identical to the HOF fold (and to
-  * the DuckDB oracle's `list_sum(list_transform(list_zip(..)))`). */
-case class SketchBands(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"sketch_bands expects array<float|double>, got $t")
-  }
-
-  private def elemIsFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def eval(input: InternalRow): Any = child.eval(input) match {
-    case null => SketchBandsHelper.zeroBands()
-    case arr  => SketchBandsHelper.bands(arr.asInstanceOf[ArrayData], elemIsFloat)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val javaType = org.apache.spark.sql.catalyst.expressions.codegen
-      .CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      ${childGen.code}
-      $javaType ${ev.value} = ${childGen.isNull} ?
-        graft.plans.SketchBandsHelper.zeroBands() :
-        graft.plans.SketchBandsHelper.bands(${childGen.value}, $elemIsFloat);""",
-      isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SketchBands =
-    copy(child = newChild)
-
-  override def prettyName: String = "sketch_bands"
-}
-
-object SketchBands {
-  def apply(c: Column): Column =
-    ColumnBridge.column(SketchBands(ColumnBridge.expression(c)))
-}
-
-/** [[SketchBands]] with DATA-ADAPTIVE band width (round 15 — the
-  * 100 TB path for the banded embedding joins): `bits` is chosen
-  * driver-side from the corpus count
-  * ([[DetParams.autoBitsPerBand]]) and band b's key takes the FIRST
-  * `bits` planes of its [[DetParams.AutoMaxBitsPerBand]]-wide run in
-  * [[DetParams.hyperplanesAuto]] — so a narrower key is a string
-  * prefix of the wider one, which is exactly the truncation the
-  * DuckDB oracle applies to its max-width key (AutoLshSpec pins the
-  * prefix property). Null/shape handling identical to
-  * [[SketchBands]]: any invalid input maps to the all-zero-bits
-  * keys. Same one-primitive-pass codegen shape. */
+  * band b is 1 iff the vector's dot with plane
+  * `b * AutoMaxBitsPerBand + j` of [[DetParams.hyperplanesAuto]] is
+  * strictly positive. `bits` comes from the corpus count
+  * ([[DetParams.autoBitsPerBand]]); a narrower key is a string prefix
+  * of a wider one, the truncation the DuckDB oracle applies to its
+  * max-width key (AutoLshSpec pins it). One primitive pass updates
+  * every plane accumulator per element, as an ascending-index left
+  * fold bit-identical to the oracle's `list_sum(list_transform(..))`.
+  * A null array, a length other than [[DetParams.EmbedDim]] or a null
+  * element makes every dot NULL, i.e. a "0" bit (as does NaN), so
+  * invalid inputs map to the all-zero-bits keys; never null. */
 case class SketchBandsAuto(child: Expression, bits: Int)
     extends UnaryExpression {
 
@@ -142,73 +75,18 @@ object SketchBandsAuto {
 }
 
 /** Static helper (Janino-callable): one pass over the vector keeping
-  * [[DetParams.NumPlanes]] running dots, then one string per band. */
+  * `PlaneBandsCount * bits` running dots, then one string per band. */
 object SketchBandsHelper {
-  private val Planes = DetParams.hyperplanes
   private val Bands = DetParams.PlaneBandsCount
-  private val Bits = DetParams.PlaneBitsPerBand
   private val Dim = DetParams.EmbedDim
-  private val NP = DetParams.NumPlanes
-
-  /** The fixed all-zero-bits keys every invalid input maps to (HOF
-    * parity, see [[SketchBands]] Scaladoc). Shared immutable instance:
-    * consumers copy when writing into unsafe rows. */
-  private val Zero: GenericArrayData = {
-    val out = new Array[Any](Bands)
-    var b = 0
-    while (b < Bands) {
-      out(b) = UTF8String.fromString(b.toString + ":" + ("0" * Bits))
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  def zeroBands(): GenericArrayData = Zero
-
-  def bands(arr: ArrayData, elemIsFloat: Boolean): GenericArrayData = {
-    val n = arr.numElements()
-    if (n != Dim) return Zero
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) return Zero
-      i += 1
-    }
-    val acc = new Array[Double](NP)
-    i = 0
-    while (i < n) {
-      val x = if (elemIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      var p = 0
-      while (p < NP) {
-        acc(p) += x * Planes(p)(i)
-        p += 1
-      }
-      i += 1
-    }
-    val out = new Array[Any](Bands)
-    val sb = new java.lang.StringBuilder(Bits + 3)
-    var b = 0
-    while (b < Bands) {
-      sb.setLength(0)
-      sb.append(b).append(':')
-      var j = 0
-      while (j < Bits) {
-        sb.append(if (acc(b * Bits + j) > 0) '1' else '0')
-        j += 1
-      }
-      out(b) = UTF8String.fromString(sb.toString)
-      b += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  // ---- auto-geometry variant ([[SketchBandsAuto]]) ----
-
   private val PlanesAuto = DetParams.hyperplanesAuto
   private val MaxBits = DetParams.AutoMaxBitsPerBand
 
   /** All-zero-bits keys at `bits` width (invalid-input mapping —
-    * see [[SketchBands]] null contract). Per-width cache: widths are
-    * few (4..MaxBits) and chosen once per query. */
+    * see the [[SketchBandsAuto]] null contract). Per-width cache of
+    * shared immutable instances (consumers copy when writing into
+    * unsafe rows): widths are few (4..MaxBits), chosen once per
+    * query. */
   private val ZeroAuto = new java.util.concurrent.ConcurrentHashMap[Int, GenericArrayData]()
 
   def zeroBandsAuto(bits: Int): GenericArrayData =

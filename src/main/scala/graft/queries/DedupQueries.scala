@@ -96,7 +96,7 @@ private[graft] object DedupQueries {
       val media = s.read
         .parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
         .as[MultimodalOps.MediaRow]
-      MultimodalOps.imageNearDupPairs(
+      MultimodalOps.hammingNearDupPairs(
         MultimodalOps.imagePHash(media, dim = 32).toDF(),
         "media_id", "phash", maxDist = 6)
     }),
@@ -111,7 +111,7 @@ private[graft] object DedupQueries {
     // policy are all value-checked, not just pair recall.
     "d23_image_dedup" -> ((s, _) => {
       import s.implicits._
-      MultimodalOps.imageDedupLabels(
+      MultimodalOps.hammingDedupLabels(
         MultimodalOps.imagePHash(
           s.read.parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
             .as[MultimodalOps.MediaRow], dim = 32).toDF(),
@@ -137,17 +137,19 @@ private[graft] object DedupQueries {
     }),
 
     // d23 WITH THE GEOMETRY CHOSEN BY THE OPERATOR (r12 verdict #1):
-    // hammingDedupLabelsAuto counts the signature table and picks
-    // blocks B from the measured ladder (autoHammingBlocks — B=7 to
-    // ~1.3e5 sigs, 8 to ~6.8e5, 9 to ~2.5e6, 10 beyond), so the one
-    // silent at-scale cliff — the default d+1 split ENOSPC-ing at
-    // ~1M uniform signatures — self-tunes away. Oracle is d23's
-    // all-pairs recursive-CTE closure VERBATIM: the auto choice must
-    // be result-identical, not just spec-identical (completeness is
-    // invariant in B; only candidate volume moves).
+    // with no `blocks`, hammingDedupLabels counts the persisted
+    // signature table and picks blocks B from the measured ladder
+    // (autoHammingBlocks — B=7 to ~3.5e3 sigs, 8 to ~2.8e5, 9 to
+    // ~9.1e6, 10 beyond), so the one silent at-scale cliff — the
+    // d+1 split ENOSPC-ing at ~1M uniform signatures — self-tunes
+    // away. Since that became the operator default, d23 runs the same
+    // call; d28 stays as the registry's named auto-geometry entry.
+    // Oracle is d23's all-pairs recursive-CTE closure VERBATIM: the
+    // auto choice must be result-identical, not just spec-identical
+    // (completeness is invariant in B; only candidate volume moves).
     "d28_image_dedup_auto" -> ((s, _) => {
       import s.implicits._
-      MultimodalOps.hammingDedupLabelsAuto(
+      MultimodalOps.hammingDedupLabels(
         MultimodalOps.imagePHash(
           s.read.parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
             .as[MultimodalOps.MediaRow], dim = 32).toDF(),
@@ -329,8 +331,6 @@ private[graft] object DedupQueries {
     // 4-bit face at 52× its sf0.1 wall: n²/16 candidates per band),
     // at the RECALL-BIASED occupancy (256): 2 fewer bits than d35's
     // tight face, 4× the candidates per bucket, still linear in n.
-    // The fixed-geometry embeddingNearDupPairs stays in
-    // SimilarityOps as the documented reduced-scale variant.
     "d5_embed_neardup" -> ((s, dir) =>
       SimilarityOps.embeddingNearDupPairsAuto(
         t(s, dir, "embeddings"), "vec_id", "embedding", 0.45,

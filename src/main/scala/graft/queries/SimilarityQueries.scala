@@ -34,9 +34,7 @@ private[graft] object SimilarityQueries {
     // bucket per band, so per-query probe cost grew linearly with
     // the corpus (an ANN index that rescans 6% of a 100 TB corpus
     // per query is not an index). Bits from one driver-side corpus
-    // count hold bucket occupancy ≤ 64 at any scale; the fixed-
-    // geometry lshTopK stays in SimilarityOps as the documented
-    // reduced-scale/teaching variant.
+    // count hold bucket occupancy ≤ 64 at any scale.
     "s2_ann_lsh" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       SimilarityOps.lshTopKAuto(
@@ -63,9 +61,7 @@ private[graft] object SimilarityQueries {
     // band), at the RECALL-BIASED occupancy (256): 2 fewer bits than
     // s19's tight face, 4× the expected candidates per probe, still
     // linear in n. s19 keeps the tight default so both ends of the
-    // occupancy knob stay oracle-pinned; the fixed-geometry
-    // lshJoinTopK stays in SimilarityOps as the documented
-    // reduced-scale variant.
+    // occupancy knob stay oracle-pinned.
     "s8_ann_join" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       SimilarityOps.lshJoinTopKAuto(
@@ -273,12 +269,14 @@ private[graft] object SimilarityQueries {
     }),
 
 
+    // recall@5 of the shipped LSH index (s2's auto-geometry
+    // lshTopKAuto) against exact brute force, per query
     "q54_ann_recall" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 10)
       val exact = SimilarityOps.bruteForceTopK(e, q, "vec_id", "embedding", 5)
         .select(col("q_id"), col("vec_id"))
-      val approx = SimilarityOps.lshTopK(e, q, "vec_id", "embedding", 5)
+      val approx = SimilarityOps.lshTopKAuto(e, q, "vec_id", "embedding", 5)
         .select(col("q_id"), col("vec_id"))
       val hits = approx.join(exact, Seq("q_id", "vec_id"))
         .groupBy(col("q_id")).agg(count(lit(1)).as("__h"))

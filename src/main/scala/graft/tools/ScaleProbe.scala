@@ -212,10 +212,7 @@ object ScaleProbe {
     // queries ride lshJoinTopKAuto / embeddingNearDupPairsAuto; the
     // sf1 suite pinned them at 2.0× / 1.2× for 10× data — this mode
     // extends the evidence to ×F (use 40: the circular-shift
-    // embeddings build caps at F < 64). The fixed-geometry faces are
-    // timed at 1× only: at 40× their n²/16-per-band candidate mass
-    // (~4·10⁹ pairs) is exactly the cliff the auto rule removes, and
-    // timing it would prove nothing new.
+    // embeddings build caps at F < 64).
     if (args.length > 2 && args(2) == "annauto") {
       def joinAuto(e: DataFrame): Long =
         SimilarityOps.lshJoinTopKAuto(
@@ -225,17 +222,11 @@ object ScaleProbe {
       def pairsAuto(e: DataFrame): Long =
         SimilarityOps.embeddingNearDupPairsAuto(
           e, "vec_id", "embedding", 0.45).count()
-      def joinFixed(e: DataFrame): Long =
-        SimilarityOps.lshJoinTopK(
-          e.filter(pmod(col("vec_id"), lit(2)) === 0),
-          e.filter(pmod(col("vec_id"), lit(2)) === 1),
-          "vec_id", "embedding", 3).count()
       joinAuto(emb1); sweep() // warmup
       time("ann-join AUTO 1x")(joinAuto(emb1))
       time(s"ann-join AUTO ${factor}x")(joinAuto(emb10))
       time("neardup AUTO 1x")(pairsAuto(emb1))
       time(s"neardup AUTO ${factor}x")(pairsAuto(emb10))
-      time("ann-join FIXED 1x (contrast)")(joinFixed(emb1))
       spark.stop()
       return
     }
@@ -273,8 +264,9 @@ object ScaleProbe {
       return
     }
 
-    // s8 both-sides-large ANN-join mode (third arg "s8"): lshJoinTopK
-    // with the embeddings corpus split even/odd vec_id — BOTH sides
+    // s8 both-sides-large ANN-join mode (third arg "s8"): the s8
+    // query's lshJoinTopKAuto (recall-biased occupancy) with the
+    // embeddings corpus split even/odd vec_id — BOTH sides
     // scale with F (no broadcast side, no fixed probe set; this is
     // the crawl-vs-training-set shape). Pairs are generated only on
     // band collisions; per-left-row top-k rides the bounded-state
@@ -283,10 +275,11 @@ object ScaleProbe {
     // |L|·|R|.
     if (args.length > 2 && args(2) == "s8") {
       def s8(e: DataFrame): Long =
-        SimilarityOps.lshJoinTopK(
+        SimilarityOps.lshJoinTopKAuto(
           e.filter(pmod(col("vec_id"), lit(2)) === 0),
           e.filter(pmod(col("vec_id"), lit(2)) === 1),
-          "vec_id", "embedding", 3).count()
+          "vec_id", "embedding", 3,
+          occ = graft.operators.DetParams.RecallBandOcc).count()
       s8(emb1); sweep() // warmup
       time("s8 ann-join 1x")(s8(emb1))
       time(s"s8 ann-join ${factor}x")(s8(emb10))
@@ -646,7 +639,7 @@ object ScaleProbe {
       // PhaseLog-recorded choice alongside the wall
       def labelsAuto(n: Long): Long = {
         val s = sigs(n).persist()
-        try MultimodalOps.hammingDedupLabelsAuto(
+        try MultimodalOps.hammingDedupLabels(
             s, "media_id", "phash", maxDist = 6)
           .filter(col("csize") > 1).count()
         finally s.unpersist(blocking = false)

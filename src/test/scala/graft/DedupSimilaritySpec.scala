@@ -155,13 +155,13 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
     }
   }
 
-  test("lshTopK results are a subset of brute-force candidates with same scores") {
+  test("lshTopKAuto results are a subset of brute-force candidates, same scores") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val qs = e.filter(col("vec_id") < 3)
     val bf = SimilarityOps.bruteForceTopK(e, qs, "vec_id", "embedding", 500)
       .select("q_id", "vec_id", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val lsh = SimilarityOps.lshTopK(e, qs, "vec_id", "embedding", 3).collect()
+    val lsh = SimilarityOps.lshTopKAuto(e, qs, "vec_id", "embedding", 3).collect()
     assert(lsh.nonEmpty)
     lsh.foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
@@ -169,22 +169,26 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
     }
   }
 
-  test("lshJoinTopK matches the window spelling over the same candidates") {
+  test("lshJoinTopKAuto matches the window spelling over the same candidates") {
     import org.apache.spark.sql.expressions.Window
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val L = e.filter(pmod(col("vec_id"), lit(2)) === 0)
     val R = e.filter(pmod(col("vec_id"), lit(2)) === 1)
-    val got = SimilarityOps.lshJoinTopK(L, R, "vec_id", "embedding", 3)
+    val got = SimilarityOps.lshJoinTopKAuto(L, R, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       .sortBy(x => (x._1, x._2)).toSeq
     // reference: identical banded candidate set ranked by a window —
     // the aggregate (TopKRows) and the sort-based spellings must agree
-    // under the shared (sim desc, id asc) total order
+    // under the shared (sim desc, id asc) total order; the geometry is
+    // the operator's own rule over the larger side
+    val bits = graft.operators.DetParams.autoBitsPerBand(
+      math.max(L.count(), R.count()))
     def banded(df: org.apache.spark.sql.DataFrame, id: String, emb: String, nrm: String) =
       df.select(col("vec_id").as(id), col("embedding").as(emb))
         .withColumn(nrm, SimilarityOps.l2norm(col(emb)))
         .filter(col(nrm) > 0.0)
-        .withColumn("bkey", explode(SimilarityOps.sketchBands(col(emb))))
+        .withColumn("bkey",
+          explode(graft.plans.SketchBandsAuto(col(emb), bits)))
     val w = Window.partitionBy(col("l_id")).orderBy(col("sim").desc, col("r_id"))
     val ref = banded(L, "l_id", "l_emb", "l_nrm")
       .join(banded(R, "r_id", "r_emb", "r_nrm"), "bkey")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.MultimodalOps
 
-/** [[MultimodalOps.hammingNearDupPairs]]' `blocks` knob — the
+/** [[MultimodalOps.hammingNearDupPairs]]' band geometry — the
   * block-combination table generalization. The pigeonhole guarantee
   * (≤ d dirty bits ⇒ some (blocks−d)-subset of blocks exactly clean)
   * must make the PAIR SET invariant in `blocks`: raising it may only
@@ -127,7 +127,7 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = corpus
     val derived = rows.toDF("media_id", "raw")
       .select(col("media_id"), decode(col("raw")).as("phash"))
-    val got = MultimodalOps.hammingNearDupPairsAuto(
+    val got = MultimodalOps.hammingNearDupPairs(
         derived, "media_id", "phash", 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got === truth(rows, 6))
@@ -139,7 +139,7 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = corpus
     val want = truth(rows, 6)
     import spark.implicits._
-    val got = MultimodalOps.hammingNearDupPairsAuto(
+    val got = MultimodalOps.hammingNearDupPairs(
         rows.toDF("media_id", "phash"), "media_id", "phash", 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got === want)
@@ -159,14 +159,14 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
       .foreach(_.unpersist(blocking = true))
     def cachedRdds: Int = spark.sparkContext.getPersistentRDDs.size
     val before = cachedRdds
-    val (pairs, rel) = MultimodalOps.hammingNearDupPairsAutoReleasable(
+    val (pairs, rel) = MultimodalOps.hammingNearDupPairsReleasable(
       rows.toDF("media_id", "phash"), "media_id", "phash", 6)
     assert(pairs.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2))).toSet === truth(rows, 6))
     rel()
     assert(cachedRdds === before,
       s"pairs release leaked ${cachedRdds - before} cached RDDs")
-    val (lab, rel2) = MultimodalOps.hammingDedupLabelsAutoReleasable(
+    val (lab, rel2) = MultimodalOps.hammingDedupLabelsReleasable(
       rows.toDF("media_id", "phash"), "media_id", "phash", 6)
     assert(lab.count() === rows.size.toLong)
     rel2()

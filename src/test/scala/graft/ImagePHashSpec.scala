@@ -7,7 +7,7 @@ import graft.multimodal.{MediaCodec, MultimodalOps}
 import graft.multimodal.MultimodalOps.MediaRow
 
 /** DCT perceptual hash ([[MediaCodec.pHash64]]) and the banded image
-  * near-dup join ([[MultimodalOps.imageNearDupPairs]]) on REAL encoded
+  * near-dup join ([[MultimodalOps.hammingNearDupPairs]]) on REAL encoded
   * images (ImageIO-written PNG/BMP bytes, deterministic pixel
   * programs — no fixtures needed):
   *
@@ -106,7 +106,7 @@ class ImagePHashSpec extends AnyFunSuite with SparkSessionFixture {
     val hs = hashes.collect().map(h => h.media_id -> h.phash).toMap
     assert(hashes.filter(!_.ok).count() == 0)
     val maxDist = 6
-    val got = MultimodalOps.imageNearDupPairs(
+    val got = MultimodalOps.hammingNearDupPairs(
         hashes.toDF(), "media_id", "phash", maxDist)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val want = (for {
@@ -145,7 +145,7 @@ class ImagePHashSpec extends AnyFunSuite with SparkSessionFixture {
       MultimodalOps.ImageHash(2L, ok = false, "corrupt: too short", 0L),
       MultimodalOps.ImageHash(3L, ok = true, null, 0L),
       MultimodalOps.ImageHash(4L, ok = true, null, 1L)).toDS().toDF()
-    val got = MultimodalOps.imageNearDupPairs(hashes, "media_id", "phash", 6)
+    val got = MultimodalOps.hammingNearDupPairs(hashes, "media_id", "phash", 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((3L, 4L, 1)))
   }
@@ -164,7 +164,7 @@ class ImagePHashSpec extends AnyFunSuite with SparkSessionFixture {
       MediaRow(id, "image", "image/x-test", None, None, None, b)
     } :+ MediaRow(99L, "image", "image/x-test", None, None, None,
       Array.fill[Byte](8)(1))
-    val out = MultimodalOps.imageDedupLabels(
+    val out = MultimodalOps.hammingDedupLabels(
         MultimodalOps.imagePHash(media.toDS(), Dim).toDF(),
         "media_id", "phash", maxDist = 6)
       .collect()

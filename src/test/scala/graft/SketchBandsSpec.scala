@@ -3,74 +3,27 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.SimilarityOps
-import graft.plans.SketchBands
+import graft.plans.SketchBandsAuto
 
-/** Codegen one-pass sign-LSH sketch vs its built-in HOF spelling —
-  * value-identical on real embeddings and on null/length edge cases
-  * (the DuckDB oracles for d5/s2 are written against the HOF
-  * spelling, so parity here is what keeps their hashes matching). */
+/** The codegen sign-LSH sketch's element-type handling: the
+  * embeddings table stores array<float>, and the float branch must
+  * key exactly like the same values widened to array<double> (the
+  * DuckDB oracles dot in double). Width, prefix and invalid-input
+  * contracts live in AutoLshSpec. */
 class SketchBandsSpec extends AnyFunSuite with SparkSessionFixture {
-
-  private def hofArray = array(SimilarityOps.sketchBandKeysHof(col("e")): _*)
-
-  test("sketch codegen == 16-pass HOF spelling on real embeddings") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("embedding").as("e"))
-    val diff = emb.select(
-        SketchBands(col("e")).as("fast"), hofArray.as("slow"))
-      .filter(to_json(col("fast")) =!= to_json(col("slow")))
-      .count()
-    assert(diff == 0L)
-  }
-
-  test("edge cases: null array, wrong length, null element → all-zero keys") {
-    import spark.implicits._
-    val dim = graft.operators.DetParams.EmbedDim
-    val good = Seq.tabulate(dim)(i => (i % 7 - 3).toDouble / 3)
-    def boxed(s: Seq[Double]): Seq[java.lang.Double] =
-      s.map(java.lang.Double.valueOf)
-    val df = Seq(
-        (1, boxed(good)),
-        (2, null: Seq[java.lang.Double]),
-        (3, boxed(good.drop(1))),                // 63 elems: zip_with pads null
-        (4, boxed(good :+ 1.0)),                 // 65 elems
-        (5, Seq.empty[java.lang.Double]),
-        (6, boxed(good).updated(3, null: java.lang.Double)))
-      .toDF("id", "e")
-    val rows = df.select(col("id"),
-        SketchBands(col("e")).as("fast"), hofArray.as("slow"))
-      .orderBy("id").collect()
-    rows.foreach { r =>
-      assert(r.getSeq[String](1) == r.getSeq[String](2), s"id=${r.getInt(0)}")
-    }
-    val zero = (0 until graft.operators.DetParams.PlaneBandsCount)
-      .map(b => s"$b:" + "0" * graft.operators.DetParams.PlaneBitsPerBand)
-    (1 until rows.length).foreach { i => // every invalid input → fixed keys
-      assert(rows(i).getSeq[String](1) == zero, s"id=${rows(i).getInt(0)}")
-    }
-    assert(rows(0).getSeq[String](1) != zero) // the valid row has signal
-  }
 
   test("float input parity (embeddings table element type)") {
     import spark.implicits._
     val dim = graft.operators.DetParams.EmbedDim
     val df = Seq((1, Seq.tabulate(dim)(i => (i % 11 - 5).toFloat / 4)))
       .toDF("id", "ef")
-      .select(col("id"), col("ef").as("e"))
-    val r = df.select(SketchBands(col("e")).as("fast"), hofArray.as("slow"))
-      .head()
-    assert(r.getSeq[String](0) == r.getSeq[String](1))
-  }
-
-  test("sql registration: sketch_bands matches the Column API") {
-    GraftExtensions.register(spark)
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    emb.createOrReplaceTempView("emb_sb")
-    val viaSql = spark.sql(
-      "SELECT vec_id, sketch_bands(embedding) AS k FROM emb_sb")
-    val viaApi = emb.select(col("vec_id"),
-      SketchBands(col("embedding")).as("k"))
-    assert(viaSql.exceptAll(viaApi).isEmpty && viaApi.exceptAll(viaSql).isEmpty)
+    for (bits <- Seq(4, 9, graft.operators.DetParams.AutoMaxBitsPerBand)) {
+      val r = df.select(
+          SketchBandsAuto(col("ef"), bits).as("f"),
+          SketchBandsAuto(col("ef").cast("array<double>"), bits).as("d"))
+        .head()
+      assert(r.getSeq[String](0) == r.getSeq[String](1), s"bits = $bits")
+      assert(r.getSeq[String](0).exists(_.contains('1')), "no signal")
+    }
   }
 }

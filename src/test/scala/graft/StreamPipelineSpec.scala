@@ -44,6 +44,22 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
     assert(byMsg.values.forall(p => p == 0.0 || p == 1.0))
   }
 
+  test("console sink (S4) drains every added row without error") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[(String, Double)]
+    val rows = Seq(("good day", 0.0), ("sad day", 1.0), ("meh", 0.0))
+    input.addData(rows: _*)
+    val q = StreamPipeline
+      .toConsole(input.toDF().toDF("message", "prediction"))
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(q.lastProgress.numInputRows == rows.size.toLong)
+      assert(q.exception.isEmpty)
+    } finally q.stop()
+  }
+
   test("stream-static decontamination drops docs sharing a gram with the held-out set") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
