@@ -601,18 +601,34 @@ object CorpusOps {
     * are exact BIGINT micro-nat sums from there.
     * Output: (idCol, n_feats, weight_mu) for docs with >= 1 token. */
   def dsirWeights(docs: DataFrame, idCol: String, tokens: Column,
-                  isTarget: Column, buckets: Int): DataFrame = {
-    val wMu = dsirFitWeights(docs, tokens, isTarget, buckets)
+                  isTarget: Column, buckets: Int): DataFrame =
+    dsirScore(docs, idCol, tokens,
+      dsirFitWeights(docs, tokens, isTarget, buckets))
+
+  /** Score half of [[dsirWeights]] against a frozen weight table
+    * (from [[dsirFitWeights]]): (idCol, n_feats, weight_mu) for docs
+    * with >= 1 token, `weight_mu` a pure narrow per-row fold of the
+    * feature array against the literal weight table — no explode, no
+    * join, no shuffle, no state — so the same call scores a streaming
+    * DataFrame at ingest (DsirStreamSpec runs it on a MemoryStream
+    * and pins statelessness and split invariance). */
+  def dsirScore(docs: DataFrame, idCol: String, tokens: Column,
+                wMu: Array[Long]): DataFrame = {
+    val buckets = wMu.length
     docs.select(col(idCol), tokens.as("toks"))
       .filter(size(col("toks")) >= 1)
       .select(col(idCol), dsirFeatures(col("toks")).as("fs"))
-      .select(col(idCol) +: dsirScoreCols(col("fs"), wMu): _*)
+      .select(col(idCol), size(col("fs")).cast("long").as("n_feats"),
+        aggregate(col("fs"), lit(0L), (acc, f) =>
+          acc + element_at(typedlit(wMu),
+            (pmod(DedupOps.md5Hash32(f), lit(buckets)) + 1).cast("int")))
+          .as("weight_mu"))
   }
 
   /** Unigram + space-joined-bigram feature array over a token-array
     * column — the DSIR feature set (tokens are whitespace-split, so
     * the joiner is collision-free). ONE spelling shared by the fit
-    * pass, the batch score pass, and the streaming twin. */
+    * pass and the score pass. */
   private[graft] def dsirFeatures(toks: Column): Column =
     concat(toks,
       when(size(toks) >= 2,
@@ -625,8 +641,7 @@ object CorpusOps {
     * `buckets`-long micro-nat weight table (one map-side-combined agg
     * to <= buckets rows, weights computed driver-side — the t14 rates
     * precedent). The returned array is the FROZEN model artifact the
-    * score side consumes — batch via [[dsirWeights]], ingest via
-    * [[graft.streaming.StreamPipeline.dsirScoreStream]]. */
+    * score side ([[dsirScore]]) consumes, batch or streaming. */
   def dsirFitWeights(docs: DataFrame, tokens: Column,
                      isTarget: Column, buckets: Int): Array[Long] = {
     require(buckets >= 1 && buckets <= (1 << 20),
@@ -654,20 +669,6 @@ object CorpusOps {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP) * 1000000).toLongExact
     Array.tabulate(buckets)(b =>
       lnMicro(ct(b) + 1, nt + buckets) - lnMicro(cq(b) + 1, nq + buckets))
-  }
-
-  /** Score half of [[dsirWeights]] over a materialized feature-array
-    * column (from [[dsirFeatures]]): (n_feats, weight_mu) as a pure
-    * narrow per-row fold against the literal weight table — no
-    * explode, no join, no shuffle. Stateless, so the streaming twin
-    * applies it unchanged. */
-  private[graft] def dsirScoreCols(fs: Column, wMu: Array[Long]): Seq[Column] = {
-    val buckets = wMu.length
-    Seq(size(fs).cast("long").as("n_feats"),
-      aggregate(fs, lit(0L), (acc, f) =>
-        acc + element_at(typedlit(wMu),
-          (pmod(DedupOps.md5Hash32(f), lit(buckets)) + 1).cast("int")))
-        .as("weight_mu"))
   }
 
   // ---- Gopher/MassiveText document rules (Rae et al. 2021, A1) -----
@@ -924,9 +925,8 @@ object CorpusOps {
     * nested fold rescanned the whole array per distinct line: O(L²),
     * an unbounded single-task straggler on a pathological ~1M-line
     * web doc — r16 advice.) ONE spelling shared by the batch funnel
-    * below and the streaming twins
-    * ([[graft.streaming.StreamPipeline.gopherQualityStream]] /
-    * `filterFunnelStream`); value-equal to gopherQuality's keyed
+    * below (batch or streaming input) and the streaming Gopher twin
+    * ([[graft.streaming.StreamPipeline.gopherQualityStream]]); value-equal to gopherQuality's keyed
     * (id, line) agg by construction (per-distinct-line counts either
     * way — FunnelStreamSpec pins it on an adversarial corpus; the
     * sort is value-invisible, stats are order-free sums). */
@@ -1015,16 +1015,15 @@ object CorpusOps {
     * over the corpus: documents a family's own base filter excludes
     * (empty word/token/line sets) coalesce to failing that family.
     * `keep` is the sequential-funnel conjunction. [[filterFunnel]]
-    * is this table aggregated; the ingest twin is
-    * [[graft.streaming.StreamPipeline.filterFunnelStream]].
+    * is this table aggregated; the same call is the ingest gate on a
+    * streaming DataFrame (FunnelStreamSpec: stateless, split-invariant).
     *
     * 100 TB shape (round 16 — rewritten join-free): the old spelling
     * left-joined three per-family verdict tables, i.e. FOUR corpus
     * scans and THREE full-corpus shuffles on the doc id for what is
     * per-row arithmetic. All three stacks now evaluate in ONE
-    * stateless narrow projection — the spelling the streaming twin
-    * always had — with zero joins and zero exchanges before the
-    * caller's aggregation. Totality without joins: no base filters;
+    * stateless narrow projection with zero joins and zero exchanges
+    * before the caller's aggregation. Totality without joins: no base filters;
     * a doc with empty words/tokens/lines hits NULL micro-ratios
     * (zero divisors nullif'd — ANSI `div` would throw) whose rule
     * conjunctions coalesce to 0, exactly the old left-join

@@ -1039,7 +1039,7 @@ object DedupOps {
     * independent of which micro-batch delivered it or what else
     * shares the batch. That invariance is what makes this the d27
     * streaming twin ([[graft.streaming.StreamPipeline
-    * .exactSubstringAdmitStream]]); ExactSubstringSpec pins
+    * .exactSubstringBatchWriter]]); StreamPipelineSpec pins
     * batch/stream census equality under micro-batch splits.
     *
     * 100 TB shape: identical to d27's — the base gram set is one

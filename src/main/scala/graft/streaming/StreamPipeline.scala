@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.Row
 
@@ -15,7 +15,7 @@ import graft.ml.SentimentScorer
   * modalities, with micro-batch semantics and checkpointing.
   *
   * The Kafka scan (`consumer_local.py:32-40`) is abstracted behind
-  * [[StreamPipeline.fromSource]]: any streaming DataFrame with a
+  * [[StreamPipeline.transform]]'s input: any streaming DataFrame with a
   * binary-or-string `value` column (Kafka's contract) plugs in — a
   * kafka connector jar would drop in with zero engine change; tests
   * and the in-repo demo use file/MemoryStream sources with the same
@@ -84,11 +84,57 @@ object StreamPipeline {
       .option("checkpointLocation", checkpoint)
 
   /** S6/S7 foreachBatch sink (`consumer_mongo.py:10-13`,
-    * `consumer_delta.py:11-13`): per micro-batch batch-writer,
-    * at-least-once. The in-repo writer appends parquet partitioned by
-    * `batch_id`, making replays idempotent-by-inspection (the
-    * reference's mongo/delta appends are not): a restarted batch
-    * overwrites its own partition instead of duplicating rows.
+    * `consumer_delta.py:11-13`): the scored stream into
+    * [[mergeSchemaParquetWriter]] through [[toForeachBatch]]. */
+  def toForeachBatchParquet(scored: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
+    toForeachBatch(scored, checkpoint)(mergeSchemaParquetWriter(path))
+
+  /** The one foreachBatch stream builder: append mode, checkpointed,
+    * each micro-batch handed to `writer`. Every writer here is an
+    * [[idempotentBatchSink]], so at-least-once replays rewrite
+    * themselves. */
+  def toForeachBatch(df: DataFrame, checkpoint: String)(
+      writer: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(writer)
+
+  /** The one per-batch sink discipline (the S6/S7 writers'): parquet
+    * partitioned by `batch_id`, written with dynamic partition
+    * OVERWRITE, so a replayed batch rewrites its own partition instead
+    * of duplicating rows (the reference's mongo/delta appends are not
+    * idempotent).
+    *
+    * `dedupKey` is the replay guard: an at-least-once source can
+    * repeat a row WITHIN one batch, and a per-document `op` would
+    * otherwise see it k times (k² copies through a self-keyed join);
+    * retries carry identical payloads, so any survivor is the right
+    * one. `op` maps the guarded batch to its output rows plus a
+    * release hook (cached operator state, e.g.
+    * [[graft.operators.DedupOps.incrementalDedupReleasable]]'s), which
+    * runs after the write even when it fails, so an unbounded stream
+    * accumulates nothing across batches. `batch_id` is stamped AFTER
+    * `op` — it is the sink's column, never the operator's. */
+  def idempotentBatchSink(path: String, dedupKey: Option[String])(
+      op: (DataFrame, Long) => (DataFrame, () => Unit)): (DataFrame, Long) => Unit =
+    (batch: DataFrame, batchId: Long) => {
+      val (out, release) = op(dedupKey.fold(batch)(batch.dropDuplicates(_)), batchId)
+      try {
+        out.withColumn("batch_id", lit(batchId))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("batch_id")
+          .parquet(path)
+      } finally release()
+    }
+
+  private val noRelease: () => Unit = () => ()
+
+  /** The per-batch writer behind [[toForeachBatchParquet]], exposed so
+    * the schema-union semantics are testable without stream plumbing
+    * (a real evolution arrives across restarts that continue the
+    * checkpoint's batch counter).
     *
     * `mergeSchema` semantics (the reference's delta sink sets
     * `mergeSchema=true`, `consumer_delta.py:13`): before writing, the
@@ -98,17 +144,7 @@ object StreamPipeline {
     * files — so an evolving envelope never breaks the write and a
     * `mergeSchema` read sees the full union. The schema probe reads
     * parquet footers only; at scale, pin a table schema up front or
-    * use a real transactional table format instead. */
-  def toForeachBatchParquet(scored: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    scored.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(mergeSchemaParquetWriter(path))
-
-  /** The per-batch writer behind [[toForeachBatchParquet]], exposed so
-    * the schema-union semantics are testable without stream plumbing
-    * (a real evolution arrives across restarts that continue the
-    * checkpoint's batch counter).
+    * use a real transactional table format instead.
     *
     * The on-disk footer probe runs ONCE per writer (first batch after
     * start/restart); afterwards the accumulated union schema is
@@ -117,21 +153,22 @@ object StreamPipeline {
     * long-running stream adds one partition per batch, and a per-batch
     * full-table probe would grow quadratically in aggregate. Correct
     * because this writer is the table's only producer between
-    * restarts. */
+    * restarts. The probe drops the sink's own `batch_id` partition
+    * column (inferred as int from directory names), so only user
+    * columns are aligned. */
   def mergeSchemaParquetWriter(path: String): (DataFrame, Long) => Unit = {
     import org.apache.spark.sql.catalyst.expressions.Cast
     // accumulated union schema; None until first probe
     var known: Option[StructType] = None
-    (batch: DataFrame, batchId: Long) => {
-      val withId = batch.withColumn("batch_id", lit(batchId))
+    idempotentBatchSink(path, dedupKey = None) { (batch, batchId) =>
       if (known.isEmpty) {
-        known = scala.util.Try(
+        known = scala.util.Try(StructType(
           batch.sparkSession.read.option("mergeSchema", "true")
-            .parquet(path).schema).toOption
+            .parquet(path).schema.filterNot(_.name == "batch_id"))).toOption
       }
-      val aligned = known.fold(withId) { old =>
-        val batchTypes = withId.schema.fields.map(f => f.name -> f.dataType).toMap
-        old.fields.foldLeft(withId) { (d, f) =>
+      val aligned = known.fold(batch) { old =>
+        val batchTypes = batch.schema.fields.map(f => f.name -> f.dataType).toMap
+        old.fields.foldLeft(batch) { (d, f) =>
           batchTypes.get(f.name) match {
             // column the table has but this batch lacks: typed null
             case None => d.withColumn(f.name, lit(null).cast(f.dataType))
@@ -151,10 +188,7 @@ object StreamPipeline {
         }
       }
       known = Some(aligned.schema) // fold this batch's new columns in
-      aligned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+      (aligned, noRelease)
     }
   }
 
@@ -163,14 +197,6 @@ object StreamPipeline {
     * column), so [[transform]] is source-agnostic. */
   def fromJsonFileSource(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.text(dir) // yields a single `value: string` column
-
-  /** Run the full pipeline from a source DataFrame to a started query
-    * with the default as-fast-as-possible micro-batch trigger
-    * (reference: default trigger, observed 6-11 s batches). */
-  def run(source: DataFrame, scorer: SentimentScorer,
-          sink: DataFrame => DataStreamWriter[Row],
-          trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
-    sink(transform(source, scorer)).trigger(trigger).start()
 
   // ---- stateful extensions (SURVEY.md §2i: the reference is fully
   // stateless; these are the watermark/window/dedup operators a
@@ -203,19 +229,11 @@ object StreamPipeline {
       .select(col("session_window.start").as("s_start"),
         col("session_window.end").as("s_end"), col(keyCol), col("n"))
 
-  /** Streaming exact dedup with bounded state: duplicates of `idCol`
-    * arriving within the watermark horizon are dropped; state for
-    * ids older than the watermark is evicted. The streaming twin of
-    * batch d1_exact_dedup at unbounded-stream scale. */
-  def dedupWithinWatermark(df: DataFrame, idCol: String, tsCol: String,
-                           watermark: String): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(idCol)
-
   /** First-seen admission with PROCESSING-TIME TTL state — the
-    * [[dedupWithinWatermark]] twin for feeds WITHOUT trustworthy
-    * event timestamps (a crawl front without a watermarkable ts
-    * column): `dropDuplicatesWithinWatermark` expires state by
+    * `withWatermark(...).dropDuplicatesWithinWatermark(...)` twin for
+    * feeds WITHOUT trustworthy event timestamps (a crawl front
+    * without a watermarkable ts column):
+    * `dropDuplicatesWithinWatermark` expires state by
     * event-time watermark; here a fingerprint is "recently seen"
     * for `ttl` of WALL-CLOCK time and the state store reclaims it
     * after. Built on Spark 4's `transformWithState`
@@ -535,19 +553,14 @@ object StreamPipeline {
     q.awaitTermination()
   }
 
-  /** Watermarked stream-stream inner join: each click joins purchases
-    * of the same user within `[click - horizon, click]`. Both sides
-    * carry watermarks and the join has a time-range predicate, so the
-    * state store retains each side only for the horizon — bounded
-    * state, keyed shuffle on the join key (scales with users, not
-    * stream length). */
-  def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
-                        userCol: String, tsCol: String,
-                        horizon: String, watermark: String): DataFrame =
-    clickPurchaseJoin(clicks, purchases, userCol, tsCol, horizon,
-      watermark, "inner")
-
-  /** As above with an explicit join type. `left_outer` adds the
+  /** Watermarked stream-stream join: each click joins purchases of
+    * the same user within `[click - horizon, click]`. Both sides carry
+    * watermarks and the join has a time-range predicate, so the state
+    * store retains each side only for the horizon — bounded state,
+    * keyed shuffle on the join key (scales with users, not stream
+    * length).
+    *
+    * `joinType` defaults to `inner`. `left_outer` adds the
     * conversion-funnel "never purchased" rows: a click with no
     * purchase in its horizon emits null-extended ONCE — but only when
     * the watermark passes the horizon-extended click time, because
@@ -562,7 +575,7 @@ object StreamPipeline {
   def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame,
                         userCol: String, tsCol: String,
                         horizon: String, watermark: String,
-                        joinType: String): DataFrame = {
+                        joinType: String = "inner"): DataFrame = {
     // the join itself runs on __cpj_-prefixed internals, so key/time
     // columns named "user"/"click_ts"/etc. never collide; only a
     // *payload* click column carrying one of the reserved output names
@@ -713,18 +726,6 @@ object StreamPipeline {
       .toDF("user", "view_ms", "click_ms", "purchase_ms")
   }
 
-  /** Streaming MinHash near-dup suppression with bounded state — the
-    * streaming twin of batch d2: per-document signature is the same
-    * narrow codegen pass (trigrams → md5 batch hash → one-loop K
-    * minima), keyed as a single scalar so the state store holds one
-    * 32-byte key per surviving document inside the watermark horizon.
-    *
-    * Signature-exact collision (all K minima equal) is the *high-
-    * precision* end of MinHash: it catches reorderings/case variants
-    * with identical trigram sets. Band-level recall (any-band match,
-    * the batch d2b semantics) needs flatMapGroupsWithState keyed per
-    * band; at stream scale that is b state entries per doc —
-    * signature-exact is the right default. */
   /** Streaming decontamination (the d8 batch operator's serving-path
     * twin): drop streamed documents that share any word n-gram with a
     * static held-out gram set — a STREAM-STATIC left anti join, the
@@ -808,93 +809,6 @@ object StreamPipeline {
           CorpusOps.inRowLineStatColsFrom(col("__lsf")): _*), idCol)
   }
 
-  /** Streaming ADMISSION GATE — the per-document funnel verdict at
-    * ingest, the stream face of
-    * [[graft.operators.CorpusOps.filterVerdicts]]: (id, pass_gopher,
-    * pass_rep, pass_c4, keep) for every arriving document, all three
-    * public rule stacks evaluated in ONE stateless narrow projection
-    * (no join, no state, watermark-free — unlike the batch spelling,
-    * which left-joins three per-family tables).
-    *
-    * Totality without joins: no base filters — every family's stats
-    * compute for every document, and a document with empty
-    * words/tokens/lines hits NULL micro-ratios (`x div 0`) whose
-    * rule conjunctions coalesce to 0, exactly the batch table's
-    * coalesce-to-fail. Rule spellings are the batch columns verbatim
-    * ([[graft.operators.CorpusOps.gopherRuleTail]] thresholds,
-    * [[graft.operators.CorpusOps.repMuCols]]/`repPassCol`,
-    * [[graft.operators.CorpusOps.c4DocStatCols]]/`c4PassCol`) except
-    * the duplicate-line stats, re-derived in-row
-    * ([[graft.operators.CorpusOps.inRowLineStatFold]], the gopherQualityStream device) — a
-    * threshold tweak lands in both spellings or FunnelStreamSpec's
-    * equality pin fails. */
-  def filterFunnelStream(docs: DataFrame, idCol: String,
-                         textCol: String): DataFrame = {
-    import graft.operators.CorpusOps
-    val base = docs.select(col(idCol), col(textCol),
-      CorpusOps.gopherWords(col(textCol)).as("ws"),
-      CorpusOps.gopherLines(col(textCol)).as("ls"),
-      TextOps.cleanTokens(col(textCol)).as("toks"))
-    // NO size(ws) >= 1 base filter: a base-excluded doc must FAIL,
-    // not error — ANSI `div` throws on a 0 divisor, so the zero
-    // denominators (empty words/lines) are nullif'd to NULL, every
-    // ratio goes NULL, and the rule conjunction coalesces to 0 (the
-    // batch table's left-join coalesce, spelled in-row)
-    val stats = base
-      // staged fold — one array_sort + fold per row (see
-      // CorpusOps.inRowLineStatColsFrom)
-      .select(col(idCol), col(textCol), col("toks"), col("ws"), col("ls"),
-        CorpusOps.inRowLineStatFold.as("__lsf"))
-      .select(col(idCol) +: col(textCol) +: col("toks") +:
-        CorpusOps.gopherArrayStats ++:
-        CorpusOps.inRowLineStatColsFrom(col("__lsf")): _*)
-      .withColumn("n_words", nullif(col("n_words"), lit(0L)))
-      .withColumn("n_lines", nullif(col("n_lines"), lit(0L)))
-      .withColumn("line_chars", nullif(col("line_chars"), lit(0L)))
-    val g = CorpusOps.gopherRuleTail(stats, idCol,
-        carry = Seq(textCol, "toks", "n_lines"))
-      .withColumn("pass_gopher", coalesce(col("pass_gopher"), lit(0L)))
-    // empty toks => NULL stats struct => NULL ratios => NULL
-    // conjunction, coalesced to fail (tokens are non-empty strings,
-    // so a non-empty array always has tok_chars >= 1)
-    val r = g
-      .select(col(idCol), col(textCol), col("n_lines"),
-        col("pass_gopher"),
-        when(size(col("toks")) >= 1,
-          graft.plans.RepetitionStats.of(col("toks"))).as("st"))
-      .select(Seq(col(idCol), col(textCol), col("n_lines"),
-        col("pass_gopher")) ++ CorpusOps.repMuCols: _*)
-      .withColumn("pass_rep", coalesce(CorpusOps.repPassCol, lit(0L)))
-    r.select(Seq(col(idCol), col("pass_gopher"), col("pass_rep"),
-        col("n_lines")) ++ CorpusOps.c4DocStatCols(col(textCol)): _*)
-      .withColumn("pass_c4",
-        when(col("n_lines") >= 1L, CorpusOps.c4PassCol).otherwise(0L))
-      .select(col(idCol), col("pass_gopher"), col("pass_rep"),
-        col("pass_c4"))
-      .withColumn("keep",
-        col("pass_gopher") * col("pass_rep") * col("pass_c4"))
-  }
-
-  /** Streaming twin of the t26 DSIR scorer: importance-score arriving
-    * documents against a BATCH-FROZEN weight table
-    * ([[graft.operators.CorpusOps.dsirFitWeights]] runs corpus-side;
-    * its `buckets`-long micro-nat array is the frozen artifact, like
-    * the sentiment model's coefficients or the BPE merge table).
-    * Scoring is [[graft.operators.CorpusOps.dsirScoreCols]] verbatim
-    * — a narrow per-row fold against the literal weight table, no
-    * explode, no join, no state — so stream and batch scores are the
-    * same expressions by construction; DsirStreamSpec pins equality
-    * under micro-batch splits and statelessness. */
-  def dsirScoreStream(docs: DataFrame, idCol: String, textCol: String,
-                      wMu: Array[Long]): DataFrame = {
-    import graft.operators.CorpusOps
-    val toks = TextOps.cleanTokens(col(textCol))
-    docs.select(col(idCol), toks.as("toks"))
-      .filter(size(col("toks")) >= 1)
-      .select(col(idCol), CorpusOps.dsirFeatures(col("toks")).as("fs"))
-      .select(col(idCol) +: CorpusOps.dsirScoreCols(col("fs"), wMu): _*)
-  }
-
   /** Streaming twin of the t38 vocabulary-coverage gate: per
     * event-time window and source, the share of arriving token mass
     * that falls outside a BATCH-FROZEN tokenizer vocabulary — the
@@ -945,11 +859,11 @@ object StreamPipeline {
   }
 
   /** Streaming twin of the d14 incremental-admission operator
-    * ([[graft.operators.DedupOps.incrementalDedupReleasable]]): each
-    * micro-batch of arriving documents is admitted against the static
+    * ([[graft.operators.DedupOps.incrementalDedupReleasable]]), run
+    * per micro-batch as `toForeachBatch(docs, checkpoint)(writer)`:
+    * each batch of arriving documents is admitted against the static
     * already-deduplicated base corpus, and only admitted rows (no
-    * verified near-dup in base) reach the sink parquet, stamped with
-    * their batch id.
+    * verified near-dup in base) reach the sink parquet.
     *
     * Shape: `foreachBatch` — Structured Streaming's stream-batch
     * escape hatch, and what real ingestion runs. The admission
@@ -962,167 +876,70 @@ object StreamPipeline {
     * stream accumulates no cached round leaves; at scale the base
     * side's signatures come from a persisted index (see the batch
     * operator's scaladoc) rather than being recomputed per batch. */
-  def incrementalAdmitStream(docs: DataFrame, base: DataFrame,
-                             idCol: String, textCol: String,
-                             threshold: Double, path: String,
-                             checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(admitBatchWriter(base, idCol, textCol, threshold, path))
-
-  /** The per-batch admission writer behind [[incrementalAdmitStream]]
-    * (exposed like [[mergeSchemaParquetWriter]] so replay idempotence
-    * is testable without checkpoint surgery): runs the d14 batch
-    * operator against the static base, keeps only admitted rows, and
-    * dynamic-partition-OVERWRITES the batch's own `batch_id`
-    * partition — an at-least-once replay rewrites itself instead of
-    * duplicating admitted rows (the S6/S7 sink discipline). */
   def admitBatchWriter(base: DataFrame, idCol: String, textCol: String,
                        threshold: Double, path: String)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      // an at-least-once source can repeat an id WITHIN one batch;
-      // without this dedupe the id appears k times on both sides of
-      // the admitted join and the sink gets k² copies (retries carry
-      // identical payloads, so any survivor is the right one)
-      val b = batch.dropDuplicates(idCol)
+    idempotentBatchSink(path, Some(idCol)) { (b, _) =>
       val (flags, release) = graft.operators.DedupOps
         .incrementalDedupReleasable(base, b, idCol, textCol, threshold)
-      try {
-        b.join(
-            flags.filter(col("dup_of").isNull).select(col(idCol)),
-            Seq(idCol))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
-      } finally release()
+      (b.join(flags.filter(col("dup_of").isNull).select(col(idCol)),
+        Seq(idCol)), release)
     }
 
   /** Streaming twin of the d27 exact-substring span operator
-    * ([[graft.operators.DedupOps.exactSubstringSpansVsBase]]): each
-    * micro-batch of arriving documents is censused against the STATIC
+    * ([[graft.operators.DedupOps.exactSubstringSpansVsBase]]), run as
+    * `toForeachBatch(docs, checkpoint)(writer)`: each micro-batch of
+    * arriving documents is censused against the STATIC
     * already-ingested base corpus, and every maximal duplicated token
     * span (window-gram present anywhere in base, arbitrary offsets)
-    * is written to the sink parquet stamped with its batch id.
+    * is written to the sink parquet.
     *
-    * Shape: `foreachBatch`, like [[incrementalAdmitStream]] — a
-    * span's extent aggregates over a doc's gram collisions (gaps-and-
+    * Shape: `foreachBatch`, like [[admitBatchWriter]] — a span's
+    * extent aggregates over a doc's gram collisions (gaps-and-
     * islands), not a stateless row predicate, so the stream-static
     * join class cannot express it. Because the census side is the
     * static base alone, a doc's spans are invariant under micro-batch
-    * splits (ExactSubstringSpec pins stream-vs-batch equality). The
-    * dynamic-partition overwrite by `batch_id` makes at-least-once
-    * replays rewrite themselves (the S6/S7 sink discipline). At
+    * splits (StreamPipelineSpec pins stream-vs-batch equality). At
     * scale the base gram set comes from a persisted gram index built
     * once, not recomputed per batch (see the operator scaladoc). */
-  def exactSubstringAdmitStream(docs: DataFrame, base: DataFrame,
-                                idCol: String, textCol: String,
-                                window: Int, path: String,
-                                checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(
-        exactSubstringBatchWriter(base, idCol, textCol, window, path))
-
-  /** The per-batch span writer behind [[exactSubstringAdmitStream]]
-    * (exposed so replay idempotence and batch/stream equality are
-    * testable without checkpoint surgery). */
   def exactSubstringBatchWriter(base: DataFrame, idCol: String,
                                 textCol: String, window: Int, path: String)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      import graft.functions.TextOps
-      // at-least-once sources can repeat an id within a batch; spans
-      // are per-doc so any survivor is the right one
-      val b = batch.dropDuplicates(idCol)
-      graft.operators.DedupOps
-        .exactSubstringSpansVsBase(b, base, idCol,
-          TextOps.cleanTokens(col(textCol)),
-          TextOps.cleanTokens(col(textCol)), window)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    idempotentBatchSink(path, Some(idCol)) { (b, _) =>
+      (graft.operators.DedupOps.exactSubstringSpansVsBase(b, base, idCol,
+        TextOps.cleanTokens(col(textCol)), TextOps.cleanTokens(col(textCol)),
+        window), noRelease)
     }
 
   /** Streaming twin of the d34/d32 span STRIP — the ACTION face of
-    * [[exactSubstringAdmitStream]] (r14 verdict item 5: d27/d30/d31
-    * had ingestion twins, the strip face did not): each micro-batch
-    * of arriving documents strips every token span duplicated against
+    * [[exactSubstringBatchWriter]], run as
+    * `toForeachBatch(docs, checkpoint)(writer)`: each micro-batch of
+    * arriving documents strips every token span duplicated against
     * the STATIC base corpus (the base holds the canonical copy, so
     * keep-one never arises at ingestion) and writes the per-doc
     * integer strip accounting — (doc_id, n_tokens, n_spans,
     * n_tokens_stripped, n_tokens_kept), stripped mass as the UNION of
-    * span extents — stamped with its batch id.
+    * span extents.
     *
-    * Like the admit twin: `foreachBatch` (the extent merge aggregates
-    * over a doc's gram collisions), per-doc results invariant under
-    * micro-batch splits (census side is the static base alone —
-    * StreamPipelineSpec pins stream-vs-batch equality), replays
-    * rewrite their own batch_id partition. At scale the gram set
-    * comes from the bucketed index
-    * ([[graft.operators.DedupOps.buildGramIndex]]) via
-    * [[exactSubstringStripStreamIndexed]] instead of re-exploding the
-    * base per batch. */
-  def exactSubstringStripStream(docs: DataFrame, base: DataFrame,
-                                idCol: String, textCol: String,
-                                window: Int, path: String,
-                                checkpoint: String): DataStreamWriter[Row] = {
-    import graft.functions.TextOps
-    val gramSet = graft.operators.DedupOps.baseGramSet(
-      base, idCol, TextOps.cleanTokens(col(textCol)), window)
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(
-        exactSubstringStripBatchWriter(gramSet, idCol, textCol, window, path))
-  }
-
-  /** [[exactSubstringStripStream]] fed from a PERSISTED gram index
-    * (any DataFrame with a distinct binary `gh` column — typically
-    * the [[graft.operators.DedupOps.buildGramIndex]] table): the
-    * at-scale path, the base corpus is never re-exploded per batch. */
-  def exactSubstringStripStreamIndexed(docs: DataFrame, gramIndex: DataFrame,
-                                       idCol: String, textCol: String,
-                                       window: Int, path: String,
-                                       checkpoint: String)
-      : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(
-        exactSubstringStripBatchWriter(gramIndex, idCol, textCol, window,
-          path))
-
-  /** The per-batch strip writer behind [[exactSubstringStripStream]]
-    * (exposed for replay-idempotence and batch/stream-equality specs).
-    * `gramSet` is the duplicated-gram set of record — the base
-    * projection or the persisted index, both (gh)-shaped. */
+    * `gramSet` is the duplicated-gram set of record, any DataFrame
+    * with a distinct binary `gh` column: the base projection
+    * ([[graft.operators.DedupOps.baseGramSet]]) or, at scale, the
+    * persisted bucketed index
+    * ([[graft.operators.DedupOps.buildGramIndex]]), so the base corpus
+    * is never re-exploded per batch. Per-doc results are invariant
+    * under micro-batch splits (census side is the static base alone —
+    * StreamPipelineSpec pins stream-vs-batch equality). */
   def exactSubstringStripBatchWriter(gramSet: DataFrame, idCol: String,
                                      textCol: String, window: Int,
                                      path: String)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      import graft.functions.TextOps
-      // at-least-once sources can repeat an id within a batch; the
-      // accounting is per-doc, so any survivor is the right one
-      val b = batch.dropDuplicates(idCol)
-      graft.operators.DedupOps
-        .exactSubstringStripVsIndex(b, gramSet, idCol,
-          TextOps.cleanTokens(col(textCol)), window)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+    idempotentBatchSink(path, Some(idCol)) { (b, _) =>
+      (graft.operators.DedupOps.exactSubstringStripVsIndex(b, gramSet, idCol,
+        TextOps.cleanTokens(col(textCol)), window), noRelease)
     }
 
-  /** Streaming twin of the d30 leakage-free split: each arriving
+  /** Streaming twin of the d30 leakage-free split, run as
+    * `toForeachBatch(docs, checkpoint)(writer)`: each arriving
     * document is assigned train/val/test CONSISTENTLY WITH ITS
     * NEAR-DUPS IN THE BASE CORPUS — a near-copy of a base document
     * inherits that document's split (via the d14 delta-vs-base
@@ -1136,45 +953,25 @@ object StreamPipeline {
     * `baseSplits` would silently fall back to the own-id ladder,
     * which is exactly the leak this operator exists to prevent —
     * derive both inputs from the same base snapshot. foreachBatch
-    * for the same reason as [[incrementalAdmitStream]]: the dup
-    * decision aggregates over band collisions. Per-batch release, no
-    * state growth; replays rewrite their own batch_id partition. */
-  def leakFreeSplitAssignStream(docs: DataFrame, base: DataFrame,
-                                baseSplits: DataFrame, idCol: String,
-                                textCol: String, threshold: Double,
-                                path: String, checkpoint: String)
-      : DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch(leakFreeSplitBatchWriter(
-        base, baseSplits, idCol, textCol, threshold, path))
-
-  /** The per-batch assigner behind [[leakFreeSplitAssignStream]]. */
+    * for the same reason as [[admitBatchWriter]]: the dup decision
+    * aggregates over band collisions. Per-batch release, no state
+    * growth. */
   def leakFreeSplitBatchWriter(base: DataFrame, baseSplits: DataFrame,
                                idCol: String, textCol: String,
                                threshold: Double, path: String)
       : (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) => {
-      val b = batch.dropDuplicates(idCol)
+    idempotentBatchSink(path, Some(idCol)) { (b, _) =>
+      val splits = baseSplits.select(col(idCol).as("dup_of"),
+        col("split").as("base_split"))
+      val own = pmod(graft.operators.DedupOps.md5Hash32(
+        concat(lit("split:"), col(idCol).cast("string"))), lit(10))
       val (flags, release) = graft.operators.DedupOps
         .incrementalDedupReleasable(base, b, idCol, textCol, threshold)
-      try {
-        val own = pmod(graft.operators.DedupOps.md5Hash32(
-          concat(lit("split:"), col(idCol).cast("string"))), lit(10))
-        flags
-          .join(baseSplits.select(col(idCol).as("dup_of"),
-            col("split").as("base_split")), Seq("dup_of"), "left")
-          .select(col(idCol), col("dup_of"),
-            coalesce(col("base_split"),
-              when(own === 0, "test").when(own === 1, "val")
-                .otherwise("train")).as("split"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(path)
-      } finally release()
+      (flags.join(splits, Seq("dup_of"), "left")
+        .select(col(idCol), col("dup_of"),
+          coalesce(col("base_split"),
+            when(own === 0, "test").when(own === 1, "val")
+              .otherwise("train")).as("split")), release)
     }
 
   /** Streaming sibling of the d15 duplicated-chunk census: the
@@ -1195,7 +992,6 @@ object StreamPipeline {
     * cross-document contamination specifically. */
   def chunkDedupStream(df: DataFrame, textCol: String, tsCol: String,
                        watermark: String): DataFrame = {
-    import graft.functions.TextOps
     df.select(col(tsCol).cast("timestamp").as(tsCol),
         TextOps.cleanTokens(col(textCol)).as("__toks"))
       .withWatermark(tsCol, watermark)
@@ -1243,6 +1039,18 @@ object StreamPipeline {
       .drop("__ids", "__idkey")
   }
 
+  /** Streaming MinHash near-dup suppression with bounded state — the
+    * streaming twin of batch d2: per-document signature is the same
+    * narrow codegen pass (trigrams → md5 batch hash → one-loop K
+    * minima), keyed as a single scalar so the state store holds one
+    * 32-byte key per surviving document inside the watermark horizon.
+    *
+    * Signature-exact collision (all K minima equal) is the *high-
+    * precision* end of MinHash: it catches reorderings/case variants
+    * with identical trigram sets. Band-level recall (any-band match,
+    * the batch d2b semantics) needs flatMapGroupsWithState keyed per
+    * band; at stream scale that is b state entries per doc —
+    * signature-exact is the right default. */
   def minhashDedupWithinWatermark(df: DataFrame, textCol: String, tsCol: String,
                                   watermark: String): DataFrame = {
     df.withColumn("__hs", graft.plans.HashedTrigrams32(col(textCol)))

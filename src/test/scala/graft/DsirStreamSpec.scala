@@ -5,15 +5,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusOps
-import graft.streaming.StreamPipeline
 
-/** [[StreamPipeline.dsirScoreStream]] — DSIR scoring at ingest
-  * against a batch-frozen weight table (the frozen-artifact pattern:
-  * fit corpus-side, score map-side, like the streaming dictionary
-  * encode and BPE encode twins). Scoring is the batch
-  * `dsirScoreCols` verbatim, so stream == batch is by construction;
-  * these pins make the construction break loudly if the twins ever
-  * fork. */
+/** [[CorpusOps.dsirScore]] on a MemoryStream — DSIR scoring at
+  * ingest against a batch-frozen weight table (the frozen-artifact
+  * pattern: fit corpus-side, score map-side, like the streaming
+  * dictionary encode and BPE encode twins). The batch operator
+  * [[CorpusOps.dsirWeights]] scores through the same call, so
+  * stream == batch is by construction; these pins make it break
+  * loudly if the score half ever stops being streaming-legal. */
 class DsirStreamSpec extends AnyFunSuite with SparkSessionFixture {
 
   private val Buckets = 64
@@ -43,8 +42,8 @@ class DsirStreamSpec extends AnyFunSuite with SparkSessionFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, String)]
-    val out = StreamPipeline.dsirScoreStream(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", w)
+    val out = CorpusOps.dsirScore(
+      input.toDF().toDF("doc_id", "text"), "doc_id", toks, w)
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {

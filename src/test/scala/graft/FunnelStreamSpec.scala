@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
 import graft.operators.CorpusOps
-import graft.streaming.StreamPipeline
 
-/** [[StreamPipeline.filterFunnelStream]] — the per-document admission
-  * gate. Pins verdict-table equality against the batch
-  * [[CorpusOps.filterVerdicts]] (same corpus as FilterFunnelSpec:
+/** [[CorpusOps.filterVerdicts]] on a MemoryStream — the per-document
+  * admission gate. Pins verdict-table equality against the batch
+  * call (same corpus as FilterFunnelSpec:
   * full survivor, empty doc, partial failure — so the no-join
   * NULL-coalesce totality is exercised, not just the easy rows),
   * split invariance, statelessness, and equality on a slice of the
@@ -46,8 +45,9 @@ class FunnelStreamSpec extends AnyFunSuite with SparkSessionFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, String, String)]
-    val out = StreamPipeline.filterFunnelStream(
-      input.toDF().toDF("doc_id", "text", "source"), "doc_id", "text")
+    val out = CorpusOps.filterVerdicts(
+      input.toDF().toDF("doc_id", "text", "source"), "doc_id", "text",
+      TextOps.cleanTokens(col("text")))
     val name = s"funnel_stream_$batches"
     val q = out.writeStream.format("memory").queryName(name)
       .outputMode("append").start()

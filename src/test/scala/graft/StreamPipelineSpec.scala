@@ -219,9 +219,10 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
     val input = MemoryStream[(Long, String)]
     val (half1, half2) = delta.splitAt(delta.length / 2)
     input.addData(half1.toSeq)
-    val q = StreamPipeline.incrementalAdmitStream(
-      input.toDF().toDF("doc_id", "text"), base,
-      "doc_id", "text", 0.6, outDir, ckDir).start()
+    val q = StreamPipeline.toForeachBatch(
+      input.toDF().toDF("doc_id", "text"), ckDir)(
+      StreamPipeline.admitBatchWriter(base, "doc_id", "text", 0.6, outDir))
+      .start()
     q.processAllAvailable()
     input.addData(half2.toSeq)
     q.processAllAvailable()
@@ -270,9 +271,11 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
     val input = MemoryStream[(Long, String)]
     val (half1, half2) = delta.splitAt(delta.length / 2)
     input.addData(half1.toSeq)
-    val q = StreamPipeline.exactSubstringAdmitStream(
-      input.toDF().toDF("doc_id", "text"), base,
-      "doc_id", "text", 10, outDir, ckDir).start()
+    val q = StreamPipeline.toForeachBatch(
+      input.toDF().toDF("doc_id", "text"), ckDir)(
+      StreamPipeline.exactSubstringBatchWriter(
+        base, "doc_id", "text", 10, outDir))
+      .start()
     q.processAllAvailable()
     input.addData(half2.toSeq)
     q.processAllAvailable()
@@ -318,9 +321,13 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
     val input = MemoryStream[(Long, String)]
     val (half1, half2) = delta.splitAt(delta.length / 2)
     input.addData(half1.toSeq)
-    val q = StreamPipeline.exactSubstringStripStream(
-      input.toDF().toDF("doc_id", "text"), base,
-      "doc_id", "text", 10, outDir, ckDir).start()
+    val gramSet = DedupOps.baseGramSet(
+      base, "doc_id", TextOps.cleanTokens(col("text")), 10)
+    val q = StreamPipeline.toForeachBatch(
+      input.toDF().toDF("doc_id", "text"), ckDir)(
+      StreamPipeline.exactSubstringStripBatchWriter(
+        gramSet, "doc_id", "text", 10, outDir))
+      .start()
     q.processAllAvailable()
     input.addData(half2.toSeq)
     q.processAllAvailable()
@@ -379,9 +386,11 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
     val input = MemoryStream[(Long, String)]
     val (half1, half2) = delta.splitAt(delta.length / 2)
     input.addData(half1.toSeq)
-    val q = StreamPipeline.leakFreeSplitAssignStream(
-      input.toDF().toDF("doc_id", "text"), base, baseSplits,
-      "doc_id", "text", 0.6, outDir, ckDir).start()
+    val q = StreamPipeline.toForeachBatch(
+      input.toDF().toDF("doc_id", "text"), ckDir)(
+      StreamPipeline.leakFreeSplitBatchWriter(
+        base, baseSplits, "doc_id", "text", 0.6, outDir))
+      .start()
     q.processAllAvailable()
     input.addData(half2.toSeq)
     q.processAllAvailable()
@@ -419,6 +428,84 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
           }
           assert(split == want, s"doc $id singleton ladder diverged")
       }
+    }
+  }
+
+  // ---- restart: every batch_id writer, one spec -----------------------
+
+  /** A seeded synthetic corpus: 30 base docs, and 12 arriving docs in
+    * three micro-batches — exact copies of a base doc (near-dups that
+    * inherit its split), half-copies (a shared 15-token span) and
+    * fresh docs (admitted, nothing to strip). */
+  private val (restartBaseRows, restartBatches) = {
+    val rnd = new scala.util.Random(7)
+    def words(n: Int) = Seq.fill(n) {
+      val i = rnd.nextInt(400) // letters only: cleanTokens drops digits
+      s"${('a' + i / 26).toChar}${('a' + i % 26).toChar}q"
+    }
+    val base = (0L until 30L).map(i => (i, words(30)))
+    val arriving = (0 until 12).map { k =>
+      val ws = k % 3 match {
+        case 0 => base(k)._2
+        case 1 => base(k)._2.take(15) ++ words(15)
+        case _ => words(30)
+      }
+      (1000L + k, ws.mkString(" "))
+    }
+    (base.map { case (i, ws) => (i, ws.mkString(" ")) }, arriving.grouped(4).toSeq)
+  }
+  private lazy val restartBase = {
+    import spark.implicits._
+    restartBaseRows.toDF("doc_id", "text")
+  }
+
+  private val restartWriters
+      : Seq[(String, String => (org.apache.spark.sql.DataFrame, Long) => Unit)] = {
+    import graft.operators.DedupOps
+    import graft.functions.TextOps
+    Seq(
+      "mergeSchemaParquetWriter" -> (p => StreamPipeline.mergeSchemaParquetWriter(p)),
+      "admitBatchWriter" -> (p => StreamPipeline.admitBatchWriter(
+        restartBase, "doc_id", "text", 0.6, p)),
+      "exactSubstringBatchWriter" -> (p => StreamPipeline.exactSubstringBatchWriter(
+        restartBase, "doc_id", "text", 10, p)),
+      "exactSubstringStripBatchWriter" -> (p =>
+        StreamPipeline.exactSubstringStripBatchWriter(
+          DedupOps.baseGramSet(restartBase, "doc_id",
+            TextOps.cleanTokens(col("text")), 10), "doc_id", "text", 10, p)),
+      "leakFreeSplitBatchWriter" -> (p => StreamPipeline.leakFreeSplitBatchWriter(
+        restartBase,
+        restartBase.select(col("doc_id"),
+          when(col("doc_id") % 3 === 0, "test").otherwise("train").as("split")),
+        "doc_id", "text", 0.6, p)))
+  }
+
+  restartWriters.foreach { case (name, make) =>
+    test(s"restart: a fresh $name replays the last batch and continues " +
+         "exactly like one clean run") {
+      import spark.implicits._
+      def batch(i: Int) = restartBatches(i).toDF("doc_id", "text")
+      def rows(path: String): Seq[String] =
+        spark.read.option("mergeSchema", "true").parquet(path)
+          .collect().map(_.toString).toSeq.sorted
+      val cleanDir = tmp("restart_clean")
+      val clean = make(cleanDir)
+      (0 to 2).foreach(i => clean(batch(i), i.toLong))
+
+      val outDir = tmp("restart_out")
+      val first = make(outDir)
+      first(batch(0), 0L)
+      first(batch(1), 1L)
+      // a restart builds a NEW writer over the existing table; the
+      // checkpoint replays the last uncommitted batch, then moves on
+      val restarted = make(outDir)
+      restarted(batch(1), 1L)
+      restarted(batch(2), 2L)
+
+      val want = rows(cleanDir)
+      assert(want.nonEmpty, s"$name wrote nothing on the fixture")
+      assert(want.distinct == want, s"$name clean run has duplicate rows")
+      assert(rows(outDir) == want, s"$name restart diverged from a clean run")
     }
   }
 

@@ -76,8 +76,9 @@ class StreamingStateSpec extends AnyFunSuite with SparkSessionFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Timestamp, String)]
-    val dedup = StreamPipeline.dedupWithinWatermark(
-      input.toDF().toDF("ts", "id"), "id", "ts", "10 minutes")
+    val dedup = input.toDF().toDF("ts", "id")
+      .withWatermark("ts", "10 minutes")
+      .dropDuplicatesWithinWatermark("id")
     val q = dedup.writeStream.format("memory").queryName("dedup_out")
       .outputMode("append").start()
 
