@@ -43,10 +43,11 @@ object Bench {
     // optional comma-separated subset for isolated timing runs
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
     val selected = SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
-    // One-time model artifact load + 262k-dim broadcast, warmed here so
-    // it is not charged to whichever query first touches the scorer.
-    // m5_sentiment is the only query that reads it, so a subset without
-    // it neither pays the load nor needs the model artifact mounted.
+    // One-time model load + 262k-dim broadcast, warmed here so it is
+    // not charged to whichever query first touches the scorer. The
+    // model is the artifact where it is mounted, else the gated
+    // committed fixture (SparkEntry.model), so m5_sentiment runs either
+    // way; a subset without m5_sentiment skips the load.
     if (selected.contains("m5_sentiment")) SparkEntry.scorer(spark)
     // WARM-UP PASS (round 10): run every selected query once against a
     // tiny SF dir BEFORE the timed region. Whole-stage-codegen classes

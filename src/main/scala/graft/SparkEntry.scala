@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ml.{ModelLoader, SentimentModel, SentimentScorer}
+import graft.ml.{FixtureModel, ModelLoader, SentimentModel, SentimentScorer}
 import graft.queries._
 
 /** Driver contract — flagship entry, per-operator query inventory, and
@@ -30,10 +30,14 @@ object SparkEntry {
   val ModelDir: String =
     sys.env.getOrElse("GRAFT_MODEL_DIR", "/root/reference/pre_trained_model")
 
-  /** Committed model-fixture parquet (flattened vocab/idf/coef tables
-    * for the relational m5 oracle; see graft.tools.DumpModelFixture). */
+  /** Committed fixture parquet: the flattened vocab/idf/coef tables
+    * (graft.tools.DumpModelFixture) that [[model]] serves when the
+    * artifact is absent and the relational m5 oracle joins against,
+    * plus the media fixtures. Defaults to the checkout's own
+    * `fixtures/`; resolved against the working directory to an
+    * absolute path, because the DuckDB oracle SQL embeds it. */
   val FixtureDir: String =
-    sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/root/repo/fixtures")
+    new java.io.File(sys.env.getOrElse("GRAFT_FIXTURE_DIR", "fixtures")).getAbsolutePath
 
   /** The one local-mode session every main and the test harness use:
     * `local[cores]` with shuffle partitions = cores, session time zone
@@ -52,12 +56,25 @@ object SparkEntry {
     s
   }
 
+  /** The frozen sentiment model: the artifact under [[ModelDir]]
+    * wherever its `stages/` directory exists, otherwise the committed
+    * fixture under [[FixtureDir]], which must pass
+    * [[FixtureModel.gate]]. Logs one line naming the source it read. */
+  def model(s: SparkSession): SentimentModel =
+    if (new java.io.File(s"$ModelDir/stages").isDirectory) {
+      System.err.println(s"[model] artifact $ModelDir")
+      ModelLoader.load(s, ModelDir)
+    } else {
+      System.err.println(s"[model] no $ModelDir/stages; fingerprint-gated fixture $FixtureDir")
+      FixtureModel.gate(FixtureModel.load(s, FixtureDir))
+    }
+
   // model + broadcast scorer cached per JVM (Verify/Bench are one-shot)
   @volatile private var cachedScorer: SentimentScorer = _
   def scorer(s: SparkSession): SentimentScorer = {
     if (cachedScorer == null) synchronized {
       if (cachedScorer == null)
-        cachedScorer = SentimentModel.scorer(s, ModelLoader.load(s, ModelDir))
+        cachedScorer = SentimentModel.scorer(s, model(s))
     }
     cachedScorer
   }

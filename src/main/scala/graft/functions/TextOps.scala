@@ -53,8 +53,11 @@ object TextOps {
     graft.plans.CleanTokens.of(lower(trim(c)))
 
   /** The 181-word English stop list used by the reference model's
-    * StopWordsRemover stage (Spark ML default English list; the
-    * reference metadata inlines the identical words). */
+    * StopWordsRemover stage (Spark ML default English list). The
+    * artifact's metadata inlines its own copy of the list; the word-by-
+    * word identity with this one is checked only where the artifact is
+    * mounted (FixtureModelSpec), and [[graft.ml.FixtureModel]] serves
+    * this list when it is not. */
   lazy val englishStopWords: Array[String] =
     org.apache.spark.ml.feature.StopWordsRemover.loadDefaultStopWords("english")
 

@@ -12,16 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EventsReaderSpec extends AnyFunSuite with SparkSessionFixture {
 
-  // absolute fixture root (r6 ADVICE item): cwd-relative paths break
-  // when tests run from a non-root working directory. The committed
-  // location is authoritative (consistent with the absolute
-  // /root/testdata paths the other specs use); fall back to the cwd
-  // for a checked-out copy living elsewhere.
-  private val fixturesDir = {
-    val committed = new java.io.File("/root/repo/fixtures")
-    if (committed.isDirectory) committed.getAbsolutePath
-    else new java.io.File("fixtures").getAbsolutePath
-  }
+  // this checkout's fixture root, absolute (SparkEntry.FixtureDir)
+  private val fixturesDir = SparkEntry.FixtureDir
 
   private def readTs(dir: String): Seq[(Long, java.sql.Timestamp)] =
     QuerySupport.t(spark, dir, "events")

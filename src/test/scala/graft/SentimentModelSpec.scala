@@ -7,19 +7,24 @@ import graft.ml.{ModelLoader, SentimentModel}
 
 /** Native 5-stage scorer vs the reference's shipped artifacts
   * (SURVEY.md §2h, §5):
-  *  - model-shape invariants from the artifact metadata;
+  *  - model-shape invariants from the artifact metadata (ModelLoader
+  *    on the artifact's own layout);
   *  - the 2,815-row golden corpus (`locally_saved_results/part-*.json`)
   *    whose rows carry the model input (`cleaned_data`) AND output
-  *    (`prediction`) — re-scoring must reproduce every prediction.
+  *    (`prediction`) — re-scoring must reproduce every prediction;
+  *  - scoring semantics and label decode on the served model
+  *    (`SparkEntry.model`: the artifact, or the gated fixture without
+  *    it).
   */
 class SentimentModelSpec extends AnyFunSuite with SparkSessionFixture {
 
   private val modelDir = SparkEntry.ModelDir
   private val goldenDir = "/root/reference/locally_saved_results"
 
-  private lazy val model: SentimentModel = ModelLoader.load(spark, modelDir)
+  private lazy val model: SentimentModel = SparkEntry.model(spark)
 
   test("model artifacts load with expected shapes") {
+    val model = ModelLoader.load(spark, modelDir)
     assert(model.numFeatures == 262144)
     assert(model.vocab.size() == 262144)
     assert(model.coef.length == 262144)

@@ -4,7 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
-import graft.ml.ModelLoader
 
 /** The codegen TF·IDF·LR margin/prediction expression
   * (plans.SparseTfIdfMargin) vs the driver-side scalar model — the
@@ -14,7 +13,7 @@ import graft.ml.ModelLoader
 class SparseTfIdfMarginSpec extends AnyFunSuite with SparkSessionFixture {
 
   private lazy val scorer = SparkEntry.scorer(spark)
-  private lazy val model = ModelLoader.load(spark, SparkEntry.ModelDir)
+  private lazy val model = SparkEntry.model(spark)
 
   test("expression margin == scalar model margin bit-for-bit on real docs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
