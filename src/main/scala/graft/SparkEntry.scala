@@ -42,8 +42,9 @@ object SparkEntry {
   /** The one local-mode session every main and the test harness use:
     * `local[cores]` with shuffle partitions = cores, session time zone
     * UTC, TIMESTAMP(NANOS) parquet read as long (`events.parquet`'s
-    * older generations), AQE on, UI off, log level WARN. */
-  def localSession(cores: Int): SparkSession = {
+    * older generations), AQE on, UI off, log level WARN. `extra`
+    * adds settings on top (the test harness's warehouse directory). */
+  def localSession(cores: Int, extra: (String, String)*): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -51,6 +52,7 @@ object SparkEntry {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(extra.toMap)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -59,17 +61,25 @@ object SparkEntry {
   /** The frozen sentiment model: the artifact under [[ModelDir]]
     * wherever its `stages/` directory exists, otherwise the committed
     * fixture under [[FixtureDir]], which must pass
-    * [[FixtureModel.gate]]. Logs one line naming the source it read. */
-  def model(s: SparkSession): SentimentModel =
-    if (new java.io.File(s"$ModelDir/stages").isDirectory) {
-      System.err.println(s"[model] artifact $ModelDir")
-      ModelLoader.load(s, ModelDir)
-    } else {
-      System.err.println(s"[model] no $ModelDir/stages; fingerprint-gated fixture $FixtureDir")
-      FixtureModel.gate(FixtureModel.load(s, FixtureDir))
+    * [[FixtureModel.gate]]. Read once per JVM; logs one line naming
+    * the source it read. */
+  def model(s: SparkSession): SentimentModel = {
+    if (cachedModel == null) synchronized {
+      if (cachedModel == null)
+        cachedModel =
+          if (new java.io.File(s"$ModelDir/stages").isDirectory) {
+            System.err.println(s"[model] artifact $ModelDir")
+            ModelLoader.load(s, ModelDir)
+          } else {
+            System.err.println(s"[model] no $ModelDir/stages; fingerprint-gated fixture $FixtureDir")
+            FixtureModel.gate(FixtureModel.load(s, FixtureDir))
+          }
     }
+    cachedModel
+  }
 
   // model + broadcast scorer cached per JVM (Verify/Bench are one-shot)
+  @volatile private var cachedModel: SentimentModel = _
   @volatile private var cachedScorer: SentimentScorer = _
   def scorer(s: SparkSession): SentimentScorer = {
     if (cachedScorer == null) synchronized {

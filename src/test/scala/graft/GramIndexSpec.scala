@@ -24,16 +24,7 @@ class GramIndexSpec extends AnyFunSuite with SparkSessionFixture {
   private var built = false
   private def buildOnce(): Unit = synchronized {
     if (!built) {
-      // a previous JVM's managed-table LOCATION can survive without
-      // its catalog entry — drop both before building
       spark.sql("DROP TABLE IF EXISTS gram_idx_spec")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:") + "/gram_idx_spec"))
       DedupOps.buildGramIndex(base, "doc_id", toks, W,
         "gram_idx_spec", numBuckets = 32)
       built = true

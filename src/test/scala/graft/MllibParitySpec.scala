@@ -5,18 +5,25 @@ import org.apache.spark.sql.functions._
 
 /** Cross-check the native scorer against Spark ML's own
   * PipelineModel.load on the reference artifacts (SURVEY.md §7.2).
-  * The artifacts were written by Spark 3.0.0; if 4.1.2 refuses the
-  * format this suite cancels (the golden corpus remains the oracle —
-  * SentimentModelSpec). */
+  * The artifacts were written by Spark 3.0.0; if they are not
+  * mounted, or 4.1.2 refuses the format, this suite cancels (the
+  * golden corpus remains the oracle — SentimentModelSpec). */
 class MllibParitySpec extends AnyFunSuite with SparkSessionFixture {
 
-  test("ml.PipelineModel.load parity on golden corpus inputs") {
+  /** Spark ML's own load of the artifact; cancels when the artifact is
+    * not mounted, or when it is and 4.1.2 refuses its format. */
+  private def loadArtifact(): org.apache.spark.ml.PipelineModel = {
+    if (!new java.io.File(s"${SparkEntry.ModelDir}/metadata").exists)
+      cancel(s"artifact not mounted at ${SparkEntry.ModelDir}")
     spark.sparkContext // force session init before mllib's getOrCreate
-    val loaded =
-      try org.apache.spark.ml.PipelineModel.load(SparkEntry.ModelDir)
-      catch { case e: Exception =>
-        cancel(s"Spark 4.1.2 cannot load the 3.0.0-written artifacts: ${e.getMessage}")
-      }
+    try org.apache.spark.ml.PipelineModel.load(SparkEntry.ModelDir)
+    catch { case e: Exception =>
+      cancel(s"Spark 4.1.2 cannot load the 3.0.0-written artifacts: ${e.getMessage}")
+    }
+  }
+
+  test("ml.PipelineModel.load parity on golden corpus inputs") {
+    val loaded = loadArtifact()
     val golden = spark.read
       .json("/root/reference/locally_saved_results/part-*.json")
       .select(col("cleaned_data"), col("prediction").as("golden_pred"))
@@ -39,12 +46,7 @@ class MllibParitySpec extends AnyFunSuite with SparkSessionFixture {
 
   test("probability/rawPrediction column parity vs ml.PipelineModel (<=1e-12)") {
     import org.apache.spark.ml.functions.vector_to_array
-    spark.sparkContext
-    val loaded =
-      try org.apache.spark.ml.PipelineModel.load(SparkEntry.ModelDir)
-      catch { case e: Exception =>
-        cancel(s"Spark 4.1.2 cannot load the 3.0.0-written artifacts: ${e.getMessage}")
-      }
+    val loaded = loadArtifact()
     val golden = spark.read
       .json("/root/reference/locally_saved_results/part-*.json")
       .select(col("cleaned_data")).withColumn("sentiment", lit("4"))

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
@@ -10,5 +13,11 @@ trait SparkSessionFixture { self: Suite =>
 }
 
 object SparkSessionFixture {
-  lazy val session: SparkSession = SparkEntry.localSession(8)
+  /** Managed tables go to a temp warehouse of this JVM's own, deleted
+    * at exit, not to `spark-warehouse/` under the working directory. */
+  lazy val session: SparkSession = {
+    val warehouse = Files.createTempDirectory("graft-warehouse").toFile
+    sys.addShutdownHook(FileUtils.deleteQuietly(warehouse))
+    SparkEntry.localSession(8, "spark.sql.warehouse.dir" -> warehouse.toURI.toString)
+  }
 }

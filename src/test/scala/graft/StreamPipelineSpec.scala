@@ -348,15 +348,6 @@ class StreamPipelineSpec extends AnyFunSuite with SparkSessionFixture {
     // the INDEX-fed writer (exactly what a checkpoint-restarted
     // at-scale pipeline replays through)
     spark.sql("DROP TABLE IF EXISTS strip_stream_idx")
-    locally { // a previous JVM's orphaned table location blocks create
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir")
-          .stripPrefix("file:") + "/strip_stream_idx"))
-    }
     DedupOps.buildGramIndex(base, "doc_id",
       TextOps.cleanTokens(col("text")), 10, "strip_stream_idx",
       numBuckets = 8)
