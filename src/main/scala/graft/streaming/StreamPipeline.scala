@@ -8,6 +8,7 @@ import org.apache.spark.sql.Row
 
 import graft.functions.TextOps
 import graft.ml.SentimentScorer
+import graft.plans.FromJsonString
 
 /** The reference's streaming serving path re-expressed Spark-first
   * (SURVEY.md §2a/2i): schema'd JSON envelope decode → clean/tokenize
@@ -39,7 +40,9 @@ object StreamPipeline {
 
   /** Decode + clean + score. Input: streaming or batch DataFrame with
     * a `value` column (binary or string). Output columns:
-    * `message`, `cleaned_data`, `prediction`, `created_at`.
+    * `message`, `cleaned_data`, `prediction`, `created_at`. The
+    * envelope decode is `from_json`'s, parsed from a String
+    * ([[graft.plans.FromJsonString]]).
     *
     * Implements the *intended* reference semantics (clean the decoded
     * `message` field); `consumer_local.py:49` as-written cleans the
@@ -47,7 +50,7 @@ object StreamPipeline {
   def transform(df: DataFrame, scorer: SentimentScorer): DataFrame = {
     val decoded = df
       .select(col("value").cast("string").as("raw"))          // P1
-      .withColumn("value", from_json(col("raw"), EnvelopeSchema)) // P2/F2
+      .withColumn("value", FromJsonString.of(col("raw"), EnvelopeSchema)) // P2/F2
       .select(col("value.message").as("message"))
       .na.drop()                                              // P3
     scorer.scoreText(decoded, "message")                      // P4 + M1-M5

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to the `private[sql]` Column ⇄ Expression converters
   * (`org.apache.spark.sql.classic.ExpressionUtils`) for the engine's
@@ -11,6 +12,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `StructType.asNullable` (`private[spark]`): the schema with every
+    * field, at every depth, nullable — what `from_json` returns. */
+  def asNullable(s: StructType): StructType = s.asNullable
 
   /** Split an `.asc`/`.desc`-decorated Column into (bare key column,
     * isDescending). In the Spark 4 Column API the sort decoration is
