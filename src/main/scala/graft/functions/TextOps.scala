@@ -75,8 +75,8 @@ object TextOps {
   /** Comma scrub (producer.py:40 `text.replace(',', '')`). */
   def scrubCommas(c: Column): Column = regexp_replace(c, ",", "")
 
-  // ---- token-window chunking (t15/t16/d15 + chunkDedupStream) ------
-  // ONE spelling shared by every batch query and the streaming twin
+  // ---- token-window chunking (t15/t16/d15) --------------------------
+  // ONE spelling shared by every query that chunks
   // (the d14/d4 lesson: parity guaranteed by copy-paste is parity
   // until the first isolated edit). The DuckDB twin is generated from
   // the same constants in OracleSql.chunkWindowSql.

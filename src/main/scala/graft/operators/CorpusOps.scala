@@ -69,10 +69,9 @@ object CorpusOps {
   /** [[tokenizeToIds]] with an already-collected term list — the
     * frozen-dictionary form: because the encode is a pure narrow
     * expression, this overload works unchanged on a STREAMING
-    * DataFrame (stateless, watermark-free — the bpeApplyMerges /
-    * decontaminateStream class), which is how an ingest pipeline
-    * encodes arriving documents against the vocabulary the batch fit
-    * froze. */
+    * DataFrame (stateless, watermark-free), which is how an ingest
+    * pipeline encodes arriving documents against the vocabulary the
+    * batch fit froze. */
   def tokenizeToIds(docs: DataFrame, tokens: Column, terms: Seq[String],
                     outCol: String): DataFrame = {
     val bc = docs.sparkSession.sparkContext
@@ -679,7 +678,7 @@ object CorpusOps {
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
   /** RAW-text word split (the rules predate tokenization: symbols
-    * count) — shared by the batch operator and the streaming twin. */
+    * count) — shared by [[gopherQuality]] and [[filterVerdicts]]. */
   private[graft] def gopherWords(text: Column): Column =
     filter(split(text, "\\s+"), w => length(w) > 0)
 
@@ -707,8 +706,8 @@ object CorpusOps {
 
   /** Micro-unit ratio columns + the conjunction verdict over the raw
     * stat columns — the rule thresholds live HERE and nowhere else
-    * (batch and streaming twin share this tail, so a threshold tweak
-    * lands in both or the twin equality spec fails). `carry` names
+    * ([[gopherQuality]] and [[filterVerdicts]] share this tail, so a
+    * threshold tweak lands in both). `carry` names
     * extra `stats` columns to project through unchanged (the
     * streaming funnel threads text/tokens past the tail this way). */
   private[graft] def gopherRuleTail(stats: DataFrame, idCol: String,
@@ -745,8 +744,8 @@ object CorpusOps {
     * 100 TB shape: one narrow per-doc projection for the array-local
     * stats plus ONE (id, line) keyed agg (map-side combined, bounded
     * by lines-per-doc) for the duplicate-line stats, joined back —
-    * no corpus-wide state, one text scan. The stateless ingest twin
-    * is [[graft.streaming.StreamPipeline.gopherQualityStream]]. */
+    * no corpus-wide state, one text scan. [[filterVerdicts]] derives
+    * the same stats statelessly, in-row ([[inRowLineStatFold]]). */
   def gopherQuality(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val base = docs
       .select(col(idCol), gopherWords(col(textCol)).as("ws"),
@@ -924,9 +923,8 @@ object CorpusOps {
     * changes — O(L log L) in a doc's own line count. (The previous
     * nested fold rescanned the whole array per distinct line: O(L²),
     * an unbounded single-task straggler on a pathological ~1M-line
-    * web doc — r16 advice.) ONE spelling shared by the batch funnel
-    * below (batch or streaming input) and the streaming Gopher twin
-    * ([[graft.streaming.StreamPipeline.gopherQualityStream]]); value-equal to gopherQuality's keyed
+    * web doc — r16 advice.) The spelling [[filterVerdicts]] uses on
+    * batch or streaming input; value-equal to gopherQuality's keyed
     * (id, line) agg by construction (per-distinct-line counts either
     * way — FunnelStreamSpec pins it on an adversarial corpus; the
     * sort is value-invisible, stats are order-free sums). */
@@ -1336,24 +1334,6 @@ object CorpusOps {
           x => translate(x, Sep, ""))).as("sym"))
       .groupBy(col("sym"))
       .agg(sum(col("freq")).as("cnt"))
-  }
-
-  /** Apply an already-trained BPE merge table to ONE token — the
-    * row-local encode expression batch fit and streaming encode
-    * share. Merges apply in rank order; each is the same wrapped-
-    * symbol string replace the fit loop uses ([[bpeFit]] scaladoc:
-    * replace() scans left-to-right resuming after each replacement =
-    * leftmost-first non-overlapping), so a token encodes here exactly
-    * as the fit's vocabulary rewrite encodes it. Built-ins only —
-    * codegen, no state, broadcast-free (the merge table is a literal
-    * chain, the natural shape for the bounded nMerges a fit emits). */
-  def bpeApplyMerges(token: Column, merges: Seq[(String, String)]): Column = {
-    val Sep = "\u001f"
-    val ws0 = regexp_replace(token, "(.)", Sep + "$1" + Sep)
-    val wsN = merges.foldLeft(ws0) { case (ws, (l, r)) =>
-      replace(ws, lit(Sep + l + Sep + Sep + r + Sep), lit(Sep + l + r + Sep))
-    }
-    transform(split(wsN, Sep + Sep), x => translate(x, Sep, ""))
   }
 
   /** Shared merge-training loop: returns (merge table rows, the

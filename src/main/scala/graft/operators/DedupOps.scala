@@ -1037,10 +1037,8 @@ object DedupOps {
     * operator. Because the census side is the static base alone, a
     * document's spans are a function of (document, base) only —
     * independent of which micro-batch delivered it or what else
-    * shares the batch. That invariance is what makes this the d27
-    * streaming twin ([[graft.streaming.StreamPipeline
-    * .exactSubstringBatchWriter]]); StreamPipelineSpec pins
-    * batch/stream census equality under micro-batch splits.
+    * shares the batch. That invariance is what lets a foreachBatch
+    * writer run it per micro-batch (d31 is its batch face).
     *
     * 100 TB shape: identical to d27's — the base gram set is one
     * distinct projection (at scale the persisted/bucketed gram index

@@ -53,47 +53,6 @@ object SketchOps {
       .toDF("w", "est_count")
   }
 
-  /** Streaming twin of [[cmsTokenCounts]]: a running sketch that
-    * absorbs one constant-size partial per micro-batch.
-    *
-    * Each batch folds its token stream into the same distributed
-    * `count_min_sketch` aggregate (so per-batch cost is one narrow
-    * agg, and only ~width×depth longs reach the driver), and the
-    * per-batch sketches MERGE element-wise into the running one —
-    * sketch mergeability is exactly what makes frequency tracking
-    * over an unbounded stream possible with bounded state. Probe at
-    * any time with [[RunningCms.estimate]]; same accuracy contract as
-    * the batch path (exact while vocabulary ≪ width, overcount
-    * ≤ eps·N with probability ≥ confidence beyond, never an
-    * undercount). The seed must stay fixed across batches or the
-    * merge would add misaligned counter tables. */
-  final class RunningCms(eps: Double = 1e-4, confidence: Double = 0.999,
-                         seed: Int = 42) {
-    @volatile private var sketch: CountMinSketch = _
-
-    /** foreachBatch hook: absorb `tokens` of one micro-batch. */
-    def absorb(batch: DataFrame, tokens: Column): Unit = {
-      val skBytes = batch
-        .select(explode(tokens).as("w"))
-        .agg(expr(s"count_min_sketch(w, CAST($eps AS DOUBLE), " +
-          s"CAST($confidence AS DOUBLE), $seed)").as("sk"))
-        .head().getAs[Array[Byte]](0)
-      // an empty batch aggregates to a null sketch — nothing to merge
-      if (skBytes != null) {
-        val part = CountMinSketch.readFrom(new ByteArrayInputStream(skBytes))
-        synchronized {
-          if (sketch == null) sketch = part else sketch.mergeInPlace(part)
-        }
-      }
-    }
-
-    /** Estimated count of `key` across every absorbed batch. */
-    def estimate(key: String): Long = {
-      val s = sketch
-      if (s == null) 0L else s.estimateCount(key)
-    }
-  }
-
   /** Per-group distinct-count estimate via the built-in DataSketches
     * HLL aggregate — the UNBOUNDED-domain companion to
     * [[graft.plans.BitmapDistinctCount]] (which is exact but needs a
@@ -110,112 +69,6 @@ object SketchOps {
       .groupBy(col(groupCol))
       .agg(expr(s"hll_sketch_estimate(hll_sketch_agg(__hll_v, $lgK))")
         .as("n_distinct_est"))
-
-  /** Streaming twin of [[hllDistinct]]: a running distinct-count
-    * sketch absorbing one constant-size partial per micro-batch, the
-    * distinct-count member of the [[RunningCms]] family. Per batch:
-    * one narrow `hll_sketch_agg` (2^lgK bytes reach the driver);
-    * running state: a DataSketches `Union` (register-wise max), so
-    * re-observing values from earlier batches never double-counts —
-    * the property a running `count(DISTINCT)` over an unbounded
-    * stream needs bounded state for. */
-  final class RunningHll(lgK: Int = 14) {
-    private val union = new org.apache.datasketches.hll.Union(lgK)
-
-    /** foreachBatch hook: absorb the `value` column of one batch. */
-    def absorb(batch: DataFrame, value: Column): Unit = {
-      val bytes = batch.select(value.as("__hll_v"))
-        .agg(expr(s"hll_sketch_agg(__hll_v, $lgK)").as("sk"))
-        .head().getAs[Array[Byte]](0)
-      if (bytes != null) synchronized {
-        union.update(org.apache.datasketches.hll.HllSketch.heapify(bytes))
-      }
-    }
-
-    /** Current distinct estimate across every absorbed batch. */
-    def estimate: Double = synchronized { union.getResult.getEstimate }
-  }
-
-  /** Streaming twin of [[graft.plans.TopKRows]]: a running leaderboard
-    * absorbing one k-element partial per micro-batch. Each batch runs
-    * the bounded-state `top_k_rows` aggregate (so only k rows reach
-    * the driver per batch, whatever the batch size), and the k-sets
-    * fold under the same (ord desc, id asc) total order — top-k is
-    * merge-decomposable, which is what lets an unbounded stream keep
-    * an exact running top-k in O(k) state. Re-observing a (ord, id)
-    * pair is idempotent by the strict total order. */
-  final class RunningTopK(k: Int) {
-    require(k > 0, s"k must be positive, got $k")
-    private val state =
-      scala.collection.mutable.ArrayBuffer.empty[(Double, Long)]
-
-    @inline private def outranks(a: (Double, Long), b: (Double, Long))
-        : Boolean = a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-
-    /** foreachBatch hook: fold one micro-batch's top-k into the
-      * running k-set. */
-    def absorb(batch: DataFrame, ord: Column, id: Column): Unit = {
-      val partial = batch.select(ord.as("__o"), id.as("__i"))
-        .agg(graft.plans.TopKRows.of(col("__o"), col("__i"), k).as("top"))
-        .select(explode(col("top")).as("r"))
-        .select(col("r.ord"), col("r.id"))
-        .collect().map(r => (r.getDouble(0), r.getLong(1)))
-      synchronized {
-        partial.foreach { p =>
-          if (!state.contains(p)) {
-            if (state.length < k) { state += p; () }
-            else {
-              var wk = 0
-              var j = 1
-              while (j < state.length) {
-                if (outranks(state(wk), state(j))) wk = j
-                j += 1
-              }
-              if (outranks(p, state(wk))) state(wk) = p
-            }
-          }
-        }
-      }
-    }
-
-    /** Current top-k as (ord, id), best first. */
-    def top: Seq[(Double, Long)] =
-      synchronized { state.sortWith(outranks).toSeq }
-  }
-
-  /** Streaming twin of [[graft.plans.QuantileSketchAgg]]: a running
-    * quantile sketch absorbing one serialized partial per micro-batch.
-    * Each batch runs the bounded-state `QuantileSketchBytes` aggregate
-    * (so only one O(k·log(n/k)) sketch crosses to the driver per
-    * batch, whatever the batch size) and the partials fold by the
-    * sketch's own merge — quantiles over an unbounded stream with the
-    * same self-accounted rank bound the batch operator carries:
-    * exact total count, estimate-rank window ±`bound`. */
-  final class RunningQuantile(k: Int = 400) {
-    import graft.plans.QuantileSketchAgg.Sketch
-    private val state: Sketch = Sketch.empty(k)
-
-    /** foreachBatch hook: absorb the `value` column of one batch. */
-    def absorb(batch: DataFrame, value: Column): Unit = {
-      val bytes = batch.select(value.cast("double").as("__qs_v"))
-        .agg(graft.plans.QuantileSketchBytes.of(col("__qs_v"), k).as("sk"))
-        .head().getAs[Array[Byte]](0)
-      if (bytes != null) synchronized {
-        state.mergeIn(Sketch.deserialize(bytes, k))
-      }
-    }
-
-    /** Rows absorbed so far (exact — weight is preserved). */
-    def count: Long = synchronized { state.n }
-
-    /** Guaranteed rank-window half-width for current estimates. */
-    def bound: Long = synchronized { state.queryBound }
-
-    /** Current estimate at each φ (an actual observed value whose
-      * true rank is within ±[[bound]] of ⌈φ·n⌉). */
-    def quantiles(phis: Seq[Double]): Seq[Double] =
-      synchronized { state.quantiles(phis) }
-  }
 
   /** Exact semi-join of `fact` to the key set of `dim`, pre-pruned by
     * a broadcast Bloom bitmap — the runtime-filter pattern spelled as
@@ -260,9 +113,9 @@ object SketchOps {
     * representation, so an INT build side and a BIGINT probe side
     * (same logical values) would otherwise set and test DIFFERENT
     * positions — a silent false-NEGATIVE, breaking the "never drops a
-    * true member" contract that bloomPrunedSemiJoin and
-    * bloomDecontaminateStream rely on. String rendering makes every
-    * integer-typed spelling of the same value agree; callers mixing
+    * true member" contract that bloomPrunedSemiJoin relies on. String
+    * rendering makes every integer-typed spelling of the same value
+    * agree; callers mixing
     * fractional/decimal types across sides must cast both sides to
     * one type themselves (as a join would). */
   private def bloomPositions(key: Column, bits: Int, hashes: Int)
@@ -308,25 +161,5 @@ object SketchOps {
       (element_at(lut, (p / 64).cast("int") + 1)
         .bitwiseAND(bloomMask(p))) =!= lit(0L)
     }.reduce(_ && _)
-  }
-
-  /** Constant-memory STREAMING decontamination: drop stream rows whose
-    * `key` is probably in the static contamination set, without any
-    * stream-static join — the bitmap is built once from the static
-    * side and probed map-side in every micro-batch (no state store,
-    * no shuffle, bounded memory whatever the stream length).
-    *
-    * Bloom semantics make this CONSERVATIVE: true members always hit
-    * (no false negatives — nothing contaminated survives); a false
-    * positive drops a clean row with probability ~(k·n/bits)^k —
-    * size `bits` ≥ ~16× the contamination-set cardinality to keep
-    * that sub-1%. When exactness matters more than state, use the
-    * stream-static anti-join (StreamPipeline's decontaminate path). */
-  def bloomDecontaminateStream(stream: DataFrame, key: Column,
-                               contaminated: DataFrame, contamKey: Column,
-                               bits: Int = 1 << 20, hashes: Int = 3)
-      : DataFrame = {
-    val bitmap = bloomBitmap(contaminated, contamKey, bits, hashes)
-    stream.filter(!bloomProbe(bitmap, key, hashes))
   }
 }

@@ -119,72 +119,6 @@ case class QuantileSketchAgg(
   override def prettyName: String = "quantile_sketch"
 }
 
-/** [[QuantileSketchAgg]]'s raw-state twin: evaluates to the SERIALIZED
-  * sketch bytes instead of quantile estimates, so a caller holding
-  * state across jobs (the streaming `RunningQuantile`, a cross-table
-  * union, a saved checkpoint) can `Sketch.deserialize` + `mergeIn` —
-  * the mergeable-sketch contract made portable. Same state, same
-  * bounds. */
-case class QuantileSketchBytes(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[QuantileSketchAgg.Sketch] {
-
-  require(k >= 8 && k % 2 == 0 && k <= 65536,
-    s"k must be even in [8, 65536], got $k")
-
-  import QuantileSketchAgg.Sketch
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case DoubleType => TypeCheckResult.TypeCheckSuccess
-      case o => TypeCheckResult.TypeCheckFailure(
-        s"quantile_sketch_bytes expects a double column, got $o")
-    }
-
-  override def createAggregationBuffer(): Sketch = Sketch.empty(k)
-
-  override def update(buf: Sketch, input: InternalRow): Sketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      val d = v.asInstanceOf[Double]
-      require(!d.isNaN, "quantile_sketch_bytes: NaN value (order undefined)")
-      buf.insert(d)
-    }
-    buf
-  }
-
-  override def merge(a: Sketch, b: Sketch): Sketch = { a.mergeIn(b); a }
-  override def eval(buf: Sketch): Any = buf.serialize()
-  override def serialize(buf: Sketch): Array[Byte] = buf.serialize()
-  override def deserialize(bytes: Array[Byte]): Sketch =
-    Sketch.deserialize(bytes, k)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): QuantileSketchBytes =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): QuantileSketchBytes =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): QuantileSketchBytes =
-    copy(child = newChildren(0))
-
-  override def prettyName: String = "quantile_sketch_bytes"
-}
-
-object QuantileSketchBytes {
-  /** Column API: the serialized sketch (BINARY). */
-  def of(value: Column, k: Int): Column =
-    ColumnBridge.column(
-      QuantileSketchBytes(ColumnBridge.expression(value), k)
-        .toAggregateExpression())
-}
-
 object QuantileSketchAgg {
 
   /** Column API: struct(n, bound, qs: array<struct<phi, est>>). */

@@ -443,8 +443,7 @@ private[graft] object DedupQueries {
         t(s, dir, "documents"), "doc_id", cleanTokens, window = 20)),
 
     // SPAN-LEVEL ADMISSION census (d27 vs a static base — the d14
-    // delta-vs-base shape applied to exact-substring dedup, and the
-    // batch face of the exactSubstringBatchWriter streaming twin): a
+    // delta-vs-base shape applied to exact-substring dedup): a
     // gram of an INCOMING doc is duplicated iff it occurs anywhere in
     // the already-ingested base, islands merge exactly as in d27. The
     // base side is one distinct gram projection (a persisted index at
@@ -460,8 +459,7 @@ private[graft] object DedupQueries {
     }),
 
     // INGESTION-TIME span STRIP (d31's action face, the d32 strip
-    // discipline under admission semantics, and the batch face of the
-    // exactSubstringStripBatchWriter streaming twin): every arriving doc
+    // discipline under admission semantics): every arriving doc
     // strips ALL spans duplicated against the base (the base holds
     // the canonical copy — keep-one never arises), per-doc integer
     // accounting over ALL arriving docs, stripped mass as the UNION

@@ -72,7 +72,7 @@ private[graft] object RelationalQueries {
           max(col("value")).as("max_value"))),
 
 
-    // event-time tumbling window (batch twin of the streaming agg)
+    // event-time tumbling window
     "q5_time_window" -> ((s, dir) =>
       t(s, dir, "events")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -175,8 +175,8 @@ private[graft] object RelationalQueries {
     }),
 
 
-    // sessionization: gap-based session windows per user (batch twin
-    // of streaming session_window aggregation; partitioned by user)
+    // sessionization: gap-based session windows per user
+    // (partitioned by user)
     "q18_sessions" -> ((s, dir) =>
       t(s, dir, "events")
         .groupBy(session_window(col("ts"), "10 minutes"), col("user_id"))

@@ -449,8 +449,8 @@ private[graft] object TextQueries {
     // GOPHER/MASSIVETEXT QUALITY RULES (Rae et al. 2021, table A1):
     // the per-document rule table t2's simple ratios don't cover —
     // semantics, shape, and thresholds documented on the operator
-    // (promoted there so the gopherQualityStream ingest twin shares
-    // the exact rule spelling)
+    // (promoted there so the filter funnel shares the exact rule
+    // spelling)
     "t25_gopher_quality" -> ((s, dir) =>
       CorpusOps.gopherQuality(t(s, dir, "documents"), "doc_id", "text")),
 

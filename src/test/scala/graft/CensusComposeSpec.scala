@@ -102,8 +102,7 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
     val (labels, release) = GraphOps.connectedComponentsReleasable(
       DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
       "doc_a", "doc_b")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_labels_").toString
+    val dir = tempDir("graft_labels_").toString
     try {
       labels.write.mode("overwrite").parquet(dir)
       release()
@@ -128,8 +127,7 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
     // the face only reads `cell` columns: 4+2+1 assigned, 2+2+0 kept
     // — cell 0 prunes half (500000µ), cell 1 nothing, cell 2 all
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_semdedup_").toString
+    val dir = tempDir("graft_semdedup_").toString
     try {
       (Seq.fill(4)(0L) ++ Seq.fill(2)(1L) ++ Seq(2L)).zipWithIndex
         .map { case (cell, i) => (i.toLong, cell) }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -13,7 +12,7 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
 
   test("reads envelope waves with the Kafka value-column contract") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("env_v2").toString
+    val dir = tempDir("env_v2").toString
     EnvelopeFeed.publishWave(
       Seq("first text", "second, with comma").toDF("t"), "t", dir)
     EnvelopeFeed.publishWave(Seq("third wave").toDF("t"), "t", dir)
@@ -37,7 +36,7 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
 
   test("column pruning reaches the scan") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("env_v2p").toString
+    val dir = tempDir("env_v2p").toString
     EnvelopeFeed.publishWave(Seq("only text").toDF("t"), "t", dir)
     val pruned = spark.read.format("graft-envelope").load(dir)
       .select(col("value"))
@@ -50,7 +49,7 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
 
   test("file-filter pushdown prunes input partitions at planning") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("env_v2f").toString
+    val dir = tempDir("env_v2f").toString
     EnvelopeFeed.publishWave(Seq("wave one").toDF("t"), "t", dir)
     EnvelopeFeed.publishWave(Seq("wave two").toDF("t"), "t", dir)
     EnvelopeFeed.publishWave(Seq("wave three").toDF("t"), "t", dir)
@@ -81,7 +80,7 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
 
   test("COUNT(*) pushdown answers from per-file line counts") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("env_v2c").toString
+    val dir = tempDir("env_v2c").toString
     EnvelopeFeed.publishWave(Seq("a", "b").toDF("t"), "t", dir)
     EnvelopeFeed.publishWave(Seq("c").toDF("t"), "t", dir)
 
@@ -98,7 +97,7 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
 
   test("LIMIT pushdown caps the reader instead of scanning to EOF") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("env_v2l").toString
+    val dir = tempDir("env_v2l").toString
     EnvelopeFeed.publishWave((1 to 100).map(i => s"line $i").toDF("t"), "t", dir)
 
     val limited = spark.read.format("graft-envelope").load(dir).limit(3)
@@ -116,9 +115,9 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
 
   test("micro-batch stream: incremental batches and checkpoint restart") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("env_v2s").toString
-    val cp = Files.createTempDirectory("env_v2s_cp").toString
-    val out = Files.createTempDirectory("env_v2s_out").toString
+    val dir = tempDir("env_v2s").toString
+    val cp = tempDir("env_v2s_cp").toString
+    val out = tempDir("env_v2s_out").toString
     EnvelopeFeed.publishWave(Seq("wave one a", "wave one b").toDF("t"), "t", dir)
 
     def start() = spark.readStream.format("graft-envelope").load(dir)

@@ -56,8 +56,7 @@ class EventsReaderSpec extends AnyFunSuite with SparkSessionFixture {
     // throw at read time, never flow unnormalized into time queries
     // (r6 advice: the old `case _ => raw` arm was a silent diverger)
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("events_bad").toString
+    val dir = tempDir("events_bad").toString
     Seq((1L, 1.5)).toDF("event_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val e = intercept[IllegalStateException] {

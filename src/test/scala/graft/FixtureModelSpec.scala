@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
@@ -37,7 +36,7 @@ class FixtureModelSpec extends AnyFunSuite with SparkSessionFixture {
 
     val vocab = spark.read.parquet(s"${SparkEntry.FixtureDir}/sentiment_vocab.parquet")
     val victim = vocab.filter(col("coef") =!= 0.0).agg(min("idx")).head().getInt(0)
-    val dir = Files.createTempDirectory("fixture_tampered").toString
+    val dir = tempDir("fixture_tampered").toString
     vocab.withColumn("coef", when(col("idx") === victim, lit(0.0)).otherwise(col("coef")))
       .write.parquet(s"$dir/sentiment_vocab.parquet")
     spark.read.parquet(s"${SparkEntry.FixtureDir}/sentiment_meta.parquet")

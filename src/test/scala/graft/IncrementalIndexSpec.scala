@@ -38,7 +38,7 @@ class IncrementalIndexSpec extends AnyFunSuite with SparkSessionFixture {
     val docs = corpus(200)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
-    val stage = sys.props("java.io.tmpdir") + "/graft_incr_index_spec"
+    val stage = tempDir("incr_index").toString
 
     val (inline, relInline) = DedupOps.incrementalDedupReleasable(
       base, delta, "doc_id", "text", threshold = 0.6)
@@ -76,7 +76,7 @@ class IncrementalIndexSpec extends AnyFunSuite with SparkSessionFixture {
     // results (no per-batch state inside the index)
     val docs = corpus(200)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
-    val stage = sys.props("java.io.tmpdir") + "/graft_incr_index_spec2"
+    val stage = tempDir("incr_index2").toString
     DedupOps.writeSignatureIndex(base, "doc_id", "text", stage, numFiles = 4)
     for (rem <- Seq(0, 5)) {
       val delta = docs.filter(col("doc_id") % 10 === rem)
@@ -97,7 +97,7 @@ class IncrementalIndexSpec extends AnyFunSuite with SparkSessionFixture {
     val docs = corpus(200)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
     val delta = docs.filter(col("doc_id") % 5 === 0)
-    val stage = sys.props("java.io.tmpdir") + "/graft_incr_index_spec3"
+    val stage = tempDir("incr_index3").toString
     DedupOps.writeSignatureIndex(base, "doc_id", "text", stage, numFiles = 4)
     val (viaBroadcast, r1) = DedupOps.incrementalDedupFromIndex(
       spark, stage, delta, "doc_id", "text", threshold = 0.6)

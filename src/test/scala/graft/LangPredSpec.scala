@@ -19,7 +19,7 @@ class LangPredSpec extends AnyFunSuite with SparkSessionFixture {
 
   private def mkDocs(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("langdocs").toString
+    val dir = tempDir("langdocs").toString
     rows.toDF("doc_id", "text", "lang")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -41,7 +41,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("file, directory and symlink status match RawLocalFileSystem field by field") {
-    val dir = Files.createTempDirectory("niofs")
+    val dir = tempDir("niofs")
     val file = Files.write(dir.resolve("part-0000.json"), "{\"a\":1}\n".getBytes(UTF_8))
     val link = Files.createSymbolicLink(dir.resolve("link"), file)
     val dangling = Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
@@ -52,7 +52,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("a missing path is FileNotFoundException on both sides") {
-    val missing = new Path(Files.createTempDirectory("niofs_missing").resolve("nope").toUri)
+    val missing = new Path(tempDir("niofs_missing").resolve("nope").toUri)
     for (fs <- Seq(hadoop, nio)) {
       intercept[java.io.FileNotFoundException](fs.getFileStatus(missing))
       intercept[java.io.FileNotFoundException](fs.getFileLinkStatus(missing))
@@ -60,7 +60,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("setPermission round-trips through Hadoop's own permission read") {
-    val dir = Files.createTempDirectory("niofs_perm")
+    val dir = tempDir("niofs_perm")
     val file = new Path(Files.write(dir.resolve("f"), Array[Byte](1)).toUri)
     for (mode <- Seq("644", "755", "700")) {
       val perm = new FsPermission(Integer.parseInt(mode, 8).toShort)
@@ -78,7 +78,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("createAtomic without overwrite refuses an existing file") {
     val conf = spark.sessionState.newHadoopConf()
-    val target = new Path(Files.createTempDirectory("niofs_atomic").resolve("0").toUri)
+    val target = new Path(tempDir("niofs_atomic").resolve("0").toUri)
     val fm = CheckpointFileManager.create(target.getParent, conf)
     def write(body: String, overwrite: Boolean): Unit = {
       val out = fm.createAtomic(target, overwriteIfPossible = overwrite)
@@ -102,7 +102,7 @@ class NioLocalFileSystemSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("FileSystem.rename refuses to replace an existing file") {
     val fs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
-    val dir = Files.createTempDirectory("niofs_rename")
+    val dir = tempDir("niofs_rename")
     val (a, b) = (dir.resolve("a"), dir.resolve("b"))
     Files.write(a, "a".getBytes(UTF_8)); Files.write(b, "b".getBytes(UTF_8))
     assert(!fs.rename(new Path(a.toUri), new Path(b.toUri)))

@@ -81,7 +81,7 @@ class QualitySignalsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("t11 char entropy: uniform and constant strings hit closed forms") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("t11docs").toString
+    val dir = tempDir("t11docs").toString
     Seq((1L, "aaaa"), (2L, "abab"), (3L, "abcd"), (4L, ""))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -33,30 +33,6 @@ class SketchOpsSpec extends AnyFunSuite with SparkSessionFixture {
     assert(a.map(_.getString(0)) == Seq("w0", "w12", "w3")) // distinct+sorted
   }
 
-  test("RunningCms absorbs micro-batches and matches exact stream counts") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[String]
-    val cms = new SketchOps.RunningCms()
-    val q = in.toDF().writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        cms.absorb(batch, split(col("value"), " "))
-      }
-      .start()
-    try {
-      in.addData("a b a", "c b")
-      q.processAllAvailable()
-      assert(cms.estimate("a") == 2L && cms.estimate("b") == 2L)
-      in.addData("a c c") // second batch merges into the running sketch
-      q.processAllAvailable()
-      assert(cms.estimate("a") == 3L)
-      assert(cms.estimate("c") == 3L)
-      assert(cms.estimate("never") == 0L)
-    } finally q.stop()
-  }
-
   test("cms estimates never undercount, even at adversarially small width") {
     import spark.implicits._
     // width 2/eps = 4 cells with 50 distinct tokens: collisions are
@@ -81,111 +57,6 @@ class SketchOpsSpec extends AnyFunSuite with SparkSessionFixture {
     est.values.foreach(e => assert(math.abs(e - 1500.0) / 1500.0 < 0.05))
     // register-max state ⇒ identical on any partitioning
     assert(run(1) == est && run(32) == est)
-  }
-
-  test("RunningHll never double-counts values re-observed across batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[Long]
-    val hll = new SketchOps.RunningHll()
-    val q = in.toDF().writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        hll.absorb(batch, col("value"))
-      }
-      .start()
-    try {
-      in.addData(1L to 500L: _*)
-      q.processAllAvailable()
-      val first = hll.estimate
-      assert(math.abs(first - 500.0) / 500.0 < 0.05)
-      in.addData(1L to 500L: _*) // pure re-observation: no growth
-      q.processAllAvailable()
-      assert(hll.estimate == first)
-      in.addData(501L to 600L: _*) // genuinely new values do count
-      q.processAllAvailable()
-      assert(math.abs(hll.estimate - 600.0) / 600.0 < 0.05)
-    } finally q.stop()
-  }
-
-  test("RunningTopK: exact running top-k across micro-batches in O(k) state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Double, Long)]
-    val topk = new SketchOps.RunningTopK(3)
-    val q = in.toDF().toDF("v", "id").writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        topk.absorb(batch, col("v"), col("id"))
-      }
-      .start()
-    try {
-      in.addData((5.0, 1L), (3.0, 2L), (9.0, 3L), (1.0, 4L))
-      q.processAllAvailable()
-      assert(topk.top == Seq((9.0, 3L), (5.0, 1L), (3.0, 2L)))
-      // later batch displaces the weakest; re-observation is idempotent
-      in.addData((7.0, 5L), (9.0, 3L), (0.5, 6L))
-      q.processAllAvailable()
-      assert(topk.top == Seq((9.0, 3L), (7.0, 5L), (5.0, 1L)))
-    } finally q.stop()
-  }
-
-  test("RunningQuantile: stream-merged sketch keeps exact n + rank bound") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rnd = new scala.util.Random(31)
-    val chunks = Seq.fill(4)(Seq.fill(5000)(rnd.nextDouble() * 1000))
-    val in = MemoryStream[Double]
-    val rq = new SketchOps.RunningQuantile(64)
-    val q = in.toDF().writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        rq.absorb(batch, col("value"))
-      }
-      .start()
-    try {
-      chunks.foreach { c => in.addData(c: _*); q.processAllAvailable() }
-      val all = chunks.flatten.sorted
-      assert(rq.count == all.length.toLong) // weight exact across batches
-      val bound = rq.bound
-      assert(bound < all.length / 4, "bound must stay non-vacuous")
-      for ((p, e) <- Seq(0.5, 0.95).zip(rq.quantiles(Seq(0.5, 0.95)))) {
-        val target = math.max(1L, math.ceil(p * all.length).toLong)
-        val lo = all.count(_ < e).toLong + 1L
-        val hi = all.count(_ <= e).toLong
-        assert(lo <= target + bound && hi >= target - bound,
-          s"phi=$p est=$e outside ±$bound of rank $target")
-      }
-    } finally q.stop()
-  }
-
-  test("bloomDecontaminateStream drops every contaminated row map-side") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val contaminated = (0L until 50L).map(_ * 3).toDF("bad")
-    val in = MemoryStream[Long]
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = SketchOps.bloomDecontaminateStream(
-        in.toDF(), col("value"), contaminated, col("bad"))
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        out.synchronized { out ++= batch.collect().map(_.getLong(0)); () }
-      }
-      .start()
-    try {
-      in.addData(0L until 150L: _*)
-      q.processAllAvailable()
-      val survivors = out.toSet
-      // no false negatives: every multiple of 3 under 150 is gone
-      assert((0L until 150L by 3L).forall(!survivors.contains(_)))
-      // at 2^20 bits / 50 keys the FP probability is ~0: all clean
-      // rows survive in this test
-      assert(survivors == (0L until 150L).filterNot(_ % 3 == 0).toSet)
-    } finally q.stop()
   }
 
   test("bloomPrunedSemiJoin is identical to the plain semi-join") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
@@ -10,14 +10,25 @@ import org.scalatest.Suite
   * sbt forks a single test JVM so suites reuse it). */
 trait SparkSessionFixture { self: Suite =>
   lazy val spark: SparkSession = SparkSessionFixture.session
+
+  /** A fresh directory under this JVM's temp root. */
+  def tempDir(prefix: String): Path = SparkSessionFixture.tempDir(prefix)
 }
 
 object SparkSessionFixture {
-  /** Managed tables go to a temp warehouse of this JVM's own, deleted
-    * at exit, not to `spark-warehouse/` under the working directory. */
-  lazy val session: SparkSession = {
-    val warehouse = Files.createTempDirectory("graft-warehouse").toFile
-    sys.addShutdownHook(FileUtils.deleteQuietly(warehouse))
-    SparkEntry.localSession(8, "spark.sql.warehouse.dir" -> warehouse.toURI.toString)
+  /** One temp root per test JVM, deleted at exit: every spec's
+    * checkpoints, sink outputs and inputs go under it, and so do
+    * managed tables (the warehouse), not `spark-warehouse/` under the
+    * working directory. */
+  private lazy val root: Path = {
+    val dir = Files.createTempDirectory("graft-test")
+    sys.addShutdownHook(FileUtils.deleteQuietly(dir.toFile))
+    dir
   }
+
+  def tempDir(prefix: String): Path = Files.createTempDirectory(root, prefix)
+
+  lazy val session: SparkSession =
+    SparkEntry.localSession(8,
+      "spark.sql.warehouse.dir" -> tempDir("warehouse").toUri.toString)
 }

@@ -10,7 +10,7 @@ import graft.sinks.WriteOps
 class WriteOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("partitioned + sorted + size-bounded parquet layout") {
-    val out = Files.createTempDirectory("writeops").toString
+    val out = tempDir("writeops").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     WriteOps.partitionedSorted(docs, out,
       partitionCols = Seq("lang"), sortCols = Seq("doc_id"),
@@ -42,7 +42,7 @@ class WriteOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("small-file compaction: fewer files, identical rows, idempotent") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compact").toString + "/t"
+    val dir = tempDir("compact").toString + "/t"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.repartition(20).write.parquet(dir) // 20 tiny files
     def parquetFiles = new java.io.File(dir).listFiles()
@@ -68,7 +68,7 @@ class WriteOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("partition-aware compaction: per-leaf rewrite, pruning and rows intact") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compactp").toString + "/t"
+    val dir = tempDir("compactp").toString + "/t"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(col("lang").isin("en", "de"))
     // many tiny files inside each partition directory (the streaming-
@@ -110,7 +110,7 @@ class WriteOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("compaction crash recovery: a parked leaf is restored, then compacted") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("compactr").toString + "/t"
+    val dir = tempDir("compactr").toString + "/t"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(col("lang").isin("en", "de"))
     docs.repartition(8).write.partitionBy("lang").parquet(dir)
@@ -130,7 +130,7 @@ class WriteOpsSpec extends AnyFunSuite with SparkSessionFixture {
     assert(stats.compacted && en.isDirectory && !parked.exists && !tmp.exists)
     assert(spark.read.parquet(dir).count() == expected)
     // a parked ROOT (flat-table crash) restores too
-    val flat = Files.createTempDirectory("compactr2").toString + "/f"
+    val flat = tempDir("compactr2").toString + "/f"
     docs.repartition(5).write.parquet(flat)
     val f = new java.io.File(flat)
     val fParked = new java.io.File(f.getParent, ".compact.old.f")
@@ -151,7 +151,7 @@ class WriteOpsSpec extends AnyFunSuite with SparkSessionFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val root = Files.createTempDirectory("streamcompact").toString
+    val root = tempDir("streamcompact").toString
     val dir = s"$root/t"
     val cp = s"$root/cp"
     val input = MemoryStream[(Long, String)]

@@ -74,7 +74,7 @@ class ZValueSpec extends AnyFunSuite with SparkSessionFixture {
     // a thin a-range but the FULL b-range; z-order bounds both
     val grid = (for (a <- 0L until 256L; b <- 0L until 256L)
       yield (a, b)).toDF("a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder").toString
     WriteOps.zOrderedParquet(grid, s"$dir/z", Seq(col("a"), col("b")),
       bits = 8, numFiles = 16)
     grid.repartitionByRange(16, col("a"), col("b"))
