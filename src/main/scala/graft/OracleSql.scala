@@ -15,7 +15,7 @@ object OracleSql {
     s"CAST(('0x' || substr(md5($e),1,15)) AS BIGINT)"
 
   /** Distinct character trigrams of lower(text) (matches
-    * DedupOps.charTrigrams: DuckDB range excludes the end, so
+    * the specs' `Oracles.charTrigrams`: DuckDB range excludes the end, so
     * range(1, len-1) == Spark sequence(1, len-2)). */
   val trigrams: String =
     "CASE WHEN len(lower(text)) >= 3 THEN " +

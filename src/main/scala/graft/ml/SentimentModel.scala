@@ -177,10 +177,6 @@ final case class SentimentModel(
     val t = math.log(threshold / (1.0 - threshold))
     if (margin(words) > t) 1.0 else 0.0
   }
-
-  /** Decode a prediction index to the original training label
-    * (StringIndexer dictionary; 0.0→"4" positive, 1.0→"0" negative). */
-  def decodeLabel(prediction: Double): String = labels(prediction.toInt)
 }
 
 object SentimentModel {
@@ -206,13 +202,13 @@ final class SentimentScorer(bc: Broadcast[SentimentModel]) extends Serializable 
     math.log(t / (1.0 - t))
   }
 
-  private def marginCol(tokens: Column, filterStops: Boolean): Column =
+  private[graft] def marginCol(tokens: Column, filterStops: Boolean): Column =
     graft.plans.SparseTfIdfMargin.margin(tokens, bc, filterStops)
 
   /** tokens → prediction in ONE margin evaluation (threshold folded
     * into the expression — see SparseTfIdfMargin.predictCutoff). Null
     * tokens → null prediction (UnaryExpression null propagation). */
-  private def predictCol(tokens: Column, filterStops: Boolean): Column =
+  private[graft] def predictCol(tokens: Column, filterStops: Boolean): Column =
     graft.plans.SparseTfIdfMargin.predict(tokens, bc, filterStops, logitThreshold)
 
   /** margin COLUMN REFERENCE → prediction with the UDF path's null
@@ -232,23 +228,9 @@ final class SentimentScorer(bc: Broadcast[SentimentModel]) extends Serializable 
     filter(tokens, t => !lower(t).isInCollection(stopSet))
   }
 
-  /** prediction → original training label through the broadcast
-    * model's StringIndexer dictionary — the column form of
-    * [[SentimentModel.decodeLabel]] (`labels(i)` for prediction i;
-    * null prediction → null label). */
-  def labelOf(prediction: Column): Column =
-    typedLit(bc.value.labels.toSeq).getItem(prediction.cast("int"))
-
   /** tokens (pre-stop-word-removal) → prediction. */
   def predictFromTokens(tokens: Column): Column =
     predictCol(tokens, filterStops = true)
-
-  /** stop-word-filtered words → prediction (M2–M5 only). */
-  def predictFromWords(words: Column): Column =
-    predictCol(words, filterStops = false)
-
-  def marginFromWords(words: Column): Column =
-    marginCol(words, filterStops = false)
 
   /** Full reference chain on a raw text column: clean → tokenize →
     * stop words → TF → IDF → LR. Adds `cleaned_data` and `prediction`. */
@@ -278,12 +260,6 @@ final class SentimentScorer(bc: Broadcast[SentimentModel]) extends Serializable 
       .withColumn("prediction", predictionOf(m))
       .drop("__margin")
   }
-
-  /** [[scoreText]] with the full transform column set. */
-  def scoreTextFull(df: DataFrame, textCol: String): DataFrame =
-    withScores(
-      df.withColumn("cleaned_data", TextOps.cleanTokens(col(textCol))),
-      "cleaned_data")
 }
 
 /** Native loader for the on-disk `PipelineModel` artifact layout

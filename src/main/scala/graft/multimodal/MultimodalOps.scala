@@ -1,13 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for a training-data pipeline: media
   * payloads travel as opaque `binary` columns with typed metadata, and
-  * decode / feature-extract / resize / frame-sample run as partition-
-  * local batch operators.
+  * decode / resize / signature passes run as partition-local batch
+  * operators.
   *
   * Spark-side design (the part that must be right at 100 TB):
   *  - media bytes NEVER pass through a shuffle: every media operator
@@ -82,110 +82,13 @@ object MultimodalOps {
       width: Option[Int], height: Option[Int], duration_ms: Option[Long],
       payload: Array[Byte])
 
-  final case class ImageFeature(
-      media_id: Long, ok: Boolean, error: String,
-      out_width: Int, out_height: Int, feature: Array[Float])
-
-  final case class AudioFeature(
-      media_id: Long, ok: Boolean, error: String,
-      sample_rate: Int, channels: Int, n_frames: Long,
-      duration_ms: Long, rms: Float)
-
-  /** Deterministic synthetic media table (the container has no real
-    * media files); payload bytes are a seeded function of media_id so
-    * every stage is reproducible and testable. */
-  def syntheticMedia(spark: SparkSession, n: Int, partitions: Int): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(0, n.toLong, 1, partitions).map { id =>
-      val rnd = new scala.util.Random(id * 7919 + 17)
-      val kind = Seq("image", "audio", "video")((id % 3).toInt)
-      val payload = Array.fill[Byte](64 + rnd.nextInt(192))(rnd.nextInt().toByte)
-      MediaRow(id, kind, s"$kind/x-synthetic",
-        Some(32 + rnd.nextInt(96)), Some(32 + rnd.nextInt(96)),
-        if (kind == "image") None else Some(1000L + rnd.nextInt(9000)),
-        payload)
-    }
-  }
-
-  /** Image decode + resize + feature-extract as a partition-local
-    * batched operator. Narrow (no shuffle); bounded batches; errors
-    * captured per row. The codec call is the stub seam. */
-  def imageFeatures(media: Dataset[MediaRow], outW: Int, outH: Int): Dataset[ImageFeature] = {
-    implicit val enc = Encoders.product[ImageFeature]
-    media.filter(_.kind == "image").mapPartitions { rows =>
-      rows.grouped(DecodeBatchSize).flatMap { batch =>
-        // real impl: hand `batch.map(_.payload)` to a vectorized codec
-        batch.map { r =>
-          MediaCodec.decodeImage(r.payload, outW, outH) match {
-            case Right(px) =>
-              ImageFeature(r.media_id, ok = true, error = null,
-                outW, outH, MediaCodec.pooledFeature(px, 8))
-            case Left(err) =>
-              ImageFeature(r.media_id, ok = false, error = err,
-                0, 0, Array.empty)
-          }
-        }
-      }
-    }
-  }
-
-  /** Audio decode + feature-extract as a partition-local batched
-    * operator — the [[imageFeatures]] twin for the audio rows. REAL
-    * for PCM WAV/AIFF via the JDK's `AudioSystem`
-    * ([[MediaCodec.decodeAudio]]); same narrow/batched/error-routed
-    * shape. Emits the stream parameters plus the clip RMS (the
-    * standard silence/clipping triage signal a crawl runs before
-    * paying for transcription). duration_ms is integer millis
-    * (frames * 1000 / rate, floor). */
-  def audioFeatures(media: Dataset[MediaRow]): Dataset[AudioFeature] = {
-    implicit val enc = Encoders.product[AudioFeature]
-    media.filter(_.kind == "audio").mapPartitions { rows =>
-      rows.grouped(DecodeBatchSize).flatMap { batch =>
-        batch.map { r =>
-          MediaCodec.decodeAudio(r.payload) match {
-            case Right(clip) =>
-              var s = 0.0
-              var i = 0
-              while (i < clip.samples.length) {
-                s += clip.samples(i).toDouble * clip.samples(i); i += 1
-              }
-              val rms =
-                if (clip.samples.isEmpty) 0f
-                else math.sqrt(s / clip.samples.length).toFloat
-              AudioFeature(r.media_id, ok = true, error = null,
-                clip.sampleRate, clip.channels, clip.frames,
-                clip.frames * 1000L / clip.sampleRate, rms)
-            case Left(err) =>
-              AudioFeature(r.media_id, ok = false, error = err,
-                0, 0, 0L, 0L, 0f)
-          }
-        }
-      }
-    }
-  }
-
-  /** Frame sampling for video rows: every `stepMs` timestamp becomes a
-    * (media_id, frame_ts_ms) row; the decode of each frame is again
-    * the stub seam. Narrow: one input row → few output rows, no
-    * payload duplication (frames reference the parent id). */
-  def sampleFrames(media: Dataset[MediaRow], stepMs: Long): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.kind == "video")
-      .flatMap { r =>
-        val dur = r.duration_ms.getOrElse(0L)
-        (0L until dur by stepMs).map(ts => (r.media_id, ts))
-      }
-      .toDF("media_id", "frame_ts_ms")
-  }
-
   final case class ImageHash(
       media_id: Long, ok: Boolean, error: String, phash: Long)
 
   /** Per-image 64-bit perceptual hash ([[MediaCodec.pHash64]]) — the
     * image near-dup SIGNATURE pass: decode + resample to dim×dim
-    * grayscale, DCT pHash. Same narrow/batched/error-routed shape as
-    * [[imageFeatures]]; payload bytes never shuffle. */
+    * grayscale, DCT pHash. Narrow (a batched `mapPartitions`, no
+    * shuffle), errors captured per row; payload bytes never shuffle. */
   def imagePHash(media: Dataset[MediaRow], dim: Int = 32): Dataset[ImageHash] = {
     implicit val enc = Encoders.product[ImageHash]
     media.filter(_.kind == "image").mapPartitions { rows =>
@@ -670,20 +573,6 @@ object MediaCodec {
       (p(0) == 0x42.toByte && p(1) == 0x4D.toByte) // bmp
     }
 
-  /** True (width, height) of a JDK-decodable image payload. */
-  def imageInfo(payload: Array[Byte]): Either[String, (Int, Int)] =
-    if (!isJdkImage(payload))
-      Left("unsupported: not a JDK-decodable image container")
-    else
-      try {
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(payload))
-        if (img == null) Left("corrupt: ImageIO could not parse container")
-        else Right((img.getWidth, img.getHeight))
-      } catch {
-        case e: Exception => Left(s"corrupt: ${e.getMessage}")
-      }
-
   /** Decode + resize an image payload to outW x outH grayscale pixels
     * in [0, 1]. PNG/JPEG/GIF/BMP payloads take the REAL path
     * (ImageIO decode, grayscale raster resample — headless-safe, no
@@ -830,19 +719,5 @@ object MediaCodec {
       t += 1
     }
     h
-  }
-
-  /** Average-pool a pixel grid down to an 8x8-ish feature vector. */
-  def pooledFeature(px: Array[Float], gridDim: Int): Array[Float] = {
-    val n = px.length
-    val cell = math.max(1, n / (gridDim * gridDim))
-    Array.tabulate(math.min(gridDim * gridDim, n)) { i =>
-      val from = i * cell
-      val until = math.min(from + cell, n)
-      var s = 0.0f
-      var j = from
-      while (j < until) { s += px(j); j += 1 }
-      s / (until - from)
-    }
   }
 }

@@ -1241,14 +1241,6 @@ object CorpusOps {
         .as("pii_chars"))
   }
 
-  /** [[piiScanCols]] as a per-document table: (id, n_email, n_ipv4,
-    * n_phone, pii_chars, has_pii). Stateless narrow projection — the
-    * SAME operator runs unchanged on a streaming frame. */
-  def piiScan(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol) +: piiScanCols(col(textCol)): _*)
-      .withColumn("has_pii",
-        (col("n_email") + col("n_ipv4") + col("n_phone") > 0L).cast("long"))
-
   /** Zipf's-law slope of the corpus term-frequency distribution: the
     * OLS fit of ln(freq) against ln(rank) over the top `limit`
     * occurrence-frequency terms (rank 1 = most frequent; ties on
@@ -1302,6 +1294,16 @@ object CorpusOps {
           .as("neg_slope_mu"))
   }
 
+  /** Per-word symbol counts after `nMerges` merges: (w, n_syms) —
+    * the vocabulary-sized table t19 joins back onto the corpus for
+    * the tokenizer-fertility readout. */
+  def bpeWordSymCounts(docs: DataFrame, tokens: Column, nMerges: Int): DataFrame = {
+    val Sep = "\u001f"
+    bpeFitCore(docs, tokens, nMerges)._2
+      .select(col("w"),
+        size(split(col("ws"), Sep + Sep)).cast("long").as("n_syms"))
+  }
+
   /** BPE encoding census: fit `nMerges` merges (same loop as
     * [[bpeFit]]), apply them to the whole vocabulary, and return the
     * encoded corpus's symbol-unigram table (sym, cnt) — how much of
@@ -1316,16 +1318,6 @@ object CorpusOps {
     * corpus is touched once, in the word-frequency agg). Output is
     * bounded by |alphabet| + nMerges symbols.
     */
-  /** Per-word symbol counts after `nMerges` merges: (w, n_syms) —
-    * the vocabulary-sized table t19 joins back onto the corpus for
-    * the tokenizer-fertility readout. */
-  def bpeWordSymCounts(docs: DataFrame, tokens: Column, nMerges: Int): DataFrame = {
-    val Sep = "\u001f"
-    bpeFitCore(docs, tokens, nMerges)._2
-      .select(col("w"),
-        size(split(col("ws"), Sep + Sep)).cast("long").as("n_syms"))
-  }
-
   def bpeEncode(docs: DataFrame, tokens: Column, nMerges: Int): DataFrame = {
     val Sep = "\u001f"
     bpeFitCore(docs, tokens, nMerges)._2

@@ -30,41 +30,11 @@ object DedupOps {
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** Distinct character trigrams of a (lowercased) string column.
-    * Guarded for len < 3 (Spark's sequence(1,0) would step -1). */
-  def charTrigrams(c: Column): Column = {
-    val lc = lower(c)
-    array_distinct(
-      when(length(lc) >= 3,
-        transform(sequence(lit(1), length(lc) - 2),
-          i => substring(lc, i, lit(3))))
-        .otherwise(array().cast("array<string>")))
-  }
-
-  /** MinHash signature (length [[DetParams.MinhashK]]) over a distinct
-    * shingle array: sig_i = min over shingles of (a_i*h32(s)+b_i) mod P.
-    *
-    * NOTE: as a single Column this embeds the md5-hashing subtree in
-    * every one of the K slots — Catalyst duplicates it K times. Use
-    * [[withMinhashSignature]] (staged projections) on any hot path so
-    * each shingle is md5-hashed exactly once. */
-  def minhashSignature(shingles: Column): Column = {
-    val hs = transform(shingles, s => md5Hash32(s))
-    minhashFromHashes(hs)
-  }
-
-  /** K affine-map minima over an already-hashed shingle array —
-    * built-in HOF spelling (K interpreted `array_min(transform(...))`
-    * passes). Kept as the value-parity oracle for the codegen
-    * [[graft.plans.MinHashSignature]]; hot paths use the latter. */
-  def minhashFromHashes(hs: Column): Column =
-    array((0 until MinhashK).map { i =>
-      array_min(transform(hs,
-        h => pmod(h * minhashA(i) + minhashB(i), lit(MinhashP))))
-    }: _*)
-
-  /** (idCol, sig) with the expensive steps staged across separate
-    * projections: trigrams → md5 hashes → K minima. CollapseProject
+  /** (idCol, sig): the MinHash signature (length
+    * [[DetParams.MinhashK]]) over a document's distinct character
+    * trigrams, sig_i = min over shingles of (a_i*h32(s)+b_i) mod P,
+    * with the expensive steps staged across separate projections:
+    * trigrams → md5 hashes → K minima. CollapseProject
     * keeps multi-referenced non-trivial aliases materialized, so the
     * md5 pass runs once per document; both hashing and signature are
     * one-primitive-loop codegen expressions
@@ -98,34 +68,13 @@ object DedupOps {
     }
   }
 
-  /** 60-bit SimHash over a token array (duplicates = tf weighting):
-    * bit b of the fingerprint is set iff
-    * sum over tokens of (bit b of h60(token) ? +1 : -1) > 0.
-    * Pure narrow expression — no shuffle, one corpus pass.
-    *
-    * NOTE: as a single Column this embeds the token-hashing subtree in
-    * all 60 bit terms (Catalyst duplicates it 60x). Hot paths must use
-    * [[withSimhash]], which stages tokens → hashes → bits across
-    * projections so hashing runs once. */
-  def simhash60(tokens: Column): Column =
-    simhashFromHashes(transform(tokens, t => md5Hash60(t)))
-
-  /** The 60 bit terms over an already-hashed token array column —
-    * built-in HOF spelling (60 interpreted `aggregate` passes). Kept
-    * as the value-parity oracle for the codegen
-    * [[graft.plans.SimHash60]]; hot paths use the latter. */
-  def simhashFromHashes(hs: Column): Column = {
-    val bits = (0 until 60).map { b =>
-      val bitsum = aggregate(hs, lit(0L),
-        (acc, h) => acc + (shiftright(h, b).bitwiseAND(lit(1L)) * 2 - 1))
-      when(bitsum > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
-  /** (idCol, simhash) with tokenization and hashing staged across
-    * projections so each runs once per document; the 60-bit
-    * fingerprint is the one-pass codegen [[graft.plans.SimHash60]]. */
+  /** (idCol, simhash): the 60-bit SimHash over a token array
+    * (duplicates = tf weighting) — bit b is set iff the sum over tokens
+    * of (bit b of h60(token) ? +1 : -1) is > 0. Tokenization and
+    * hashing are staged across projections so each runs once per
+    * document; the fingerprint is the one-pass codegen
+    * [[graft.plans.SimHash60]]. Pure narrow expression — no shuffle,
+    * one corpus pass. */
   def withSimhash(df: DataFrame, idCol: String, tokens: Column): DataFrame =
     df.select(col(idCol), tokens.as("__toks"))
       .select(col(idCol), transform(col("__toks"), t => md5Hash60(t)).as("__hs"))
@@ -167,30 +116,9 @@ object DedupOps {
     * h(w) = sum w[j]*B^(7-j) mod P (B=257, P=1e9+7). Narrow one-pass;
     * null for texts shorter than the window. Routed through the
     * codegen'd O(len) rolling expression
-    * ([[graft.plans.RollingHashMin]]); [[rollingFingerprintHof]] is
-    * the value-identical built-in spelling kept as its oracle. */
+    * ([[graft.plans.RollingHashMin]]). */
   def rollingFingerprint(text: Column): Column =
     graft.plans.RollingHashMin(text)
-
-  /** The same fingerprint via built-in higher-order functions
-    * (O(window*len), interpreted) — cross-check oracle for the
-    * codegen expression. */
-  def rollingFingerprintHof(text: Column): Column = {
-    val B = 257L
-    val P = 1000000007L
-    when(length(text) >= 8,
-      array_min(transform(sequence(lit(1), length(text) - 7), i =>
-        aggregate(
-          transform(sequence(lit(0), lit(7)),
-            j => ascii(substring(text, i + j, lit(1))).cast("long")),
-          lit(0L), (acc, x) => pmod(acc * B + x, lit(P))))))
-      .otherwise(lit(null).cast("long"))
-  }
-
-  /** Jaccard similarity of two distinct-element array columns. */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b))
 
   /** Full near-duplicate pipeline: MinHash-LSH candidate pairs →
     * exact trigram-Jaccard verify at `threshold`. The trigram table is
@@ -1041,71 +969,20 @@ object DedupOps {
     * writer run it per micro-batch (d31 is its batch face).
     *
     * 100 TB shape: identical to d27's — the base gram set is one
-    * distinct projection (at scale the persisted/bucketed gram index
-    * [[buildGramIndex]] writes once and
-    * [[exactSubstringSpansVsIndex]] reads every batch), the delta
-    * side explodes only the arriving batch, and the join is a
-    * semi-join on the 16-byte binary key. Per-batch cost is O(batch
+    * distinct projection, the delta side explodes only the arriving
+    * batch, and the join is a semi-join on the 16-byte binary key.
+    * The semi-join is skew-safe: a hot boilerplate gram in the
+    * ARRIVING batch is join-side skew (AQE splits it), and the
+    * gram-set side carries one row per gh. Per-batch cost is O(batch
     * grams), never O(base). */
   def exactSubstringSpansVsBase(delta: DataFrame, base: DataFrame,
                                 idCol: String, deltaTokens: Column,
-                                baseTokens: Column, window: Int): DataFrame =
-    spansVsGramSet(delta, idCol, deltaTokens,
-      baseGramSet(base, idCol, baseTokens, window), window)
-
-  /** The distinct base gram set behind [[exactSubstringSpansVsBase]]
-    * — (gh) only, occurrence counts are irrelevant to admission,
-    * presence is. At test scale this is recomputed per call; at scale
-    * it is built ONCE into a bucketed index by [[buildGramIndex]] and
-    * served back through [[exactSubstringSpansVsIndex]]. */
-  def baseGramSet(base: DataFrame, idCol: String, tokens: Column,
-                  window: Int): DataFrame = {
-    require(window >= 2, "window must be >= 2 tokens")
-    substringGramTable(base, idCol, tokens, window)
-      .select(col("gh")).distinct()
-  }
-
-  /** Materialize the base gram set as a BUCKETED catalog table — the
-    * d14 signature-index discipline applied to the span family
-    * (r14 verdict item 7): the base corpus' gram explode + distinct
-    * is paid ONCE at build time, and the bucket-by-gh layout means
-    * every subsequent admission batch's semi-join exchanges ONLY the
-    * arriving batch's grams (the index side reads pre-bucketed,
-    * pre-sorted files — no exchange, no sort). Per-batch cost is
-    * O(batch grams) against a 100 TB base, with the base never
-    * re-exploded. Rebuild cadence is a corpus-governance decision
-    * (the d14 scaladoc's delta-fold discipline applies unchanged). */
-  def buildGramIndex(base: DataFrame, idCol: String, tokens: Column,
-                     window: Int, table: String,
-                     numBuckets: Int = 32): Unit =
-    graft.sinks.WriteOps.bucketedTable(
-      baseGramSet(base, idCol, tokens, window),
-      table, Seq("gh"), Seq("gh"), numBuckets)
-
-  /** [[exactSubstringSpansVsBase]] fed from a PERSISTED gram index
-    * (a table written by [[buildGramIndex]], or any DataFrame with a
-    * distinct binary `gh` column) instead of re-exploding the base —
-    * the at-scale admission path. Result-identical to the
-    * recompute-fed operator over the same base snapshot
-    * (GramIndexSpec pins it). */
-  def exactSubstringSpansVsIndex(delta: DataFrame, gramIndex: DataFrame,
-                                 idCol: String, deltaTokens: Column,
-                                 window: Int): DataFrame =
-    spansVsGramSet(delta, idCol, deltaTokens, gramIndex, window)
-
-  /** Shared tail of the vs-base/vs-index admission faces: delta grams
-    * semi-joined against a duplicated-gram SET (column `gh`), maximal
-    * islands merged per doc. The semi-join is skew-safe: a hot
-    * boilerplate gram in the ARRIVING batch is join-side skew (AQE
-    * splits it), and the gram-set side carries one row per gh. */
-  private def spansVsGramSet(delta: DataFrame, idCol: String,
-                             deltaTokens: Column, gramSet: DataFrame,
-                             window: Int): DataFrame = {
+                                baseTokens: Column, window: Int): DataFrame = {
     require(window >= 2, "window must be >= 2 tokens")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     substringGramTable(delta, idCol, deltaTokens, window)
-      .join(gramSet.select(col("gh")), Seq("gh"), "left_semi")
+      .join(baseGramSet(base, idCol, baseTokens, window), Seq("gh"), "left_semi")
       .select(col("doc_id"), col("pos"))
       .withColumn("isl", col("pos") - row_number().over(w))
       .groupBy(col("doc_id"), col("isl"))
@@ -1116,6 +993,16 @@ object DedupOps {
           .as("span_tokens"))
       .select(col("doc_id"), col("span_start"), col("span_end"),
         col("span_tokens"))
+  }
+
+  /** The distinct base gram set behind [[exactSubstringSpansVsBase]]
+    * — (gh) only, occurrence counts are irrelevant to admission,
+    * presence is. */
+  def baseGramSet(base: DataFrame, idCol: String, tokens: Column,
+                  window: Int): DataFrame = {
+    require(window >= 2, "window must be >= 2 tokens")
+    substringGramTable(base, idCol, tokens, window)
+      .select(col("gh")).distinct()
   }
 
   /** ACTION face of [[exactSubstringSpansVsBase]] — the d32 strip
@@ -1137,15 +1024,6 @@ object DedupOps {
     stripAccounting(delta, idCol, deltaTokens,
       exactSubstringSpansVsBase(delta, base, idCol, deltaTokens,
         baseTokens, window))
-
-  /** [[exactSubstringStripVsBase]] fed from a persisted gram index
-    * (see [[buildGramIndex]]) — the at-scale ingestion-strip path. */
-  def exactSubstringStripVsIndex(delta: DataFrame, gramIndex: DataFrame,
-                                 idCol: String, deltaTokens: Column,
-                                 window: Int): DataFrame =
-    stripAccounting(delta, idCol, deltaTokens,
-      exactSubstringSpansVsIndex(delta, gramIndex, idCol, deltaTokens,
-        window))
 
   /** Per-doc strip accounting over a (doc_id, span_start, span_end,
     * span_tokens) span table where EVERY span strips: span count from

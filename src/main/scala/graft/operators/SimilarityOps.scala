@@ -26,18 +26,10 @@ object SimilarityOps {
 
   /** Double-precision dot product of two array<float/double> columns,
     * left-to-right accumulation — the codegen'd custom expression
-    * ([[graft.plans.VectorDotProduct]]). Bit-identical to [[dotHof]]. */
+    * ([[graft.plans.VectorDotProduct]]). Bit-identical to the
+    * `aggregate(zip_with(a, b, _ * _), 0.0, _ + _)` spelling. */
   def dotD(a: Column, b: Column): Column =
     graft.plans.VectorDotProduct.dot(a, b)
-
-  /** The same dot product spelled with built-in higher-order
-    * functions (interpreted). Kept as the cross-check oracle for the
-    * codegen expression and for environments that reject custom
-    * expressions. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Cosine similarity (double). */
   def cosine(a: Column, b: Column): Column =
@@ -253,19 +245,10 @@ object SimilarityOps {
     * reproducible (and DuckDB-oracle-checkable). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               embCol: String, numCentroids: Int, probes: Int, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val cents = broadcast(corpus.filter(col(idCol) < numCentroids)
       .select(col(idCol).as("c_id"), col(embCol).as("c_emb"))
       .withColumn("c_nrm", l2norm(col("c_emb"))))
-    ivfTopKImpl(corpus, queries, idCol, embCol, cents, probes, k)
-  }
-
-  /** Shared IVF probe path: assign corpus and query vectors to their
-    * nearest cells against the broadcast `cents` (c_id, c_emb, c_nrm),
-    * join on cell, exact cosine + per-query top-k on candidates. */
-  private def ivfTopKImpl(corpus: DataFrame, queries: DataFrame,
-                          idCol: String, embCol: String, cents: DataFrame,
-                          probes: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
 
     def cellsFor(df: DataFrame, id: String, emb: String, nrm: String, keep: Int) = {
       val w = Window.partitionBy(col(id)).orderBy(col("csim").desc, col("c_id"))
@@ -298,67 +281,6 @@ object SimilarityOps {
           (col("q_nrm") * col("c_vnrm")), 6).as("sim"))
       .distinct()
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
-
-  /** Deterministic distributed Lloyd's k-means — the learned coarse
-    * quantizer for IVF ([[ivfTopK]]'s doc notes it as the real-world
-    * upgrade over the fixed quantizer).
-    *
-    * Scale shape: each iteration is one broadcast-centroid assignment
-    * pass over the corpus (n×k dots, narrow) plus a per-(cell, dim)
-    * partial-sum shuffle whose output is exactly k×dim rows; only the
-    * k×dim centroid matrix ever reaches the driver. Determinism, by
-    * construction, independent of partitioning and cluster size:
-    * seeds = the k vectors with the smallest (md5-hash of id, id);
-    * assignment ties break on lowest centroid id; per-dimension means
-    * are DECIMAL-exact sums (order-independent) divided once. */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, embCol: String,
-                      k: Int, iters: Int): Array[Array[Double]] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val seeds: Array[Array[Double]] = corpus
-      .select(col(idCol), col(embCol).cast("array<double>").as("e"),
-        DedupOps.md5Hash32(col(idCol).cast("string")).as("h"))
-      .orderBy(col("h"), col(idCol))
-      .limit(k)
-      .select(col("e")).as[Array[Double]].collect()
-
-    var cents = seeds
-    var it = 0
-    while (it < iters) {
-      val centsDf = broadcast(
-        cents.zipWithIndex.map { case (e, i) => (i, e) }.toSeq
-          .toDF("c_id", "c_emb")
-          .withColumn("c_nrm", l2norm(col("c_emb"))))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(idCol)).orderBy(col("csim").desc, col("c_id"))
-      val assigned = corpus
-        .select(col(idCol), col(embCol).cast("array<double>").as("e"))
-        .withColumn("nrm", l2norm(col("e")))
-        .join(centsDf)
-        .select(col(idCol), col("e"), col("c_id"),
-          round(dotD(col("e"), col("c_emb")) /
-            (col("nrm") * col("c_nrm")), 6).as("csim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-      // per-dimension DECIMAL-exact partial sums: shuffle carries only
-      // (cell, dim) keys; result is k×dim rows
-      val sums = assigned
-        .select(col("c_id"), posexplode(col("e")).as(Seq("dim", "v")))
-        .groupBy(col("c_id"), col("dim"))
-        .agg(sum(col("v").cast("decimal(28,12)")).as("s"),
-          count(lit(1)).as("n"))
-        .select(col("c_id"), col("dim"),
-          (col("s") / col("n")).cast("double").as("m"))
-        .collect()
-      val next = cents.map(_.clone()) // empty cells keep their centroid
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-      }
-      cents = next
-      it += 1
-    }
-    cents
   }
 
   /** IVF probe-budget sweep — the nprobe tuning table an operator
@@ -436,21 +358,6 @@ object SimilarityOps {
         col("q_id"),
         coalesce(col("__h"), lit(0L)).as("n_hit"))
       .withColumn("recall_mu", expr(s"(1000000 * n_hit) div $k"))
-  }
-
-  /** [[ivfTopK]] with caller-provided (e.g. k-means-learned) centroids
-    * instead of the deterministic corpus-prefix quantizer. */
-  def ivfTopKWithCentroids(corpus: DataFrame, queries: DataFrame,
-                           idCol: String, embCol: String,
-                           centroids: Array[Array[Double]],
-                           probes: Int, k: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = broadcast(
-      centroids.zipWithIndex.map { case (e, i) => (i, e) }.toSeq
-        .toDF("c_id", "c_emb")
-        .withColumn("c_nrm", l2norm(col("c_emb"))))
-    ivfTopKImpl(corpus, queries, idCol, embCol, cents, probes, k)
   }
 
   /** Product-quantization ANN (Jégou et al., "Product Quantization
@@ -625,9 +532,8 @@ object SimilarityOps {
     * near-duplicates at `minCos`, keep the min-id representative of
     * each dup group.
     *
-    * 100 TB shape: the quantizer is broadcast (corpus-prefix cells
-    * here, [[kmeansCentroids]] as the learned upgrade — same contract
-    * as [[ivfTopK]]); assignment is one narrow n×C pass; the pairwise
+    * 100 TB shape: the quantizer is broadcast (corpus-prefix cells,
+    * the same contract as [[ivfTopK]]); assignment is one narrow n×C pass; the pairwise
     * cosine runs ONLY within a cell (cell-keyed self-join with
     * `shuffle_hash` exchange reuse, never corpus-wide all-pairs) —
     * the explicit capacity/recall trade SemDeDup makes: cross-cell

@@ -53,23 +53,6 @@ object SketchOps {
       .toDF("w", "est_count")
   }
 
-  /** Per-group distinct-count estimate via the built-in DataSketches
-    * HLL aggregate — the UNBOUNDED-domain companion to
-    * [[graft.plans.BitmapDistinctCount]] (which is exact but needs a
-    * dense bounded id domain). State is 2^lgK registers per group
-    * regardless of cardinality; merges are register-wise max, so the
-    * estimate is a function of the coupon/register SET — identical on
-    * any partitioning or merge order (deterministic, unlike
-    * sample-based estimators). Relative error ~1.04/sqrt(2^lgK)
-    * (~0.8% at the default lgK 14). Returns (groupCol,
-    * n_distinct_est BIGINT — hll_sketch_estimate's rounded value). */
-  def hllDistinct(df: DataFrame, groupCol: String, value: Column,
-                  lgK: Int = 14): DataFrame =
-    df.select(col(groupCol), value.as("__hll_v"))
-      .groupBy(col(groupCol))
-      .agg(expr(s"hll_sketch_estimate(hll_sketch_agg(__hll_v, $lgK))")
-        .as("n_distinct_est"))
-
   /** Exact semi-join of `fact` to the key set of `dim`, pre-pruned by
     * a broadcast Bloom bitmap — the runtime-filter pattern spelled as
     * a library operator.

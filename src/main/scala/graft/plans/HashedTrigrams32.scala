@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * window, md5-prefix-hash each trigram, keep first-seen-order distinct
   * hashes. Value-identical to the staged built-in spelling
   * `array_distinct(Md5Hash32Array(charTrigrams(text)))`
-  * ([[graft.operators.DedupOps.charTrigrams]]), which is kept as its
+  * (`graft.Oracles.charTrigrams` in the specs), which is kept as its
   * oracle — dedup by hash equals distinct-trigrams-then-distinct-hashes
   * because equal trigrams always hash equal and colliding trigrams
   * collapse to one entry either way.

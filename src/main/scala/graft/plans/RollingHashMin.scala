@@ -11,8 +11,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Codegen'd winnowing fingerprint: minimum over all 8-codepoint
   * windows of the polynomial hash h(w) = fold((acc*B + c) mod P)
   * with B=257, P=1e9+7 — value-identical to
-  * [[graft.operators.DedupOps.rollingFingerprintHof]] (the
-  * HOF spelling) and to the DuckDB oracle, but O(len) via the true
+  * `graft.Oracles.rollingFingerprintHof` (the specs' HOF
+  * spelling) and to the DuckDB oracle, but O(len) via the true
   * rolling update h' = (h - c_lead*B^7)*B + c_new (mod P) in a
   * primitive loop instead of O(window*len) interpreted lambdas.
   * Null for texts shorter than the window. */

@@ -17,7 +17,7 @@ import graft.operators.DetParams
   * affine maps in [[graft.operators.DetParams]].
   *
   * Why: the built-in spelling
-  * ([[graft.operators.DedupOps.minhashFromHashes]], kept as this
+  * (`graft.Oracles.minhashFromHashes` in the specs, kept as this
   * expression's value-parity oracle) evaluates K interpreted
   * `array_min(transform(...))` passes per document — K full walks of
   * the shingle array through non-codegen HOF eval. This expression
@@ -126,7 +126,7 @@ object MinHashHelper {
   * strictly more elements have bit b set than clear.
   *
   * Why: the built-in spelling
-  * ([[graft.operators.DedupOps.simhashFromHashes]], kept as this
+  * (`graft.Oracles.simhashFromHashes` in the specs, kept as this
   * expression's value-parity oracle) evaluates 60 interpreted
   * `aggregate(...)` passes per document. This expression makes ONE
   * primitive pass maintaining 60 bit counters. It is the inner loop

@@ -10,30 +10,9 @@ import org.apache.spark.sql.functions.col
   *  - sort within partitions on the columns downstream joins/groups
   *    key on (parquet min/max row-group stats then skip pages);
   *  - bound file sizes so a skewed partition writes many parallel
-  *    files instead of one task-killing giant;
-  *  - bucket repeatedly-joined tables so the join shuffle is paid once
-  *    at write time.
+  *    files instead of one task-killing giant.
   */
 object WriteOps {
-
-  /** Write `df` as a bucketed + sorted managed table: rows are hash-
-    * bucketed on `bucketCols` into `numBuckets` files per partition
-    * and sorted within each bucket. Two tables bucketed the same way
-    * join/aggregate on the bucket columns with NO exchange — the
-    * shuffle is paid once at write time and amortized over every
-    * subsequent join, the core co-location technique for repeatedly-
-    * joined 100 TB fact tables. (Bucket metadata lives in the session
-    * catalog, so this writes via `saveAsTable`.) */
-  def bucketedTable(df: DataFrame, table: String,
-                    bucketCols: Seq[String], sortCols: Seq[String],
-                    numBuckets: Int): Unit =
-    df.repartition(numBuckets, bucketCols.map(col): _*)
-      .write
-      .mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Write parquet partitioned by `partitionCols`, rows sorted within
     * each output task by `sortCols`, at most `maxRecordsPerFile` rows
@@ -80,155 +59,4 @@ object WriteOps {
     df.repartitionByRange(numFiles, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
       .write.mode("overwrite").parquet(path)
-
-  /** Write parquet clustered in Morton (z-) order over `dims` — the
-    * multi-column data-skipping layout: `repartitionByRange` + in-task
-    * sort on the interleaved key ([[graft.plans.ZValue]]) places rows
-    * close in EVERY dimension into the same files, so parquet min/max
-    * stats prune reads filtered on ANY dim combination, where
-    * [[partitionedSorted]]'s lexicographic sort only serves its leading
-    * column. `dims` are pre-binned long columns in `[0, 2^bits)` —
-    * bin width is a domain decision the caller owns.
-    *
-    * 100 TB shape: one range exchange on the z key (sampled bounds,
-    * `numFiles` balanced output tasks) + per-task sort; the z key
-    * itself is a codegen'd narrow expression and is dropped before
-    * writing, so the layout costs nothing in the files themselves. */
-  def zOrderedParquet(df: DataFrame, path: String,
-                      dims: Seq[org.apache.spark.sql.Column],
-                      bits: Int, numFiles: Int): Unit = {
-    df.withColumn("__z", graft.plans.ZValue.of(bits, dims: _*))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write
-      .mode("overwrite")
-      .parquet(path)
-  }
-
-  /** Small-file compaction report. */
-  final case class CompactStats(filesBefore: Int, filesAfter: Int,
-                                bytes: Long, compacted: Boolean)
-
-  /** Bin-pack a parquet table's small files into ~`targetBytes`
-    * outputs — the table-maintenance job every streaming sink needs
-    * at scale: micro-batch appends (S5-S7) accrete one-file-per-batch
-    * layouts whose per-file open/footer cost eventually dominates
-    * every downstream scan. PARTITION-AWARE (round 8): the walk finds
-    * every leaf directory holding parquet files — a flat table is its
-    * own single leaf; a `partitionBy` layout yields one leaf per
-    * partition directory — and compacts each leaf independently, so
-    * partition columns, directory names, and partition pruning are
-    * untouched (leaf files never contain the partition columns; the
-    * rewrite reads and writes only the leaf). Per leaf it rewrites
-    * ONLY when it would help (2+ files under half the target), into
-    * ceil(totalBytes/targetBytes) outputs via a round-robin
-    * repartition (pure size balancing — no key skew risk), and swaps
-    * per-rename: write to a dot-hidden sibling (`.compact.tmp.<leaf>`,
-    * invisible to concurrent readers), move the old leaf aside to
-    * `.compact.old.<leaf>`, move the new one in, delete the old.
-    *
-    * Crash honesty (r7 advice): a crash BETWEEN the two renames
-    * leaves no directory at the leaf path (its data parked at
-    * `.compact.old.<leaf>`). Recovery is built in, not manual: every
-    * walked directory first heals orphans — a parked `.compact.old.X`
-    * with no live `X` is renamed back, a leftover tmp (incomplete
-    * write) or already-swapped old is deleted — so a re-run after any
-    * crash point restores a complete consistent leaf before
-    * compacting it. Idempotent: a second run reports
-    * `compacted = false` and touches nothing.
-    *
-    * 100 TB shape: one narrow scan→write job per qualifying leaf (no
-    * shuffle beyond the size-balancing round-robin exchange); at
-    * cluster scale you run leaves under a partition-granularity lock,
-    * exactly like open-source table formats' OPTIMIZE. Stats are
-    * summed over all leaves. */
-  def compactSmallFiles(spark: org.apache.spark.sql.SparkSession,
-                        path: String, targetBytes: Long): CompactStats = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a parked ROOT (crash between the flat-case renames): restore it
-    // before walking — only the root's own parked names are touched,
-    // not sibling tables that may be mid-compaction themselves
-    val rootParked = new Path(root.getParent, s".compact.old.${root.getName}")
-    val rootTmp = new Path(root.getParent, s".compact.tmp.${root.getName}")
-    if (!fs.exists(root)) {
-      if (fs.exists(rootParked))
-        require(fs.rename(rootParked, root),
-          s"compact: could not restore $rootParked")
-      else return CompactStats(0, 0, 0L, compacted = false)
-    } else {
-      // root LIVE but parked siblings remain: a crash landed after the
-      // swap completed (old not yet deleted) or before the first
-      // rename (tmp written, never swapped) — both are stale; without
-      // this sweep the next swap's rename(root, old) would hit an
-      // EXISTING old dir with filesystem-dependent nest/merge results
-      fs.delete(rootParked, true)
-    }
-    fs.delete(rootTmp, true)
-
-    def heal(dir: Path): Unit =
-      fs.listStatus(dir).filter(_.isDirectory).foreach { s =>
-        val n = s.getPath.getName
-        if (n.startsWith(".compact.old.")) {
-          val target = new Path(dir, n.stripPrefix(".compact.old."))
-          if (!fs.exists(target))
-            require(fs.rename(s.getPath, target),
-              s"compact: could not restore ${s.getPath}")
-          else fs.delete(s.getPath, true) // swap completed; old is stale
-        } else if (n.startsWith(".compact.tmp."))
-          fs.delete(s.getPath, true) // incomplete write, never visible
-      }
-
-    def leaves(dir: Path): Seq[Path] = {
-      heal(dir)
-      val st = fs.listStatus(dir)
-      val subs = st.filter(s => s.isDirectory &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      val hasParquet =
-        st.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      // a MIXED dir (direct parquet files AND visible subdirs) is not
-      // compactable at its own level: the dir-rename swap would move
-      // the whole subtree aside and the flat rewrite would drop the
-      // nested data. No WriteOps writer produces that shape; skip the
-      // direct files, still compact the subtree. (Hidden dirs like
-      // _spark_metadata don't make a dir mixed.)
-      val self = if (hasParquet && subs.isEmpty) Seq(dir) else Seq.empty
-      self ++ subs.flatMap(s => leaves(s.getPath))
-    }
-
-    val stats = leaves(root).map(compactLeaf(spark, fs, _, targetBytes))
-    CompactStats(
-      stats.map(_.filesBefore).sum, stats.map(_.filesAfter).sum,
-      stats.map(_.bytes).sum, stats.exists(_.compacted))
-  }
-
-  /** One leaf directory's rewrite-and-swap (see [[compactSmallFiles]]).
-    * The caller has already healed crash orphans for this leaf. */
-  private def compactLeaf(spark: org.apache.spark.sql.SparkSession,
-                          fs: org.apache.hadoop.fs.FileSystem,
-                          dir: org.apache.hadoop.fs.Path,
-                          targetBytes: Long): CompactStats = {
-    import org.apache.hadoop.fs.Path
-    val files = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val total = files.map(_.getLen).sum
-    val small = files.count(_.getLen < targetBytes / 2)
-    if (files.length < 2 || small < 2)
-      return CompactStats(files.length, files.length, total, compacted = false)
-    val outFiles = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    val tmp = new Path(dir.getParent, s".compact.tmp.${dir.getName}")
-    val old = new Path(dir.getParent, s".compact.old.${dir.getName}")
-    spark.read.parquet(dir.toString)
-      .repartition(outFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(dir, old), s"compact: could not move $dir aside")
-    require(fs.rename(tmp, dir), s"compact: could not move new dir in")
-    fs.delete(old, true)
-    val after = fs.listStatus(dir)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    CompactStats(files.length, after, total, compacted = true)
-  }
 }

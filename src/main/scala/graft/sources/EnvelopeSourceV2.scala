@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, StringStartsWith}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -28,16 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - column pruning pushes into the reader
   *    (`SupportsPushDownRequiredColumns`): `select(value)` never
   *    materializes the metadata column and vice versa;
-  *  - predicates on the `file` metadata column push into PLANNING
-  *    (`SupportsPushDownFilters`): equality / IN / prefix filters
-  *    prune whole input partitions before any task launches — the
-  *    file-feed analog of Kafka partition pruning and parquet
-  *    partition-directory pruning. Pruning is conservative: every
-  *    filter is also returned as residual, so Spark re-applies it and
-  *    an unpushable shape costs correctness nothing;
-  *  - LIMIT pushes into the reader (`SupportsPushDownLimit`, partial):
-  *    each file reader stops after n lines instead of scanning to EOF,
-  *    and Spark's global limit finishes — the parquet-reader contract;
+  *  - a global COUNT(*) answers from per-file line counts
+  *    (`SupportsPushDownAggregates`);
   *  - readers stream lines, never buffering a file in memory;
   *  - `readStream.format("graft-envelope")` runs the same scan as a
   *    micro-batch stream (`MicroBatchStream`): offsets are explicit
@@ -79,32 +71,20 @@ private[sources] class EnvelopeTable(path: String) extends Table with SupportsRe
 
 private[sources] class EnvelopeScanBuilder(path: String)
   extends ScanBuilder with SupportsPushDownRequiredColumns
-  with SupportsPushDownFilters with SupportsPushDownAggregates
-  with SupportsPushDownLimit {
+  with SupportsPushDownAggregates {
 
   private var required: StructType = EnvelopeSourceV2.Schema
-  private var pushed: Array[Filter] = Array.empty
   private var countPushed = false
-  private var limit: Option[Int] = None
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(EnvelopeScan.isPrunableFileFilter)
-    // everything stays residual: pruning is an optimization, Spark
-    // keeps evaluating the full predicate above the scan
-    filters
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
 
   /** Global COUNT(*) answers from per-file line counts without ever
     * materializing a row. Partial pushdown: each partition returns
     * its count and Spark's final aggregate sums them — so multi-file
     * parallelism is kept. (Spark only offers an aggregate for
-    * pushdown when every filter was fully consumed by the source, so
-    * this never bypasses a residual predicate.) */
+    * pushdown when no filter sits above the scan, so this never
+    * bypasses a predicate.) */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     val onlyCountStar = aggregation.groupByExpressions.isEmpty &&
       aggregation.aggregateExpressions.length == 1 &&
@@ -116,20 +96,9 @@ private[sources] class EnvelopeScanBuilder(path: String)
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     false // partial: per-partition counts, summed by Spark's final agg
 
-  /** LIMIT n stops each file reader after n lines instead of scanning
-    * to EOF (Spark only offers the limit when no residual filter sits
-    * between scan and limit, so truncation is always sound). Partial
-    * push — the default `isPartiallyPushed` stays true: every
-    * partition may emit up to n rows and Spark's own global limit
-    * finishes the job, exactly the parquet-reader contract. */
-  override def pushLimit(l: Int): Boolean = {
-    limit = Some(l)
-    true
-  }
-
   override def build(): Scan =
     if (countPushed) new EnvelopeCountScan(path) else
-      new EnvelopeScan(path, required, pushed, limit)
+      new EnvelopeScan(path, required)
 }
 
 /** COUNT(*)-pushed scan: one long per file (its line count). */
@@ -163,37 +132,13 @@ private[sources] class EnvelopeCountScan(path: String) extends Scan with Batch {
     }
 }
 
-private[sources] object EnvelopeScan {
-  /** Filter shapes usable for planning-time file pruning. */
-  def isPrunableFileFilter(f: Filter): Boolean = f match {
-    case EqualTo("file", _: String)          => true
-    case In("file", _)                       => true
-    case StringStartsWith("file", _: String) => true
-    case _                                   => false
-  }
-
-  /** Conservative evaluation of a pushed filter against a candidate
-    * file path: must only return false when the file provably holds
-    * no matching row. */
-  def filterKeepsFile(f: Filter, path: String): Boolean = f match {
-    case EqualTo("file", v: String)          => path == v
-    case In("file", vs)                      => vs.exists(v => v == path)
-    case StringStartsWith("file", p: String) => path.startsWith(p)
-    case _                                   => true
-  }
-}
-
-private[sources] class EnvelopeScan(path: String, required: StructType,
-                                    pushed: Array[Filter] = Array.empty,
-                                    limit: Option[Int] = None)
+private[sources] class EnvelopeScan(path: String, required: StructType)
   extends Scan with Batch {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"graft-envelope $path ${required.fieldNames.mkString("[", ",", "]")}" +
-      (if (pushed.isEmpty) "" else pushed.mkString(" PushedFilters: [", ", ", "]")) +
-      limit.fold("")(l => s" PushedLimit: $l")
+    s"graft-envelope $path ${required.fieldNames.mkString("[", ",", "]")}"
 
   override def planInputPartitions(): Array[InputPartition] = {
     val dir = new java.io.File(path)
@@ -213,14 +158,11 @@ private[sources] class EnvelopeScan(path: String, required: StructType,
           f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
       } else Array(dir)
     files.sortBy(_.getName)
-      .map(_.getAbsolutePath)
-      // planning-time partition pruning from the pushed file filters
-      .filter(p => pushed.forall(EnvelopeScan.filterKeepsFile(_, p)))
-      .map(p => EnvelopeInputPartition(p): InputPartition)
+      .map(f => EnvelopeInputPartition(f.getAbsolutePath): InputPartition)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new EnvelopeReaderFactory(required.fieldNames, limit)
+    new EnvelopeReaderFactory(required.fieldNames)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new EnvelopeMicroBatchStream(path, required.fieldNames)
@@ -290,25 +232,19 @@ private[sources] class EnvelopeMicroBatchStream(path: String,
 
 private[sources] case class EnvelopeInputPartition(file: String) extends InputPartition
 
-private[sources] class EnvelopeReaderFactory(fields: Array[String],
-                                             limit: Option[Int] = None)
+private[sources] class EnvelopeReaderFactory(fields: Array[String])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[EnvelopeInputPartition].file
-    val cap = limit.getOrElse(Int.MaxValue)
     new PartitionReader[InternalRow] {
       private val reader = java.nio.file.Files.newBufferedReader(
         java.nio.file.Paths.get(file))
       private val fileUtf8 = UTF8String.fromString(file)
       private var line: String = _
-      private var emitted = 0
 
       override def next(): Boolean = {
-        // pushed-limit cap: stop reading, don't scan to EOF
-        if (emitted >= cap) { line = null; return false }
         line = reader.readLine()
-        if (line != null) emitted += 1
         line != null
       }
 

@@ -8,8 +8,20 @@ import org.apache.spark.sql.execution.ExplainMode
   * Mode `final` EXECUTES the query and prints the post-AQE plan —
   * the only place runtime ReusedExchange/ReusedShuffle are visible.
   * Iterative operators (d7) print the plan of their *composed* result
-  * — per-round plans are logged by the operators themselves. */
+  * — per-round plans are logged by the operators themselves.
+  * Exchange ids are renumbered per query and the checkout path prints
+  * as `<checkout>`, so two runs, or two checkouts, diff byte for byte. */
 object ExplainQuery {
+
+  /** `plan` with Spark's JVM-global `[plan_id=N]` renumbered 1, 2, …
+    * in order of first appearance and every `checkout` prefix
+    * replaced by the fixed token `<checkout>`. */
+  private def normalized(plan: String, checkout: String): String = {
+    val ids = scala.collection.mutable.Map.empty[String, Int]
+    "\\[plan_id=(\\d+)\\]".r.replaceAllIn(plan.replace(checkout, "<checkout>"),
+      m => s"[plan_id=${ids.getOrElseUpdate(m.group(1), ids.size + 1)}]")
+  }
+
   def main(args: Array[String]): Unit = {
     val names = args.headOption.map(_.split(",").toSeq).getOrElse(Seq("q1_agg"))
     val rawMode = args.lift(1).getOrElse("formatted")
@@ -17,6 +29,7 @@ object ExplainQuery {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = graft.SparkEntry.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
+    val checkout = new java.io.File(".").getCanonicalPath
     names.foreach { n =>
       println(s"===== $n =====")
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
@@ -24,8 +37,8 @@ object ExplainQuery {
         // collect() drives THIS QueryExecution (a noop write would
         // plan a separate one and leave this plan un-finalized)
         df.collect()
-        println(df.queryExecution.executedPlan.toString)
-      } else println(df.queryExecution.explainString(mode))
+        println(normalized(df.queryExecution.executedPlan.toString, checkout))
+      } else println(normalized(df.queryExecution.explainString(mode), checkout))
       spark.catalog.clearCache()
     }
     spark.stop()

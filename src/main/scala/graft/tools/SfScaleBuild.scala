@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   *    stay inside q21_bitmap_distinct's declared exact-bitmap domain
   *    [0, 2²⁰) (the first sf1 run shifted user_id by 10⁹ and the
   *    operator failed LOUDLY on its contract, as designed —
-  *    beyond-domain id spaces are what `hllDistinct` is for);
+  *    beyond-domain id spaces need a sketch such as the built-in
+  *    `hll_sketch_agg`);
   *    timestamps kept (the
   *    windowed aggs see ×F density per window — the scale shape that
   *    stresses them).

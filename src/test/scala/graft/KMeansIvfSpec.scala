@@ -5,59 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.SimilarityOps
 
-/** Learned (k-means) IVF quantizer: determinism, convergence sanity,
-  * and learned-centroid ANN agreement with exact scores. */
+/** Cell-quantized semantic dedup over the IVF coarse quantizer. */
 class KMeansIvfSpec extends AnyFunSuite with SparkSessionFixture {
-
-  private lazy val emb =
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-  test("kmeans centroids are deterministic across repeated runs") {
-    val a = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
-    val b = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
-    assert(a.length == 8 && a.head.length == 64)
-    assert(a.zip(b).forall { case (x, y) => x.sameElements(y) })
-  }
-
-  test("iterations do not worsen mean assignment similarity") {
-    def meanAssignedSim(cents: Array[Array[Double]]): Double = {
-      import spark.implicits._
-      val cdf = broadcast(
-        cents.zipWithIndex.map { case (e, i) => (i, e) }.toSeq
-          .toDF("c_id", "c_emb")
-          .withColumn("c_nrm", SimilarityOps.l2norm(col("c_emb"))))
-      emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-        .withColumn("nrm", SimilarityOps.l2norm(col("e")))
-        .join(cdf)
-        .select(col("vec_id"),
-          (SimilarityOps.dotD(col("e"), col("c_emb")) /
-            (col("nrm") * col("c_nrm"))).as("csim"))
-        .groupBy(col("vec_id")).agg(max(col("csim")).as("best"))
-        .agg(avg(col("best"))).head().getDouble(0)
-    }
-    val seeds = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", 8, 0)
-    val learned = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", 8, 4)
-    assert(meanAssignedSim(learned) >= meanAssignedSim(seeds) - 1e-9,
-      "k-means made the quantizer worse")
-  }
-
-  test("learned-centroid IVF returns <=k rows/query with exact scores") {
-    val cents = SimilarityOps.kmeansCentroids(emb, "vec_id", "embedding", 8, 3)
-    val q = emb.filter(col("vec_id") < 5)
-    val ivf = SimilarityOps.ivfTopKWithCentroids(
-      emb, q, "vec_id", "embedding", cents, probes = 2, k = 3)
-    val rows = ivf.collect()
-    val perQuery = rows.groupBy(_.getLong(0))
-    assert(perQuery.keySet == Set(0L, 1L, 2L, 3L, 4L))
-    assert(perQuery.values.forall(_.length <= 3))
-    // scores must equal the exact cosine brute-force scores pairwise
-    val bf = SimilarityOps.bruteForceTopK(emb, q, "vec_id", "embedding", 1000)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    rows.foreach { r =>
-      val key = (r.getLong(0), r.getLong(1))
-      assert(bf(key) == r.getDouble(2), s"score mismatch at $key")
-    }
-  }
 
   test("semanticDedup drops planted in-cell duplicates, keeps min id") {
     import spark.implicits._

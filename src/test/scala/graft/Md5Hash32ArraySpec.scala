@@ -12,7 +12,7 @@ class Md5Hash32ArraySpec extends AnyFunSuite with SparkSessionFixture {
 
   test("codegen array hash == transform(md5Hash32) on real trigrams") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val tg = docs.select(DedupOps.charTrigrams(col("text")).as("tgs"))
+    val tg = docs.select(Oracles.charTrigrams(col("text")).as("tgs"))
     val diff = tg.select(
         Md5Hash32Array(col("tgs")).as("fast"),
         transform(col("tgs"), s => DedupOps.md5Hash32(s)).as("slow"))

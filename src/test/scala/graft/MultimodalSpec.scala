@@ -5,33 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.{MediaCodec, MultimodalOps}
 
-/** Multimodal plumbing: schema, partitioning, batching, error routing
-  * (decode itself is a deterministic stub — see MediaCodec). */
+/** Multimodal plumbing: format sniffing, error routing and the real
+  * JDK image/audio decoders (other payloads take the deterministic
+  * fake — see MediaCodec). */
 class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
-
-  private lazy val media = MultimodalOps.syntheticMedia(spark, 300, 8)
-
-  test("synthetic media table matches the declared schema and partitioning") {
-    assert(media.rdd.getNumPartitions == 8)
-    val kinds = media.groupBy(col("kind")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(kinds.keySet == Set("image", "audio", "video"))
-    assert(kinds.values.sum == 300L)
-  }
-
-  test("imageFeatures: narrow plan (no shuffle), deterministic features") {
-    val feats = MultimodalOps.imageFeatures(media, 16, 16)
-    val plan = feats.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"media payloads must not shuffle:\n$plan")
-    val rows = feats.collect()
-    assert(rows.length == 100) // ids ≡ 0 mod 3
-    assert(rows.forall(_.ok))
-    assert(rows.forall(_.feature.length == 64))
-    // deterministic: same payload → same feature
-    val again = MultimodalOps.imageFeatures(media, 16, 16).collect()
-    assert(rows.sortBy(_.media_id).map(_.feature.toSeq).toSeq ==
-      again.sortBy(_.media_id).map(_.feature.toSeq).toSeq)
-  }
 
   test("corrupt payloads are routed to the error column, not thrown") {
     import spark.implicits._
@@ -40,29 +17,10 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
         Array[Byte](1, 2, 3)), // < 64 bytes → corrupt
       MultimodalOps.MediaRow(2L, "image", "image/x", None, None, None,
         Array.fill[Byte](128)(7))).toDS()
-    val out = MultimodalOps.imageFeatures(bad, 8, 8).collect()
+    val out = MultimodalOps.imagePHash(bad, 8).collect()
       .sortBy(_.media_id)
     assert(!out(0).ok && out(0).error.contains("corrupt"))
     assert(out(1).ok && out(1).error == null)
-  }
-
-  test("frame sampling yields one row per step, no payload duplication") {
-    val frames = MultimodalOps.sampleFrames(media, 500L)
-    val perVideo = frames.groupBy(col("media_id")).count()
-    val joined = media.filter(col("kind") === "video")
-      .select(col("media_id"), col("duration_ms"))
-      .join(perVideo, "media_id")
-    val mismatch = joined.filter(
-      col("count") =!= ceil(col("duration_ms") / 500.0)).count()
-    assert(mismatch == 0L)
-    assert(!frames.columns.contains("payload"))
-  }
-
-  test("codec stub: pooled feature has bounded grid size") {
-    val px = Array.fill(100)(0.5f)
-    val f = MediaCodec.pooledFeature(px, 8)
-    assert(f.length == 64)
-    assert(f.forall(v => math.abs(v - 0.5f) < 1e-6))
   }
 
   test("sniffFormat classifies magic bytes; garbage and stubs are unknown") {
@@ -98,17 +56,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
   private def fixture(name: String): Array[Byte] = {
     val in = getClass.getResourceAsStream(s"/$name")
     try in.readAllBytes() finally in.close()
-  }
-
-  test("REAL image decode: committed fixtures yield true dimensions") {
-    // 6x4 gradient committed in four JDK-native containers
-    for (f <- Seq("fixture_6x4.png", "fixture_6x4.jpg",
-                  "fixture_6x4.gif", "fixture_6x4.bmp"))
-      assert(MediaCodec.imageInfo(fixture(f)) == Right((6, 4)), f)
-    // non-image payloads refuse rather than guess
-    assert(MediaCodec.imageInfo(Array[Byte](1, 2, 3, 4, 5, 6, 7, 8)).isLeft)
-    // truncated PNG: magic passes, decode reports corrupt (Left)
-    assert(MediaCodec.imageInfo(fixture("fixture_6x4.png").take(12)).isLeft)
   }
 
   test("REAL image decode: resample to requested grid, values in [0,1]") {
@@ -217,40 +164,6 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
     assert(clip.samples.toSeq == wav.samples.toSeq)
   }
 
-  test("audioFeatures: narrow plan, real RMS on WAV, fake path intact") {
-    import spark.implicits._
-    val wavBytes = fixture("fixture_tone.wav")
-    val ds = spark.createDataset(Seq(
-      MultimodalOps.MediaRow(1L, "audio", "audio/wav", None, None, None,
-        wavBytes),
-      MultimodalOps.MediaRow(2L, "audio", "audio/x-synthetic", None, None,
-        Some(2000L), Array.fill[Byte](128)(9)),
-      MultimodalOps.MediaRow(3L, "audio", "audio/wav", None, None, None,
-        wavBytes.take(16)), // truncated -> error routed, not thrown
-      MultimodalOps.MediaRow(4L, "image", "image/png", None, None, None,
-        wavBytes)))( // wrong kind -> filtered out
-      org.apache.spark.sql.Encoders.product[MultimodalOps.MediaRow])
-    val feats = MultimodalOps.audioFeatures(ds)
-    val plan = feats.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"audio payloads must not shuffle:\n$plan")
-    val out = feats.collect().sortBy(_.media_id)
-    assert(out.map(_.media_id).toSeq == Seq(1L, 2L, 3L))
-    val real = out(0)
-    assert(real.ok && real.sample_rate == 8000 && real.channels == 1 &&
-      real.n_frames == 1600L && real.duration_ms == 200L)
-    // RMS of the known ramp, recomputed exactly as the operator does
-    val expectRms = {
-      var s = 0.0
-      for (i <- 0 until 1600) {
-        val v = toneSample(i) / 32768.0f; s += v.toDouble * v
-      }
-      math.sqrt(s / 1600).toFloat
-    }
-    assert(real.rms == expectRms, s"${real.rms} vs $expectRms")
-    assert(out(1).ok && out(1).n_frames == 1000L) // deterministic fake
-    assert(!out(2).ok && out(2).error.contains("corrupt"))
-  }
-
   test("sniffFormat agrees with the real audio decoder on the fixture") {
     import spark.implicits._
     val got = Seq(("wav", fixture("fixture_tone.wav")))
@@ -259,17 +172,5 @@ class MultimodalSpec extends AnyFunSuite with SparkSessionFixture {
       .collect().head.getString(0)
     assert(got == "wav")
     assert(MediaCodec.decodeAudio(fixture("fixture_tone.wav")).isRight)
-  }
-
-  test("end-to-end imageFeatures over a REAL payload: ok, real feature") {
-    import spark.implicits._
-    val ds = spark.createDataset(Seq(
-      MultimodalOps.MediaRow(42L, "image", "image/png", None, None, None,
-        fixture("fixture_6x4.png"))))(
-      org.apache.spark.sql.Encoders.product[MultimodalOps.MediaRow])
-    val out = MultimodalOps.imageFeatures(ds, 8, 8).collect()
-    assert(out.length == 1 && out.head.ok && out.head.error == null)
-    assert(out.head.feature.length == 64)
-    assert(out.head.feature.forall(v => v >= 0f && v <= 1f))
   }
 }

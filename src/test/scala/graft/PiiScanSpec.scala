@@ -1,17 +1,25 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusOps
 
-/** [[CorpusOps.piiScan]] — the PII surface scan. The synthetic corpus
-  * is PII-free (the driver oracle proves hash parity while every count
-  * sits at zero), so the pattern families, the matched-char mass, and
-  * the any-hit flag are pinned here on hand-built docs (the t27/t29
-  * precedent), plus the stateless-streaming face. */
+/** [[CorpusOps.piiScanCols]] — the PII surface scan t31 runs. The
+  * synthetic corpus is PII-free (the DuckDB oracle proves hash parity
+  * while every count sits at zero), so the pattern families, the
+  * matched-char mass, and the any-hit flag are pinned here on
+  * hand-built docs (the t27/t29 precedent), plus the stateless-
+  * streaming face. */
 class PiiScanSpec extends AnyFunSuite with SparkSessionFixture {
+
+  /** (id, n_email, n_ipv4, n_phone, pii_chars, has_pii) per document. */
+  private def piiScan(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol) +: CorpusOps.piiScanCols(col(textCol)): _*)
+      .withColumn("has_pii",
+        (col("n_email") + col("n_ipv4") + col("n_phone") > 0L).cast("long"))
 
   private val corpus: Seq[(Long, String)] = Seq(
     1L -> "contact me at john.doe@example.com or admin@test.org today",
@@ -25,7 +33,7 @@ class PiiScanSpec extends AnyFunSuite with SparkSessionFixture {
 
   private def run(): Map[Long, Map[String, Long]] = {
     import spark.implicits._
-    val df = CorpusOps.piiScan(corpus.toDF("doc_id", "text"),
+    val df = piiScan(corpus.toDF("doc_id", "text"),
       "doc_id", "text")
     df.collect().map { r =>
       r.getLong(0) -> df.columns.drop(1).map(c =>
@@ -77,7 +85,7 @@ class PiiScanSpec extends AnyFunSuite with SparkSessionFixture {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[(Long, String)]
-    val out = CorpusOps.piiScan(input.toDF().toDF("doc_id", "text"),
+    val out = piiScan(input.toDF().toDF("doc_id", "text"),
       "doc_id", "text")
     val q = out.writeStream.format("memory").queryName("pii_stream")
       .outputMode("append").start()

@@ -60,7 +60,7 @@ class SentimentModelSpec extends AnyFunSuite with SparkSessionFixture {
   }
 
   test("label decode follows StringIndexer dictionary") {
-    assert(model.decodeLabel(0.0) == "4") // positive
-    assert(model.decodeLabel(1.0) == "0") // negative
+    assert(model.labels(0.0.toInt) == "4") // positive
+    assert(model.labels(1.0.toInt) == "0") // negative
   }
 }

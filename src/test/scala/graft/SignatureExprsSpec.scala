@@ -17,7 +17,7 @@ class SignatureExprsSpec extends AnyFunSuite with SparkSessionFixture {
     val diff = docs.select(
         HashedTrigrams32(col("text")).as("fast"),
         array_distinct(Md5Hash32Array(
-          DedupOps.charTrigrams(col("text")))).as("slow"))
+          Oracles.charTrigrams(col("text")))).as("slow"))
       .filter(to_json(col("fast")) =!= to_json(col("slow")))
       .count()
     assert(diff == 0L)
@@ -32,7 +32,7 @@ class SignatureExprsSpec extends AnyFunSuite with SparkSessionFixture {
         col("id"),
         HashedTrigrams32(col("t")).as("fast"),
         array_distinct(Md5Hash32Array(
-          DedupOps.charTrigrams(col("t")))).as("slow"))
+          Oracles.charTrigrams(col("t")))).as("slow"))
       .orderBy("id").collect()
     rows.foreach { r =>
       assert(r.getSeq[Any](1) == r.getSeq[Any](2), s"id=${r.getInt(0)}")
@@ -45,11 +45,11 @@ class SignatureExprsSpec extends AnyFunSuite with SparkSessionFixture {
   test("minhash codegen == K-pass HOF spelling on real trigrams") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val hs = docs
-      .select(DedupOps.charTrigrams(col("text")).as("tgs"))
+      .select(Oracles.charTrigrams(col("text")).as("tgs"))
       .select(Md5Hash32Array(col("tgs")).as("hs"))
     val diff = hs.select(
         MinHashSignature(col("hs")).as("fast"),
-        DedupOps.minhashFromHashes(col("hs")).as("slow"))
+        Oracles.minhashFromHashes(col("hs")).as("slow"))
       .filter(to_json(col("fast")) =!= to_json(col("slow")))
       .count()
     assert(diff == 0L)
@@ -62,7 +62,7 @@ class SignatureExprsSpec extends AnyFunSuite with SparkSessionFixture {
       .select(transform(col("toks"), t => DedupOps.md5Hash60(t)).as("hs"))
     val diff = hs.select(
         SimHash60(col("hs")).as("fast"),
-        DedupOps.simhashFromHashes(col("hs")).as("slow"))
+        Oracles.simhashFromHashes(col("hs")).as("slow"))
       .filter(col("fast") =!= col("slow"))
       .count()
     assert(diff == 0L)
@@ -82,9 +82,9 @@ class SignatureExprsSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = df.select(
         col("id"),
         MinHashSignature(col("hs")).as("mh_fast"),
-        DedupOps.minhashFromHashes(col("hs")).as("mh_slow"),
+        Oracles.minhashFromHashes(col("hs")).as("mh_slow"),
         SimHash60(col("hs")).as("sh_fast"),
-        DedupOps.simhashFromHashes(col("hs")).as("sh_slow"))
+        Oracles.simhashFromHashes(col("hs")).as("sh_slow"))
       .orderBy("id").collect()
     rows.foreach { r =>
       assert(r.getSeq[java.lang.Long](1) == r.getSeq[java.lang.Long](2),
@@ -109,9 +109,9 @@ class SignatureExprsSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = df.select(
         col("id"),
         MinHashSignature(col("hs")).as("mh_fast"),
-        DedupOps.minhashFromHashes(col("hs")).as("mh_slow"),
+        Oracles.minhashFromHashes(col("hs")).as("mh_slow"),
         SimHash60(col("hs")).as("sh_fast"),
-        DedupOps.simhashFromHashes(col("hs")).as("sh_slow"))
+        Oracles.simhashFromHashes(col("hs")).as("sh_slow"))
       .orderBy("id").collect()
     rows.foreach { r =>
       assert(r.getSeq[java.lang.Long](1) == r.getSeq[java.lang.Long](2),

@@ -45,20 +45,6 @@ class SketchOpsSpec extends AnyFunSuite with SparkSessionFixture {
     probes.foreach { p => assert(est(p) >= 10L, s"undercount for $p") }
   }
 
-  test("hllDistinct: near-exact per group and partitioning-invariant") {
-    import spark.implicits._
-    val rows = (0 until 20000).map(i => (s"g${i % 2}", (i % 3000).toLong))
-    def run(parts: Int): Map[String, Long] =
-      SketchOps.hllDistinct(
-        rows.toDF("g", "v").repartition(parts), "g", col("v"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val est = run(8)
-    // exact distinct per group: 1500 even / 1500 odd values
-    est.values.foreach(e => assert(math.abs(e - 1500.0) / 1500.0 < 0.05))
-    // register-max state ⇒ identical on any partitioning
-    assert(run(1) == est && run(32) == est)
-  }
-
   test("bloomPrunedSemiJoin is identical to the plain semi-join") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)

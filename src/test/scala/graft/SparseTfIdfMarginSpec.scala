@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.Oracles.ScorerOracles
 import graft.functions.TextOps
 
 /** The codegen TF·IDF·LR margin/prediction expression

@@ -15,7 +15,7 @@ class VectorDotProductSpec extends AnyFunSuite with SparkSessionFixture {
       .filter(col("a.vec_id") < 20 && col("b.vec_id") < 20)
     val diff = pairs.select(
         SimilarityOps.dotD(col("a.embedding"), col("b.embedding")).as("fast"),
-        SimilarityOps.dotHof(col("a.embedding"), col("b.embedding")).as("slow"))
+        Oracles.dotHof(col("a.embedding"), col("b.embedding")).as("slow"))
       .filter(col("fast") =!= col("slow"))  // exact double comparison
       .count()
     assert(diff == 0L)
@@ -27,7 +27,7 @@ class VectorDotProductSpec extends AnyFunSuite with SparkSessionFixture {
     val df = Seq(Seq(1.0f, 2.0f, 4.0f)).toDF("v")
     val got = df.select(
       SimilarityOps.dotD(col("v"), plane).as("f"),
-      SimilarityOps.dotHof(col("v"), plane).as("s")).head()
+      Oracles.dotHof(col("v"), plane).as("s")).head()
     assert(got.getDouble(0) == 0.5)
     assert(got.getDouble(0) == got.getDouble(1))
   }
@@ -39,7 +39,7 @@ class VectorDotProductSpec extends AnyFunSuite with SparkSessionFixture {
       (Seq(1.0f, 2.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
     val rows = df.select(
       SimilarityOps.dotD(col("a"), col("b")).as("f"),
-      SimilarityOps.dotHof(col("a"), col("b")).as("s")).collect()
+      Oracles.dotHof(col("a"), col("b")).as("s")).collect()
     assert(rows(0).isNullAt(0) && rows(0).isNullAt(1))
     assert(rows(1).getDouble(0) == 5.0 && rows(1).getDouble(1) == 5.0)
   }

@@ -4,9 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.plans.ZValue
-import graft.sinks.WriteOps
 
-/** Morton z-value expression + z-ordered write layout. The HOF
+/** Morton z-value expression and the z-ordered layout it keys. The HOF
   * spelling `aggregate(sequence(0, bits*D-1), 0L, (acc, p) ->
   * acc | ((dims[p % D] >> (p / D)) & 1) << p)` is the parity oracle
   * for the codegen loop. */
@@ -75,8 +74,12 @@ class ZValueSpec extends AnyFunSuite with SparkSessionFixture {
     val grid = (for (a <- 0L until 256L; b <- 0L until 256L)
       yield (a, b)).toDF("a", "b")
     val dir = tempDir("zorder").toString
-    WriteOps.zOrderedParquet(grid, s"$dir/z", Seq(col("a"), col("b")),
-      bits = 8, numFiles = 16)
+    // the z-order layout: range-cluster and sort on the interleaved key
+    grid.withColumn("__z", ZValue.of(8, col("a"), col("b")))
+      .repartitionByRange(16, col("__z"))
+      .sortWithinPartitions(col("__z"))
+      .drop("__z")
+      .write.mode("overwrite").parquet(s"$dir/z")
     grid.repartitionByRange(16, col("a"), col("b"))
       .sortWithinPartitions(col("a"), col("b"))
       .write.mode("overwrite").parquet(s"$dir/lex")
