@@ -77,9 +77,7 @@ object Bench {
             s"[bench] warm-up($label) $n failed$fatal: ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      SparkEntry.releasePersisted(spark)
       System.gc()
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] warm-up($label, $dir) $sec%.1fs, $failures failures")
@@ -146,14 +144,9 @@ object Bench {
           -1.0 // failure sentinel — never report a normal-looking time
         }
       // release per-query persists (e.g. d4's trigram table) so no
-      // cache blocks leak into later queries' memory budget — both
-      // the SQL cache AND the RDD-level round leaves the iterative
-      // operators persist via DatasetBridge (clearCache can't reach
-      // those) — and take the major GC at a controlled point OUTSIDE
-      // the timed slots
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // cache blocks leak into later queries' memory budget, and take
+      // the major GC at a controlled point OUTSIDE the timed slots
+      SparkEntry.releasePersisted(spark)
       System.gc()
       val phases = PhaseLog.drain()
       if (phases.nonEmpty) phaseRuns += name -> phases

@@ -58,6 +58,19 @@ object SparkEntry {
     s
   }
 
+  /** The sweep between queries: drops the SQL cache and unpersists
+    * every persistent RDD, blocking. `clearCache` alone cannot reach
+    * the RDD-level round leaves the iterative operators persist via
+    * DatasetBridge (CC / PageRank). Query loops — Bench, Verify,
+    * ExplainQuery, ScaleProbe, the specs — call it between queries;
+    * a library caller instead calls the release hook each persisting
+    * operator returns, after its action on the result. */
+  def releasePersisted(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
+
   /** The frozen sentiment model: the artifact under [[ModelDir]]
     * wherever its `stages/` directory exists, otherwise the committed
     * fixture under [[FixtureDir]], which must pass

@@ -26,14 +26,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // release per-query persists (e.g. d4's trigram table) so cache
-      // blocks don't accumulate across the 100+ query loop. clearCache
-      // reaches only the SQL cache; the iterative operators (CC /
-      // PageRank) persist their round leaves at RDD level via
-      // DatasetBridge, so sweep those explicitly too (library callers
-      // use the *Releasable hooks instead).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // blocks don't accumulate across the 100+ query loop
+      SparkEntry.releasePersisted(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -218,16 +218,6 @@ final class SentimentScorer(bc: Broadcast[SentimentModel]) extends Serializable 
   private def predictionOf(m: Column): Column =
     when(m.isNotNull, when(m > lit(logitThreshold), 1.0).otherwise(0.0))
 
-  /** M1 stop-word filter as a pure built-in expression (`isInCollection`
-    * → optimizer-rewritten `InSet`: O(1) hash-set probe per token).
-    * The scoring paths below no longer need it (the margin expression
-    * folds the filter in); kept for callers that want the filtered
-    * token array itself (m1_stopwords). */
-  def removeStopWords(tokens: Column): Column = {
-    val stopSet = bc.value.stopWords.map(_.toLowerCase).distinct.toSeq.sorted
-    filter(tokens, t => !lower(t).isInCollection(stopSet))
-  }
-
   /** tokens (pre-stop-word-removal) → prediction. */
   def predictFromTokens(tokens: Column): Column =
     predictCol(tokens, filterStops = true)

@@ -163,19 +163,12 @@ object MultimodalOps {
     * from one count of the narrow (id, hash) projection, which it
     * persists first (MEMORY_AND_DISK) so a decode-derived caller pays
     * the decode once; the choice goes to [[graft.PhaseLog]]
-    * (`hamming auto-blocks`). The cache is left to Spark's LRU —
-    * release it through [[hammingNearDupPairsReleasable]]. An
-    * explicit `blocks` pins the geometry: no persist, no count. */
-  def hammingNearDupPairs(hashes: DataFrame, idCol: String, hashCol: String,
-                          maxDist: Int, blocks: Int = -1): DataFrame =
-    hammingNearDupPairsReleasable(hashes, idCol, hashCol, maxDist, blocks)._1
-
-  /** [[hammingNearDupPairs]] plus a release hook for the persisted
-    * projection (a no-op for an explicit `blocks`); call it after the
-    * downstream action. */
-  def hammingNearDupPairsReleasable(hashes: DataFrame, idCol: String,
-                                    hashCol: String, maxDist: Int,
-                                    blocks: Int = -1)
+    * (`hamming auto-blocks`); the returned hook releases it — call it
+    * after the downstream action. An explicit `blocks` pins the
+    * geometry: no persist, no count, and the hook is a no-op. */
+  def hammingNearDupPairs(hashes: DataFrame, idCol: String,
+                          hashCol: String, maxDist: Int,
+                          blocks: Int = -1)
       : (DataFrame, () => Unit) = {
     val (sig, b, release) =
       signatureGeometry(hashes, idCol, hashCol, maxDist, blocks)
@@ -390,23 +383,19 @@ object MultimodalOps {
     * banded pair join never goes all-pairs, the closure is the
     * large-star/small-star fixpoint (lineage-truncated per round),
     * and the label/keeper readout is one keyed agg + one join —
-    * identical scaling to the text-side d7/d10 family. */
-  def hammingDedupLabels(hashes: DataFrame, idCol: String, hashCol: String,
-                         maxDist: Int, blocks: Int = -1): DataFrame =
-    hammingDedupLabelsReleasable(hashes, idCol, hashCol, maxDist, blocks)._1
-
-  /** [[hammingDedupLabels]] plus a release hook covering the
-    * persisted projection and the closure's fixpoint leaf. One
-    * signature table feeds both the pairs and the id universe. */
-  def hammingDedupLabelsReleasable(hashes: DataFrame, idCol: String,
-                                   hashCol: String, maxDist: Int,
-                                   blocks: Int = -1)
+    * identical scaling to the text-side d7/d10 family. One signature
+    * table feeds both the pairs and the id universe; the returned hook
+    * releases its persisted projection and the closure's fixpoint
+    * leaf. */
+  def hammingDedupLabels(hashes: DataFrame, idCol: String,
+                         hashCol: String, maxDist: Int,
+                         blocks: Int = -1)
       : (DataFrame, () => Unit) = {
     val (sig, b, sigRelease) =
       signatureGeometry(hashes, idCol, hashCol, maxDist, blocks)
     val pairs = bandedHammingJoin(sig, idCol, None, hashCol, maxDist, b)
     val (lab, ccRelease) = graft.operators.GraphOps
-      .connectedComponentsReleasable(pairs, "id_a", "id_b",
+      .connectedComponents(pairs, "id_a", "id_b",
         // banded pairs are distinct with id_a < id_b — skip the
         // closure's canonicalizing exchange (r18)
         assumeCanonical = true)

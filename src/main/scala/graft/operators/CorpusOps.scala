@@ -409,19 +409,13 @@ object CorpusOps {
     * Determinism: idf is the m6 recipe (`round(ln((N+1)/(df+1)), 6)`),
     * norm² and dot sums go through DECIMAL(28,12) (order-free), and
     * the cosine is 6-dp-rounded before the threshold compare so the
-    * kept set is engine-stable at the boundary. */
-  def tfidfCosinePairs(docs: DataFrame, idCol: String, tokens: Column,
-                       maxDf: Long, minCos: Double): DataFrame =
-    tfidfCosinePairsReleasable(docs, idCol, tokens, maxDf, minCos)._1
-
-  /** [[tfidfCosinePairs]] plus an explicit release hook for the
-    * persisted weighting table — the pageRankReleasable discipline:
-    * the Bench/Verify harness clearCache()s between queries, but a
-    * library caller running many queries in one session should
-    * release AFTER its action on the returned frame. */
-  def tfidfCosinePairsReleasable(docs: DataFrame, idCol: String,
-                                 tokens: Column, maxDf: Long,
-                                 minCos: Double): (DataFrame, () => Unit) = {
+    * kept set is engine-stable at the boundary.
+    *
+    * Returns the pairs and a hook releasing the persisted weighting
+    * table — call it AFTER the action on the returned frame. */
+  def tfidfCosinePairs(docs: DataFrame, idCol: String,
+                       tokens: Column, maxDf: Long,
+                       minCos: Double): (DataFrame, () => Unit) = {
     val total = broadcast(docs.agg(count(lit(1)).as("nd")))
     val tf = docs.select(col(idCol).as("doc"), explode(tokens).as("term"))
       .groupBy(col("doc"), col("term")).agg(count(lit(1)).as("tf"))
@@ -431,8 +425,8 @@ object CorpusOps {
     // aggregate AND the two term-keyed postings sides; exchange reuse
     // covers the postings pair but not the norms branch (different
     // key), which would otherwise re-run explode→tf→df→join from the
-    // scan. Harness clearCache()s per query; library callers release
-    // via the returned hook.
+    // scan. Callers release via the returned hook; query loops sweep
+    // ([[graft.SparkEntry.releasePersisted]]).
     val w = tf.join(dfreq, "term").crossJoin(total)
       .select(col("doc"), col("term"), col("df"),
         (col("tf") *

@@ -120,31 +120,6 @@ object DedupOps {
   def rollingFingerprint(text: Column): Column =
     graft.plans.RollingHashMin(text)
 
-  /** Full near-duplicate pipeline: MinHash-LSH candidate pairs →
-    * exact trigram-Jaccard verify at `threshold`. The trigram table is
-    * persisted for the duration of the query because three branches
-    * consume it (signature derivation + both verify-join sides) and
-    * Spark recomputes un-materialized lineage per branch; callers
-    * running query loops should use [[nearDuplicatePairsReleasable]]
-    * and call its release hook after the action (the Bench/Verify
-    * harness instead clearCache()s between queries).
-    *
-    * The verify stage intersects *hashed* trigram sets (distinct
-    * 32-bit md5-prefix values), not strings: the persisted table is
-    * array<long> instead of array<string> (~4× smaller, primitive
-    * equality in the intersect), and because the DuckDB oracle hashes
-    * with the identical function, any hash collision shrinks both
-    * systems' sets identically — the compare is exact even though the
-    * Jaccard is now over hashed-trigram space. */
-  def nearDuplicatePairs(docs: DataFrame, idCol: String, textCol: String,
-                         threshold: Double): DataFrame =
-    nearDuplicatePairsReleasable(docs, idCol, textCol, threshold)._1
-
-  /** [[nearDuplicatePairs]] plus an explicit release hook for the
-    * trigram table it persists: library callers running many queries
-    * in one session call `release()` after their action (blocking
-    * unpersist) instead of relying on a session-wide
-    * `spark.catalog.clearCache()`. */
   /** (id, tgh, ntg) — sorted hashed-trigram table. Sorted once per
     * document: the MinHash minima and `size` are order-invariant, and
     * sorting lets verify stages count intersections with an
@@ -167,8 +142,24 @@ object DedupOps {
     .select(col(idCol),
       posexplode(array(bandKeys(col("sig")): _*)).as(Seq("band", "bkey")))
 
-  def nearDuplicatePairsReleasable(docs: DataFrame, idCol: String,
-                                   textCol: String, threshold: Double)
+  /** Full near-duplicate pipeline: MinHash-LSH candidate pairs →
+    * exact trigram-Jaccard verify at `threshold`. The trigram table is
+    * persisted for the duration of the query because three branches
+    * consume it (signature derivation + both verify-join sides) and
+    * Spark recomputes un-materialized lineage per branch; the
+    * returned hook unpersists it (blocking) — call it after the action
+    * on the result (query loops sweep instead,
+    * [[graft.SparkEntry.releasePersisted]]).
+    *
+    * The verify stage intersects *hashed* trigram sets (distinct
+    * 32-bit md5-prefix values), not strings: the persisted table is
+    * array<long> instead of array<string> (~4× smaller, primitive
+    * equality in the intersect), and because the DuckDB oracle hashes
+    * with the identical function, any hash collision shrinks both
+    * systems' sets identically — the compare is exact even though the
+    * Jaccard is now over hashed-trigram space. */
+  def nearDuplicatePairs(docs: DataFrame, idCol: String,
+                         textCol: String, threshold: Double)
       : (DataFrame, () => Unit) = {
     val tg = trigramTable(docs, idCol, textCol).persist()
     val banded = bandedKeys(tg, idCol).hint("shuffle_hash")
@@ -225,33 +216,41 @@ object DedupOps {
   /** End-to-end corpus deduplication — the call a pipeline actually
     * makes: MinHash-LSH candidates → exact trigram-Jaccard verify at
     * `threshold` → transitive closure of the verified pairs
-    * ([[GraphOps.connectedComponents]]) → keep exactly one
-    * representative (the min id) per near-dup cluster, all other
-    * cluster members anti-joined away. Untouched documents pass
-    * through. Composes the d4 and d7 shapes; every stage is the
-    * LSH-bounded / O(log^2 n)-round machinery documented there. */
-  def deduplicateCorpus(docs: DataFrame, idCol: String, textCol: String,
-                        threshold: Double): DataFrame =
-    dedupPipelineReleasable(docs, idCol, textCol, threshold)._1
-
-  /** The shared LSH→verify→closure prefix of the dedup family,
-    * exposed as ONE pass with every keep policy derived from it:
-    * d10 (min-id representative) and d11 (quality argmax) differ only
-    * in the last anti-join, yet as independent operators each re-pays
-    * the candidate generation, exact verification, and O(log²n)
-    * cluster closure — the dominant cost. Library callers (and the
-    * composed d13 query) take the pipeline once and apply any number
-    * of policies against the materialized cluster labels (the
-    * closure's fixpoint leaf stays persisted until `release()`; the
-    * Bench/Verify harness clearCache()s instead).
+    * ([[GraphOps.connectedComponents]]) → keep one representative per
+    * near-dup cluster, all other cluster members anti-joined away.
+    * Untouched documents pass through. Composes the d4 and d7 shapes;
+    * every stage is the LSH-bounded / O(log^2 n)-round machinery
+    * documented there.
+    *
+    * ONE pass, every keep policy derived from it: d10 (min-id
+    * representative) and d11 (quality argmax) differ only in the last
+    * anti-join, yet as independent operators each would re-pay the
+    * candidate generation, exact verification, and O(log²n) cluster
+    * closure — the dominant cost. Callers (and the composed d13
+    * query) apply any number of policies against the materialized
+    * cluster labels; the closure's fixpoint leaf stays persisted until
+    * `release()`.
+    *
+    * `keepBest(quality)` keeps the cluster member maximizing `quality`
+    * (id-ascending tiebreak) — the policy real pipelines want ("of
+    * these near-identical pages, keep the longest / highest scoring
+    * one", cf. CCNet's per-shard quality ordering). The cluster labels
+    * cover only documents in a verified pair (a tiny fraction of the
+    * corpus at scale), so ONLY those members enter the argmax window,
+    * and the losers leave the full corpus through the same anti-join
+    * as `keepMinId`: untouched documents never shuffle (the anti-
+    * join's probe side is the tiny loser set, which AQE broadcasts),
+    * and each window partition is one near-dup cluster — bounded
+    * unless the corpus genuinely holds that many copies of one
+    * document.
     *
     * Returns (keepMinId, keepBest(quality), release). */
-  def dedupPipelineReleasable(docs: DataFrame, idCol: String,
-                              textCol: String, threshold: Double)
+  def dedupPipeline(docs: DataFrame, idCol: String,
+                    textCol: String, threshold: Double)
       : (DataFrame, Column => DataFrame, () => Unit) = {
     val (pairs, pairsRelease) =
-      nearDuplicatePairsReleasable(docs, idCol, textCol, threshold)
-    val (labels, ccRelease) = GraphOps.connectedComponentsReleasable(
+      nearDuplicatePairs(docs, idCol, textCol, threshold)
+    val (labels, ccRelease) = GraphOps.connectedComponents(
       pairs.select(col("doc_a"), col("doc_b")), "doc_a", "doc_b",
       // verified pairs are distinct with doc_a < doc_b (the LSH
       // self-join's condition) — the closure skips its canonicalizing
@@ -277,29 +276,6 @@ object DedupOps {
     (keepMin, keepBest _, ccRelease)
   }
 
-  /** [[deduplicateCorpus]] with a *quality* keep policy: instead of
-    * the min-id representative, keep the cluster member maximizing
-    * `quality` (id-ascending tiebreak) — the policy real pipelines
-    * want ("of these near-identical pages, keep the longest / highest
-    * scoring one", cf. CCNet's per-shard quality ordering).
-    *
-    * Scale shape: the cluster labels cover only documents that appear
-    * in a verified pair (a tiny fraction of the corpus at scale), so
-    * ONLY those members ever enter the argmax window — an inner join
-    * restricts to them, the per-cluster argmax picks each winner, and
-    * the losers are removed from the full corpus with the same
-    * anti-join [[deduplicateCorpus]] uses. Untouched documents never
-    * shuffle at all (the anti-join's probe side is the tiny loser
-    * set, which AQE broadcasts), and each window partition is one
-    * near-dup cluster — bounded, so no skewed giant partition can
-    * form unless the corpus genuinely contains that many copies of
-    * one document.
-    */
-  def deduplicateCorpusKeepBest(docs: DataFrame, idCol: String,
-                                textCol: String, threshold: Double,
-                                quality: Column): DataFrame =
-    dedupPipelineReleasable(docs, idCol, textCol, threshold)._2(quality)
-
   /** Incremental (delta-vs-base) near-duplicate admission — the
     * ingestion shape: a new batch of documents is checked against an
     * already-deduplicated base corpus WITHOUT any base-vs-base work.
@@ -316,11 +292,11 @@ object DedupOps {
     * (the candidate join prunes first), so per-batch cost is
     * proportional to the delta and its collisions, not the corpus.
     * Here both sides derive signatures inline from text; the persist
-    * discipline mirrors [[nearDuplicatePairsReleasable]].
+    * discipline mirrors [[nearDuplicatePairs]].
     */
-  def incrementalDedupReleasable(base: DataFrame, delta: DataFrame,
-                                 idCol: String, textCol: String,
-                                 threshold: Double)
+  def incrementalDedup(base: DataFrame, delta: DataFrame,
+                       idCol: String, textCol: String,
+                       threshold: Double)
       : (DataFrame, () => Unit) = {
     val baseTg = trigramTable(base, idCol, textCol).persist()
     val deltaTg = trigramTable(delta, idCol, textCol).persist()
@@ -362,7 +338,7 @@ object DedupOps {
   }
 
   /** Persist the base corpus's dedup SIGNATURE INDEX as a stored
-    * artifact — the piece [[incrementalDedupReleasable]]'s contract
+    * artifact — the piece [[incrementalDedup]]'s contract
     * assumes but did not ship (r16 verdict #1): without it every
     * delta batch re-derives trigrams + MinHash over the FULL base
     * corpus, i.e. per-batch cost rides the 100 TB corpus instead of
@@ -397,7 +373,7 @@ object DedupOps {
     * (see [[writeSignatureIndex]]) — the 100 TB ingestion shape:
     * per-batch work is the delta's own signature pass plus index
     * reads, with ZERO base-corpus text scans and zero base-side
-    * hashing. Result-identical to [[incrementalDedupReleasable]] on
+    * hashing. Result-identical to [[incrementalDedup]] on
     * the same (base, delta) — d36 pins that against d14's oracle.
     *
     * Join strategy: UNHINTED on purpose. The premise of incremental
@@ -489,20 +465,12 @@ object DedupOps {
     * fraction, so the exact all-pairs verify is O(goldN²) work at
     * ANY corpus size — the one place an all-pairs join is correct,
     * because its input size is a constant of the config, not of the
-    * data. One row: counts + recall/precision in micro-units. */
-  def lshCandidateRecall(docs: DataFrame, idCol: String, textCol: String,
-                         threshold: Double, goldN: Int): DataFrame =
-    lshCandidateRecallReleasable(docs, idCol, textCol, threshold, goldN)._1
-
-  /** [[lshCandidateRecall]] plus an explicit release hook for the
-    * persisted gold-subset trigram table — the
-    * [[nearDuplicatePairsReleasable]] discipline: the Bench/Verify
-    * harness clearCache()s between queries, but a library caller
-    * running many measurements in one session releases after its
-    * action on the returned frame. */
-  def lshCandidateRecallReleasable(docs: DataFrame, idCol: String,
-                                   textCol: String, threshold: Double,
-                                   goldN: Int): (DataFrame, () => Unit) = {
+    * data. One row: counts + recall/precision in micro-units, and a
+    * hook releasing the persisted gold-subset trigram table (the
+    * [[nearDuplicatePairs]] discipline). */
+  def lshCandidateRecall(docs: DataFrame, idCol: String,
+                         textCol: String, threshold: Double,
+                         goldN: Int): (DataFrame, () => Unit) = {
     val gold = docs
       .select(col(idCol), col(textCol))
       .orderBy(md5Hash32(col(idCol).cast("string")), col(idCol))
@@ -548,21 +516,14 @@ object DedupOps {
     * prices what a config COSTS (candidate volume); this measures
     * what it BUYS (true-pair coverage) — together they are the
     * banding cost/benefit table, derived from data instead of the
-    * S-curve assumption. Bounded exactly like [[lshCandidateRecall]]. */
-  def lshRecallSweep(docs: DataFrame, idCol: String, textCol: String,
-                     threshold: Double, goldN: Int,
-                     cfgs: Seq[(Int, Int)]): DataFrame =
-    lshRecallSweepReleasable(docs, idCol, textCol, threshold, goldN, cfgs)._1
-
-  /** [[lshRecallSweep]] plus a release hook covering its one persist
-    * (the gold trigram table) — same caller contract as
-    * [[lshCandidateRecallReleasable]]. Each caller-supplied config is
-    * validated against the signature length up front (see
-    * [[bandKeysCfg]]) so a bad grid fails loudly before any Spark job
-    * runs. */
-  def lshRecallSweepReleasable(docs: DataFrame, idCol: String,
-                               textCol: String, threshold: Double,
-                               goldN: Int, cfgs: Seq[(Int, Int)])
+    * S-curve assumption. Bounded exactly like [[lshCandidateRecall]],
+    * and its hook releases the same one persist (the gold trigram
+    * table). Each caller-supplied config is validated against the
+    * signature length up front (see [[bandKeysCfg]]) so a bad grid
+    * fails loudly before any Spark job runs. */
+  def lshRecallSweep(docs: DataFrame, idCol: String,
+                     textCol: String, threshold: Double,
+                     goldN: Int, cfgs: Seq[(Int, Int)])
       : (DataFrame, () => Unit) = {
     val gold = docs
       .select(col(idCol), col(textCol))
@@ -727,9 +688,9 @@ object DedupOps {
     * one row per duplicated-gram OCCURRENCE, (doc_id, pos, gh, occ),
     * occ ≥ 2. Exposed for the ScaleProbe d27/skew modes, which time
     * the census and the full span operator separately. Persists the
-    * gram table for the query's duration (released by the harness
-    * clearCache / session LRU — probe-side face, not a library loop
-    * surface). */
+    * gram table for the query's duration (released by the query
+    * loop's [[graft.SparkEntry.releasePersisted]] sweep or the session
+    * LRU — probe-side face, not a library loop surface). */
   def exactSubstringDupGramCensus(docs: DataFrame, idCol: String,
                                   tokens: Column, window: Int): DataFrame = {
     require(window >= 2, "window must be >= 2 tokens")
@@ -787,9 +748,9 @@ object DedupOps {
     * here — that is the point of spelling the census as a join). The
     * gram table is PERSISTED so both branches read one explode
     * (census+join without it pays the Generate twice — r14 audit;
-    * PlanShapeSpec pins both branches to InMemoryTableScan). Callers
-    * looping queries in one session should use
-    * [[exactSubstringSpansReleasable]].
+    * PlanShapeSpec pins both branches to InMemoryTableScan); the
+    * returned hook releases it (the [[nearDuplicatePairs]]
+    * discipline).
     *
     * 100 TB shape: the gram table is O(total tokens) narrow rows
     * (id, pos, 16-byte hash), persisted once (MEMORY_AND_DISK — the
@@ -800,17 +761,8 @@ object DedupOps {
     * join-back; the doc-keyed island window sees ONLY duplicated
     * rows. One gram explode total. Nothing quadratic, nothing
     * driver-side, no single-task hot-key funnel. */
-  def exactSubstringSpans(docs: DataFrame, idCol: String, tokens: Column,
-                          window: Int): DataFrame =
-    exactSubstringSpansReleasable(docs, idCol, tokens, window)._1
-
-  /** [[exactSubstringSpans]] plus a release hook for its gram-table
-    * persist — the [[nearDuplicatePairsReleasable]] discipline for
-    * callers running many queries in one session (the Bench/Verify
-    * harnesses clearCache between queries; library loops should
-    * release explicitly after their action). */
-  def exactSubstringSpansReleasable(docs: DataFrame, idCol: String,
-                                    tokens: Column, window: Int)
+  def exactSubstringSpans(docs: DataFrame, idCol: String,
+                          tokens: Column, window: Int)
       : (DataFrame, () => Unit) = {
     require(window >= 2, "window must be >= 2 tokens")
     import org.apache.spark.sql.expressions.Window
@@ -875,16 +827,11 @@ object DedupOps {
     * join-back (broadcast or AQE-skew-split), the doc-keyed island
     * merge carrying the leading gram's first_occ out via
     * `min_by(first_occ, pos)`, and a per-doc agg. The keep-one
-    * decision adds ZERO shuffles on top of d27. Callers looping
-    * queries should use [[exactSubstringStripReleasable]]. */
-  def exactSubstringStrip(docs: DataFrame, idCol: String, tokens: Column,
-                          window: Int): DataFrame =
-    exactSubstringStripReleasable(docs, idCol, tokens, window)._1
-
-  /** [[exactSubstringStrip]] plus a release hook for its gram-table
-    * persist (the [[nearDuplicatePairsReleasable]] discipline). */
-  def exactSubstringStripReleasable(docs: DataFrame, idCol: String,
-                                    tokens: Column, window: Int)
+    * decision adds ZERO shuffles on top of d27. The returned hook
+    * releases the gram-table persist (the [[nearDuplicatePairs]]
+    * discipline). */
+  def exactSubstringStrip(docs: DataFrame, idCol: String,
+                          tokens: Column, window: Int)
       : (DataFrame, () => Unit) = {
     require(window >= 2, "window must be >= 2 tokens")
     import org.apache.spark.sql.expressions.Window
@@ -1065,20 +1012,11 @@ object DedupOps {
     * windows in one pass, never a pass per window; everything after
     * the explode is the same census/island algebra keyed one level
     * wider ((w, gh) census groupBy — skew-safe like d27's, see
-    * [[exactSubstringSpans]]). Output is |windows| rows. Callers
-    * looping queries should use
-    * [[exactSubstringWindowSweepReleasable]]. */
+    * [[exactSubstringSpans]]). Output is |windows| rows, and the
+    * returned hook releases the gram-table persist (the
+    * [[nearDuplicatePairs]] discipline). */
   def exactSubstringWindowSweep(docs: DataFrame, idCol: String,
-                                tokens: Column,
-                                windows: Seq[Int]): DataFrame =
-    exactSubstringWindowSweepReleasable(docs, idCol, tokens, windows)._1
-
-  /** [[exactSubstringWindowSweep]] plus a release hook for its
-    * gram-table persist (the [[nearDuplicatePairsReleasable]]
-    * discipline). */
-  def exactSubstringWindowSweepReleasable(docs: DataFrame, idCol: String,
-                                          tokens: Column,
-                                          windows: Seq[Int])
+                                tokens: Column, windows: Seq[Int])
       : (DataFrame, () => Unit) = {
     require(windows.nonEmpty && windows.forall(_ >= 2),
       "windows must be >= 2 tokens")

@@ -15,6 +15,24 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
+  /** Driver-finish threshold (edges) for the CC tail — a DRIVER-
+    * MEMORY bound, not a data-size tune: 2²⁰ edges ≈ 16 MB of packed
+    * (u, v) longs (~64 MB transient with Row overhead during the one
+    * bounded collect), comfortably inside any production driver. The
+    * saltedEquiJoinHot / RankOps bounded-pull discipline: when the
+    * materialized edge set is ALREADY this small, each further
+    * distributed round is almost pure stage-scheduling latency (3
+    * shuffle stages to rewrite a few thousand edges), while a driver
+    * union-find finishes the identical min-label fixpoint in
+    * microseconds per edge. At corpus scale the pair graph exceeds
+    * the bound and the distributed rounds run unchanged — no cliff,
+    * the bound only moves work to the driver when it provably fits.
+    * Override (e.g. 0 to force the distributed path in probes) with
+    * -Dgraft.cc.finishEdges=N. */
+  private[graft] def driverFinishMaxEdges: Long =
+    sys.props.get("graft.cc.finishEdges").flatMap(_.toLongOption)
+      .getOrElse(1L << 20)
+
   /** Connected components over an undirected edge list via the
     * alternating large-star / small-star algorithm (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", ACM SoCC 2014).
@@ -41,37 +59,9 @@ object GraphOps {
     * Each round's edge set is persisted (the next round consumes it
     * twice: grouped mins + join back) and the previous round's is
     * released eagerly; the fixpoint edge set backing the returned
-    * DataFrame stays persisted — callers running query loops should
-    * use [[connectedComponentsReleasable]] and release after their
-    * action (the Bench/Verify harness instead clearCache()s between
-    * queries).
-    */
-  /** Driver-finish threshold (edges) for the CC tail — a DRIVER-
-    * MEMORY bound, not a data-size tune: 2²⁰ edges ≈ 16 MB of packed
-    * (u, v) longs (~64 MB transient with Row overhead during the one
-    * bounded collect), comfortably inside any production driver. The
-    * saltedEquiJoinHot / RankOps bounded-pull discipline: when the
-    * materialized edge set is ALREADY this small, each further
-    * distributed round is almost pure stage-scheduling latency (3
-    * shuffle stages to rewrite a few thousand edges), while a driver
-    * union-find finishes the identical min-label fixpoint in
-    * microseconds per edge. At corpus scale the pair graph exceeds
-    * the bound and the distributed rounds run unchanged — no cliff,
-    * the bound only moves work to the driver when it provably fits.
-    * Override (e.g. 0 to force the distributed path in probes) with
-    * -Dgraft.cc.finishEdges=N. */
-  private[graft] def driverFinishMaxEdges: Long =
-    sys.props.get("graft.cc.finishEdges").flatMap(_.toLongOption)
-      .getOrElse(1L << 20)
-
-  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxRounds: Int = 50,
-                          assumeCanonical: Boolean = false): DataFrame =
-    connectedComponentsReleasable(edges, srcCol, dstCol, maxRounds,
-      assumeCanonical)._1
-
-  /** [[connectedComponents]] plus an explicit release hook for the
-    * persisted fixpoint edge set.
+    * DataFrame stays persisted until the returned release hook runs —
+    * call it after the action on the result (query loops sweep
+    * instead, [[graft.SparkEntry.releasePersisted]]).
     *
     * `assumeCanonical = true` declares the input ALREADY canonical —
     * distinct (src, dst) rows with non-null src < dst — and skips the
@@ -84,10 +74,11 @@ object GraphOps {
     * narrow and free); duplicate or mis-ordered rows under the flag
     * are a CALLER BUG — the first star round's in-window dedup would
     * silently absorb duplicates, but reversed rows would corrupt the
-    * canonical orientation, so the contract is asserted, not checked. */
-  def connectedComponentsReleasable(edges: DataFrame, srcCol: String,
-                                    dstCol: String, maxRounds: Int = 50,
-                                    assumeCanonical: Boolean = false)
+    * canonical orientation, so the contract is asserted, not checked.
+    */
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
+                          maxRounds: Int = 50,
+                          assumeCanonical: Boolean = false)
       : (DataFrame, () => Unit) = {
     // canonical undirected form: (u, v) with u < v, self-loops dropped
     val cast = edges
@@ -163,6 +154,8 @@ object GraphOps {
     (labels, release)
   }
 
+  val PageRankScale: Long = 1000000000000L // 1e-12 fixed-point units
+
   /** Fixed-iteration PageRank over a directed edge list — the
     * authority-scoring companion to [[connectedComponents]] (corpus
     * governance: rank sources/URLs by link structure before sampling
@@ -190,25 +183,14 @@ object GraphOps {
     * formulation; symmetrize the edge list if every node should
     * retain rank.
     *
-    * Returns (node, pr_fp) with pr_fp = rank · 1e12 as BIGINT;
-    * divide by 1e12 at the edge of the pipeline for a double view.
+    * Returns (node, pr_fp) with pr_fp = rank · 1e12 as BIGINT —
+    * divide by 1e12 at the edge of the pipeline for a double view —
+    * and a hook releasing the cached edge set, node set and final
+    * materialized rank round; call it AFTER the action on the
+    * returned frame.
     */
-  val PageRankScale: Long = 1000000000000L // 1e-12 fixed-point units
-
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 5, dampNum: Int = 85, dampDen: Int = 100)
-      : DataFrame =
-    pageRankReleasable(edges, srcCol, dstCol, iters, dampNum, dampDen)._1
-
-  /** [[pageRank]] plus an explicit release hook for the cached edge
-    * set, node set, and final materialized rank round — the
-    * connectedComponentsReleasable discipline: the Bench/Verify
-    * harness clearCache()s between queries, but a library caller
-    * running many queries in one session should release explicitly
-    * AFTER its action on the returned frame. */
-  def pageRankReleasable(edges: DataFrame, srcCol: String, dstCol: String,
-                         iters: Int = 5, dampNum: Int = 85,
-                         dampDen: Int = 100)
       : (DataFrame, () => Unit) = {
     // the canonical edge set feeds TWO consumers (the per-iteration
     // join and the node set) — cache it once, CLUSTERED BY src:

@@ -83,11 +83,6 @@ object RankOps {
     }
   }
 
-  def globalQuantileRanksReleasable(df: DataFrame, order: Seq[Column],
-                                    tiles: Int, numParts: Int)
-      : (DataFrame, () => Unit) =
-    (globalQuantileRanks(df, order, tiles, numParts), () => ())
-
   /** Global (grank, tile, pct_rank_u, cume_u) over a total order —
     * see the object doc. Construction runs three bounded driver
     * actions (count, boundary sample, bucket counts); nothing stays

@@ -545,19 +545,12 @@ object SimilarityOps {
     * [[embeddingNearDupPairsAuto]] (d10's shape) when full closure is
     * wanted.
     *
-    * Returns the KEPT rows as (idCol, cell). */
-  def semanticDedup(corpus: DataFrame, idCol: String, embCol: String,
-                    numCentroids: Int, minCos: Double): DataFrame =
-    semanticDedupReleasable(corpus, idCol, embCol, numCentroids, minCos)._1
-
-  /** [[semanticDedup]] plus an explicit release hook for the persisted
-    * assignment table — the pageRankReleasable discipline: the
-    * Bench/Verify harness clearCache()s between queries, but a
-    * library caller running many queries in one session should
-    * release AFTER its action on the returned frame. */
-  def semanticDedupReleasable(corpus: DataFrame, idCol: String,
-                              embCol: String, numCentroids: Int,
-                              minCos: Double): (DataFrame, () => Unit) = {
+    * Returns the KEPT rows as (idCol, cell), and a hook releasing the
+    * persisted assignment table — call it AFTER the action on the
+    * returned frame. */
+  def semanticDedup(corpus: DataFrame, idCol: String,
+                    embCol: String, numCentroids: Int,
+                    minCos: Double): (DataFrame, () => Unit) = {
     val (_, kept, release) =
       semDedupParts(corpus, idCol, embCol, numCentroids, minCos)
     (kept, release)
@@ -570,20 +563,11 @@ object SimilarityOps {
     * lose (pairs are within-cell, loser ids are strictly larger), so
     * every nonempty cell keeps >= 1; the left join + coalesce is
     * belt-and-braces. Cost on top of the dedup itself: two
-    * cell-keyed aggs over the persisted assignment table. */
+    * cell-keyed aggs over the persisted assignment table, which the
+    * returned hook releases (the [[semanticDedup]] discipline). */
   def semanticDedupCensus(corpus: DataFrame, idCol: String,
                           embCol: String, numCentroids: Int,
-                          minCos: Double): DataFrame =
-    semanticDedupCensusReleasable(corpus, idCol, embCol,
-      numCentroids, minCos)._1
-
-  /** [[semanticDedupCensus]] plus the release hook for the persisted
-    * assignment table — the [[semanticDedupReleasable]] discipline
-    * (the non-releasable face previously discarded the hook, so a
-    * library caller had no way to free the cache block). */
-  def semanticDedupCensusReleasable(corpus: DataFrame, idCol: String,
-                                    embCol: String, numCentroids: Int,
-                                    minCos: Double): (DataFrame, () => Unit) = {
+                          minCos: Double): (DataFrame, () => Unit) = {
     val (asg, kept, release) =
       semDedupParts(corpus, idCol, embCol, numCentroids, minCos)
     (semanticDedupCensusFromAssignments(asg, kept), release)
@@ -617,9 +601,9 @@ object SimilarityOps {
     * joins per-cell (≤ numCentroids rows, broadcast) onto the kept
     * frame, so the add-on cost over [[semanticDedup]] alone is two
     * cell-keyed aggs. Returns (frame, release). */
-  def semanticDedupWithCensusReleasable(corpus: DataFrame, idCol: String,
-                                        embCol: String, numCentroids: Int,
-                                        minCos: Double)
+  def semanticDedupWithCensus(corpus: DataFrame, idCol: String,
+                              embCol: String, numCentroids: Int,
+                              minCos: Double)
       : (DataFrame, () => Unit) = {
     val (asg, kept, release) =
       semDedupParts(corpus, idCol, embCol, numCentroids, minCos)
@@ -656,8 +640,8 @@ object SimilarityOps {
     // two self-join sides (cell key; exchange reuse covers those) AND
     // the final anti-join probe (id key, a different exchange the
     // reuse cannot cover — without the cache the whole assignment
-    // recomputes from the scan). Harness clearCache()s per query;
-    // library callers release via the returned hook.
+    // recomputes from the scan). Callers release via the returned
+    // hook; query loops sweep ([[graft.SparkEntry.releasePersisted]]).
     val asg = corpus.select(col(idCol), col(embCol))
       .withColumn("nrm", l2norm(col(embCol)))
       .filter(col("nrm") > 0.0)

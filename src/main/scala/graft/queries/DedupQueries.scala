@@ -39,10 +39,12 @@ private[graft] object DedupQueries {
     // measurement companion to d16's analytic banding sweep
     // (semantics and the absolutely-bounded all-pairs justification
     // on the operator).
-    "d18_lsh_recall" -> ((s, dir) =>
-      DedupOps.lshCandidateRecall(
+    "d18_lsh_recall" -> ((s, dir) => {
+      val (recall, _) = DedupOps.lshCandidateRecall(
         t(s, dir, "documents"), "doc_id", "text",
-        threshold = 0.6, goldN = 250)),
+        threshold = 0.6, goldN = 250)
+      recall
+    }),
 
     // CLUSTER-SIZE CENSUS over the d7 closure + the singleton
     // remainder (docs in no candidate pair) — the governance readout
@@ -51,7 +53,7 @@ private[graft] object DedupQueries {
     // from two 1-row aggs, never a join against the corpus.
     "d20_cluster_sizes" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val lab = GraphOps.connectedComponents(
+      val (lab, _) = GraphOps.connectedComponents(
         DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
         "doc_a", "doc_b", assumeCanonical = true)
       DedupOps.clusterSizeCensusFromLabels(docs, lab)
@@ -68,7 +70,7 @@ private[graft] object DedupQueries {
     // FromLabels census faces then read it, never re-running LSH.
     "d21_labels_census" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val (lab, _) = GraphOps.connectedComponentsReleasable(
+      val (lab, _) = GraphOps.connectedComponents(
         DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
         "doc_a", "doc_b", assumeCanonical = true)
       val full = DedupOps.fullClusterLabels(docs, "doc_id", lab)
@@ -96,9 +98,10 @@ private[graft] object DedupQueries {
       val media = s.read
         .parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
         .as[MultimodalOps.MediaRow]
-      MultimodalOps.hammingNearDupPairs(
+      val (pairs, _) = MultimodalOps.hammingNearDupPairs(
         MultimodalOps.imagePHash(media, dim = 32).toDF(),
         "media_id", "phash", maxDist = 6)
+      pairs
     }),
 
     // IMAGE dedup END-TO-END — the d10 keeper-policy shape on the
@@ -111,11 +114,12 @@ private[graft] object DedupQueries {
     // policy are all value-checked, not just pair recall.
     "d23_image_dedup" -> ((s, _) => {
       import s.implicits._
-      MultimodalOps.hammingDedupLabels(
+      val (labels, _) = MultimodalOps.hammingDedupLabels(
         MultimodalOps.imagePHash(
           s.read.parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
             .as[MultimodalOps.MediaRow], dim = 32).toDF(),
         "media_id", "phash", maxDist = 6)
+      labels
     }),
 
     // d23 THROUGH THE SCALE GEOMETRY: the identical image-dedup
@@ -129,11 +133,12 @@ private[graft] object DedupQueries {
     // in-battery claim).
     "d26_image_dedup_blocks" -> ((s, _) => {
       import s.implicits._
-      MultimodalOps.hammingDedupLabels(
+      val (labels, _) = MultimodalOps.hammingDedupLabels(
         MultimodalOps.imagePHash(
           s.read.parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
             .as[MultimodalOps.MediaRow], dim = 32).toDF(),
         "media_id", "phash", maxDist = 6, blocks = 8)
+      labels
     }),
 
     // d23 WITH THE GEOMETRY CHOSEN BY THE OPERATOR (r12 verdict #1):
@@ -149,11 +154,12 @@ private[graft] object DedupQueries {
     // (completeness is invariant in B; only candidate volume moves).
     "d28_image_dedup_auto" -> ((s, _) => {
       import s.implicits._
-      MultimodalOps.hammingDedupLabels(
+      val (labels, _) = MultimodalOps.hammingDedupLabels(
         MultimodalOps.imagePHash(
           s.read.parquet(s"${SparkEntry.FixtureDir}/media_images.parquet")
             .as[MultimodalOps.MediaRow], dim = 32).toDF(),
         "media_id", "phash", maxDist = 6)
+      labels
     }),
 
     // EXACT SUBSTRING duplicate spans (Lee et al. 2022 ExactSubstr,
@@ -164,9 +170,11 @@ private[graft] object DedupQueries {
     // per-doc gaps-and-islands merge. Oracle: the same rederivation
     // in DuckDB (parallel-unnest grams, HAVING census, window-island
     // GROUP BY) over the same md5 fingerprints.
-    "d27_exact_substring" -> ((s, dir) =>
-      DedupOps.exactSubstringSpans(
-        t(s, dir, "documents"), "doc_id", cleanTokens, window = 20)),
+    "d27_exact_substring" -> ((s, dir) => {
+      val (spans, _) = DedupOps.exactSubstringSpans(
+        t(s, dir, "documents"), "doc_id", cleanTokens, window = 20)
+      spans
+    }),
 
     // AUDIO near-dup pairs — the d22 device on the audio side:
     // decode real PCM WAV/AIFF payloads → 64-bit spectral fingerprint
@@ -182,9 +190,10 @@ private[graft] object DedupQueries {
       val media = s.read
         .parquet(s"${SparkEntry.FixtureDir}/media_audio.parquet")
         .as[MultimodalOps.MediaRow]
-      MultimodalOps.hammingNearDupPairs(
+      val (pairs, _) = MultimodalOps.hammingNearDupPairs(
         MultimodalOps.audioFingerprint(media).toDF(),
         "media_id", "afp", maxDist = 7)
+      pairs
     }),
 
     // AUDIO dedup END-TO-END — d23's closure + keeper policy over the
@@ -192,21 +201,24 @@ private[graft] object DedupQueries {
     // recursive-CTE closure oracle.
     "d25_audio_dedup" -> ((s, _) => {
       import s.implicits._
-      MultimodalOps.hammingDedupLabels(
+      val (labels, _) = MultimodalOps.hammingDedupLabels(
         MultimodalOps.audioFingerprint(
           s.read.parquet(s"${SparkEntry.FixtureDir}/media_audio.parquet")
             .as[MultimodalOps.MediaRow]).toDF(),
         "media_id", "afp", maxDist = 7)
+      labels
     }),
 
     // d18 measured across the d16 config grid: the banding
     // cost/benefit table from DATA (d16 prices candidate volume;
     // this measures true-pair coverage per config).
-    "d19_recall_sweep" -> ((s, dir) =>
-      DedupOps.lshRecallSweep(
+    "d19_recall_sweep" -> ((s, dir) => {
+      val (sweep, _) = DedupOps.lshRecallSweep(
         t(s, dir, "documents"), "doc_id", "text",
         threshold = 0.6, goldN = 250,
-        cfgs = Seq((2, 6), (3, 4), (4, 3), (6, 2)))),
+        cfgs = Seq((2, 6), (3, 4), (4, 3), (6, 2)))
+      sweep
+    }),
 
     // shape as d1; the min-id keeper is unique per group, so the
     // output needs no array column (engine int arrays vs oracle
@@ -314,9 +326,11 @@ private[graft] object DedupQueries {
     // array_intersect per pair: |A∪B| = |A|+|B|-|A∩B| with set sizes
     // precomputed; staged projections keep Catalyst from inlining
     // (and thus duplicating) the intersect.
-    "d4_ngram_jaccard" -> ((s, dir) =>
-      DedupOps.nearDuplicatePairs(
-        t(s, dir, "documents"), "doc_id", "text", threshold = 0.6)),
+    "d4_ngram_jaccard" -> ((s, dir) => {
+      val (pairs, _) = DedupOps.nearDuplicatePairs(
+        t(s, dir, "documents"), "doc_id", "text", threshold = 0.6)
+      pairs
+    }),
 
 
     // edit-distance verification of LSH candidate pairs (catches
@@ -358,9 +372,9 @@ private[graft] object DedupQueries {
     "d7_dedup_clusters" -> ((s, dir) => {
       val pairs = DedupOps.minhashCandidatePairs(
         t(s, dir, "documents"), "doc_id", "text")
-      GraphOps.connectedComponents(pairs, "doc_a", "doc_b",
-          assumeCanonical = true)
-        .select(col("node").as("doc_id"), col("component").as("cluster"))
+      val (lab, _) = GraphOps.connectedComponents(pairs, "doc_a", "doc_b",
+        assumeCanonical = true)
+      lab.select(col("node").as("doc_id"), col("component").as("cluster"))
         .withColumn("csize",
           count(lit(1)).over(Window.partitionBy(col("cluster"))))
     }),
@@ -428,9 +442,11 @@ private[graft] object DedupQueries {
     // duplication readout per candidate gram window in ONE text pass
     // — duplicated-gram starts, maximal spans, docs hit, duplicated
     // token mass per W. How a practitioner prices the window choice.
-    "d33_span_window_sweep" -> ((s, dir) =>
-      DedupOps.exactSubstringWindowSweep(
-        t(s, dir, "documents"), "doc_id", cleanTokens, Seq(10, 20, 40))),
+    "d33_span_window_sweep" -> ((s, dir) => {
+      val (sweep, _) = DedupOps.exactSubstringWindowSweep(
+        t(s, dir, "documents"), "doc_id", cleanTokens, Seq(10, 20, 40))
+      sweep
+    }),
 
     // ExactSubstr span REMOVAL accounting (Lee et al. 2022 §4.1's
     // actual deduplicate step — d27's action face, the d32 of the
@@ -438,9 +454,11 @@ private[graft] object DedupQueries {
     // stripped except the keep-one occurrence decided by the span's
     // leading gram's first corpus occurrence (struct-min, no global
     // sort). Integer strip accounting per doc.
-    "d32_span_strip" -> ((s, dir) =>
-      DedupOps.exactSubstringStrip(
-        t(s, dir, "documents"), "doc_id", cleanTokens, window = 20)),
+    "d32_span_strip" -> ((s, dir) => {
+      val (strip, _) = DedupOps.exactSubstringStrip(
+        t(s, dir, "documents"), "doc_id", cleanTokens, window = 20)
+      strip
+    }),
 
     // SPAN-LEVEL ADMISSION census (d27 vs a static base — the d14
     // delta-vs-base shape applied to exact-substring dedup): a
@@ -486,9 +504,10 @@ private[graft] object DedupQueries {
     // plus one narrow hash projection — no new shuffle beyond d21's.
     "d30_leak_free_split" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val lab = GraphOps.connectedComponents(
-          DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
-          "doc_a", "doc_b", assumeCanonical = true)
+      val (cc, _) = GraphOps.connectedComponents(
+        DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
+        "doc_a", "doc_b", assumeCanonical = true)
+      val lab = cc
         .select(col("node").as("doc_id"), col("component").as("cluster"))
       val h = pmod(DedupOps.md5Hash32(
         concat(lit("split:"), col("cluster").cast("string"))), lit(10))
@@ -526,31 +545,32 @@ private[graft] object DedupQueries {
 
     // end-to-end corpus dedup (the d4+d7 capstone): verified near-dup
     // pairs → cluster closure → one representative per cluster
-    "d10_dedup_keep" -> ((s, dir) =>
-      DedupOps.deduplicateCorpus(
-          t(s, dir, "documents"), "doc_id", "text", threshold = 0.6)
-        .select(col("doc_id"), col("lang"))),
+    "d10_dedup_keep" -> ((s, dir) => {
+      val (keepMin, _, _) = DedupOps.dedupPipeline(
+        t(s, dir, "documents"), "doc_id", "text", threshold = 0.6)
+      keepMin.select(col("doc_id"), col("lang"))
+    }),
 
 
     // quality-policy dedup (d10's practical variant): per near-dup
     // cluster keep the LONGEST member, not the min id — the "keep the
     // best copy" policy real corpus pipelines use
-    "d11_dedup_keepbest" -> ((s, dir) =>
-      DedupOps.deduplicateCorpusKeepBest(
-          t(s, dir, "documents"), "doc_id", "text", threshold = 0.6,
-          quality = col("n_chars"))
-        .select(col("doc_id"), col("lang"), col("n_chars"))),
+    "d11_dedup_keepbest" -> ((s, dir) => {
+      val (_, keepBest, _) = DedupOps.dedupPipeline(
+        t(s, dir, "documents"), "doc_id", "text", threshold = 0.6)
+      keepBest(col("n_chars")).select(col("doc_id"), col("lang"), col("n_chars"))
+    }),
 
 
     // BOTH keep policies from ONE LSH→verify→closure pass
-    // (DedupOps.dedupPipelineReleasable): d10 and d11 as standalone
+    // (DedupOps.dedupPipeline): d10 and d11 as standalone
     // queries each pay the full prefix — the composed shape is what a
     // real pipeline runs when it wants to compare policies, and it
     // pays the dominant cost once (the cluster labels stay
     // materialized across both policy branches).
     "d13_dedup_policies" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val (keepMin, keepBest, _) = DedupOps.dedupPipelineReleasable(
+      val (keepMin, keepBest, _) = DedupOps.dedupPipeline(
         docs, "doc_id", "text", threshold = 0.6)
       keepMin.select(col("doc_id"), lit("min_id").as("policy"))
         .unionByName(keepBest(col("n_chars"))
@@ -566,10 +586,11 @@ private[graft] object DedupQueries {
     // per-batch cost rides the delta, not the 100 TB corpus.
     "d14_incremental_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      DedupOps.incrementalDedupReleasable(
+      val (admitted, _) = DedupOps.incrementalDedup(
         docs.filter(pmod(col("doc_id"), lit(5)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(5)) === 0),
-        "doc_id", "text", threshold = 0.6)._1
+        "doc_id", "text", threshold = 0.6)
+      admitted
     }),
 
 

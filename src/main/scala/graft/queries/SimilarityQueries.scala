@@ -167,8 +167,9 @@ private[graft] object SimilarityQueries {
         expr("transform(sequence(1, size(toks) - 1), " +
           "i -> concat(toks[i - 1], ' ', toks[i]))"))
         .otherwise(array().cast("array<string>"))
-      CorpusOps.tfidfCosinePairs(d0, "doc_id", bigrams,
+      val (pairs, _) = CorpusOps.tfidfCosinePairs(d0, "doc_id", bigrams,
         maxDf = 100L, minCos = 0.3)
+      pairs
     }),
 
 
@@ -323,19 +324,23 @@ private[graft] object SimilarityQueries {
     // corpus's planted near-dup level, cf. d5), min-id kept — the
     // cell bound is the explicit capacity/recall trade that keeps the
     // pair stream finite at corpus scale
-    "s7_semantic_dedup" -> ((s, dir) =>
-      SimilarityOps.semanticDedup(
+    "s7_semantic_dedup" -> ((s, dir) => {
+      val (kept, _) = SimilarityOps.semanticDedup(
         t(s, dir, "embeddings"), "vec_id", "embedding",
-        numCentroids = 16, minCos = 0.45)),
+        numCentroids = 16, minCos = 0.45)
+      kept
+    }),
 
     // PER-CELL SemDeDup governance census — how much each
     // quantization cell loses to the semantic prune (the
     // embedding-space twin of d20's cluster census); semantics and
     // the min-id-survivor invariant on the operator.
-    "s15_semdedup_census" -> ((s, dir) =>
-      SimilarityOps.semanticDedupCensus(
+    "s15_semdedup_census" -> ((s, dir) => {
+      val (census, _) = SimilarityOps.semanticDedupCensus(
         t(s, dir, "embeddings"), "vec_id", "embedding",
-        numCentroids = 16, minCos = 0.45)),
+        numCentroids = 16, minCos = 0.45)
+      census
+    }),
 
     // COMPOSED s7+s15 in ONE assignment pass (the d21 twin): the kept
     // rows (s7's output) annotated with their cell's census columns
@@ -344,10 +349,12 @@ private[graft] object SimilarityQueries {
     // re-pay the n×C assignment and the within-cell prune; this
     // delivers both for one — the census side is ≤ |cells| rows,
     // broadcast onto the kept frame.
-    "s17_kept_census" -> ((s, dir) =>
-      SimilarityOps.semanticDedupWithCensusReleasable(
+    "s17_kept_census" -> ((s, dir) => {
+      val (keptCensus, _) = SimilarityOps.semanticDedupWithCensus(
         t(s, dir, "embeddings"), "vec_id", "embedding",
-        numCentroids = 16, minCos = 0.45)._1),
+        numCentroids = 16, minCos = 0.45)
+      keptCensus
+    }),
 
     // SIMPLIFIED SILHOUETTE per quantization cell (Rousseeuw 1987,
     // the centroid-based variant): s = (b − a)/max(a, b) with
@@ -372,7 +379,8 @@ private[graft] object SimilarityQueries {
       // and a row-level JOIN — the documented d16 agg-vs-join class
       // where one side exchanges partial rows and the other raw rows,
       // so ReusedExchange cannot cover them and the embeddings scan
-      // would run twice. Harness clearCache()s per query.
+      // would run twice. Released by the query loop's sweep
+      // ([[graft.SparkEntry.releasePersisted]]).
       val dist = e.select(col("vec_id"), col("embedding"))
         .withColumn("nrm", SimilarityOps.l2norm(col("embedding")))
         .filter(col("nrm") > 0.0)

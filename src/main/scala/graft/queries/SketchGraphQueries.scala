@@ -72,9 +72,9 @@ private[graft] object SketchGraphQueries {
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      GraphOps.pageRank(sym, "src", "dst", iters = 5)
-        .select(col("node"),
-          (col("pr_fp").cast("double") / lit(1.0e12)).as("pr"))
+      val (ranks, _) = GraphOps.pageRank(sym, "src", "dst", iters = 5)
+      ranks.select(col("node"),
+        (col("pr_fp").cast("double") / lit(1.0e12)).as("pr"))
         .orderBy(col("pr").desc, col("node"))
         .limit(20)
     }),

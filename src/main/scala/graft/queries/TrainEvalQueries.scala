@@ -93,9 +93,8 @@ private[graft] object TrainEvalQueries {
     "m13_prf" -> ((s, dir) => {
       // cm feeds three consumers (act/prd/tp) on DIFFERENT keys, so
       // exchange reuse cannot cover them — persist the <=25-row
-      // matrix instead of tokenizing the corpus three times (the
-      // harness clearCache()s between queries; library callers hold
-      // the d4-style release discipline)
+      // matrix instead of tokenizing the corpus three times (released
+      // by the query loop's sweep, [[graft.SparkEntry.releasePersisted]])
       val cm = langConfusion(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val act = cm.groupBy(col("lang")).agg(sum(col("n")).as("n_actual"))

@@ -130,9 +130,7 @@ object ScaleProbe {
     lazy val emb10 = spark.read.parquet(s"$base/embeddings")
 
     def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.SparkEntry.releasePersisted(spark)
       System.gc()
     }
     def time(what: String)(body: => Long): Unit = {
@@ -145,15 +143,15 @@ object ScaleProbe {
     }
 
     def closure(d: DataFrame): Long = {
-      val (pairs, rel) = DedupOps.nearDuplicatePairsReleasable(
+      val (pairs, rel) = DedupOps.nearDuplicatePairs(
         d, "doc_id", "text", threshold = 0.6)
-      val (lab, rel2) = GraphOps.connectedComponentsReleasable(
+      val (lab, rel2) = GraphOps.connectedComponents(
         pairs.select(col("doc_a"), col("doc_b")), "doc_a", "doc_b")
       val n = lab.count()
       rel(); rel2(); n
     }
     def semdedup(d: DataFrame, cents: Int): Long = {
-      val (kept, rel) = SimilarityOps.semanticDedupReleasable(
+      val (kept, rel) = SimilarityOps.semanticDedup(
         d, "vec_id", "embedding", numCentroids = cents, minCos = 0.45)
       val n = kept.count()
       rel(); n
@@ -181,7 +179,7 @@ object ScaleProbe {
         (col("dst") + lit(k * 1000000000L)).as("dst"))
     }.reduce(_ unionByName _)
     def pagerank(e: DataFrame): Long = {
-      val (ranks, rel) = GraphOps.pageRankReleasable(e, "src", "dst", iters = 5)
+      val (ranks, rel) = GraphOps.pageRank(e, "src", "dst", iters = 5)
       val n = ranks.count(); rel(); n
     }
 
@@ -322,11 +320,14 @@ object ScaleProbe {
       val toks = TextOps.cleanTokens(col("text"))
       def census(d: DataFrame): Long =
         DedupOps.exactSubstringDupGramCensus(d, "doc_id", toks, 20).count()
-      def spansN(d: DataFrame): Long =
-        DedupOps.exactSubstringSpans(d, "doc_id", toks, 20).count()
-      def stripN(d: DataFrame): Long =
-        DedupOps.exactSubstringStrip(d, "doc_id", toks, 20)
-          .filter(col("n_spans_stripped") > 0).count()
+      def spansN(d: DataFrame): Long = {
+        val (spans, _) = DedupOps.exactSubstringSpans(d, "doc_id", toks, 20)
+        spans.count()
+      }
+      def stripN(d: DataFrame): Long = {
+        val (strip, _) = DedupOps.exactSubstringStrip(d, "doc_id", toks, 20)
+        strip.filter(col("n_spans_stripped") > 0).count()
+      }
       // warm up at BOTH scales: the first F× query otherwise absorbs
       // scale-dependent codegen/AQE compilation and the cold corpus
       // read (measured: census 40× read 27-52 s as the first 40×
@@ -364,7 +365,7 @@ object ScaleProbe {
         val n = out.filter(col("dup_of").isNotNull).count(); rel(); n
       }
       def admitInline(b: DataFrame): Long = {
-        val (out, rel) = DedupOps.incrementalDedupReleasable(
+        val (out, rel) = DedupOps.incrementalDedup(
           b, delta, "doc_id", "text", threshold = 0.6)
         val n = out.filter(col("dup_of").isNotNull).count(); rel(); n
       }
@@ -400,12 +401,10 @@ object ScaleProbe {
       // FIXED 32 parts at 2e8 rows pushed 100 MB-row sorts into
       // spill and the wall went I/O-bound at 546 s)
       def twoPass(rows: Long, parts: Int): Long = {
-        val (ranked, rel) = graft.operators.RankOps
-          .globalQuantileRanksReleasable(corpus(rows),
+        graft.operators.RankOps.globalQuantileRanks(corpus(rows),
             Seq(col("v").desc, col("id").asc), tiles = 10,
             numParts = parts)
-        val out = ranked.agg(max(col("grank"))).collect()(0).getLong(0)
-        rel(); out
+          .agg(max(col("grank"))).collect()(0).getLong(0)
       }
       def naive(rows: Long): Long = {
         val w = Window.orderBy(col("v").desc, col("id").asc)
@@ -533,8 +532,10 @@ object ScaleProbe {
       val toks = split(col("text"), " ")
       def censusN(d: DataFrame): Long =
         DedupOps.exactSubstringDupGramCensus(d, "doc_id", toks, 20).count()
-      def spansN(d: DataFrame): Long =
-        DedupOps.exactSubstringSpans(d, "doc_id", toks, 20).count()
+      def spansN(d: DataFrame): Long = {
+        val (spans, _) = DedupOps.exactSubstringSpans(d, "doc_id", toks, 20)
+        spans.count()
+      }
       // the RETIRED r14 window spelling, inline as the cliff witness
       def windowCensusN(d: DataFrame): Long =
         d.select(col("doc_id"), toks.as("t"))
@@ -570,7 +571,7 @@ object ScaleProbe {
       time("spans dense-hot 3e7 occ")(spansN(dense))
       // 2. hot component: star on hub 0 vs disjoint pairs
       def ccN(e: DataFrame): Long = {
-        val (lab, rel) = GraphOps.connectedComponentsReleasable(e, "src", "dst")
+        val (lab, rel) = GraphOps.connectedComponents(e, "src", "dst")
         val out = lab.count(); rel(); out
       }
       def star(n: Long): DataFrame = spark.range(1, n + 1)
@@ -629,20 +630,22 @@ object ScaleProbe {
                 .when(col("id") % 10 === 2, lit(0x1111L)) // 4 flips
                 .otherwise(lit(0L))).as("phash"))
       val n1 = 100000L
-      def labels(n: Long, blocks: Int): Long =
-        MultimodalOps.hammingDedupLabels(
+      def labels(n: Long, blocks: Int): Long = {
+        val (lab, _) = MultimodalOps.hammingDedupLabels(
           sigs(n), "media_id", "phash", maxDist = 6, blocks = blocks)
-          .filter(col("csize") > 1).count()
+        lab.filter(col("csize") > 1).count()
+      }
       // geometry chosen by the operator (r12 verdict #1): persist the
       // signature table first — the shape a real caller at 10⁶⁺ has —
       // so the auto count() pass reads the cache, then report the
       // PhaseLog-recorded choice alongside the wall
       def labelsAuto(n: Long): Long = {
         val s = sigs(n).persist()
-        try MultimodalOps.hammingDedupLabels(
+        try {
+          val (lab, _) = MultimodalOps.hammingDedupLabels(
             s, "media_id", "phash", maxDist = 6)
-          .filter(col("csize") > 1).count()
-        finally s.unpersist(blocking = false)
+          lab.filter(col("csize") > 1).count()
+        } finally s.unpersist(blocking = false)
       }
       graft.PhaseLog.enabled = true
       labels(10000L, 7); sweep() // warmup

@@ -51,10 +51,10 @@ class AdmissionSplitSpec extends AnyFunSuite with SparkSessionFixture {
         s"nothing shared here ${('a' + i).toChar}"))
     ).toDF("doc_id", "text")
 
-    val lab = GraphOps.connectedComponents(
-        DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
-        "doc_a", "doc_b")
-      .select(col("node").as("doc_id"), col("component").as("cluster"))
+    val (cc, _) = GraphOps.connectedComponents(
+      DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
+      "doc_a", "doc_b")
+    val lab = cc.select(col("node").as("doc_id"), col("component").as("cluster"))
     val h = pmod(DedupOps.md5Hash32(
       concat(lit("split:"), col("cluster").cast("string"))), lit(10))
     val split = docs.select(col("doc_id"))

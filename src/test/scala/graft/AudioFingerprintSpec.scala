@@ -82,10 +82,10 @@ class AudioFingerprintSpec extends AnyFunSuite with SparkSessionFixture {
       MediaRow(id, "audio", "audio/x-test", None, None, None, p)
     } :+ MediaRow(99L, "audio", "audio/x-test", None, None, None,
       "RIFF    WAVE".getBytes("ISO-8859-1"))
-    val out = MultimodalOps.hammingDedupLabels(
-        MultimodalOps.audioFingerprint(media.toDS()).toDF(),
-        "media_id", "afp", maxDist = 7)
-      .collect()
+    val (labels, _) = MultimodalOps.hammingDedupLabels(
+      MultimodalOps.audioFingerprint(media.toDS()).toDF(),
+      "media_id", "afp", maxDist = 7)
+    val out = labels.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
       .toMap
     assert(out.keySet == Set(0L, 1L, 2L, 3L, 20L)) // 99 excluded

@@ -17,8 +17,8 @@ import graft.operators.{DedupOps, GraphOps, SimilarityOps}
   *  - the FromLabels/FromAssignments faces reproduce the standalone
   *    censuses from materialized inputs (parquet round-trip, the t24
   *    device: what the census reads at scale is the on-disk table);
-  *  - the new Releasable faces free their cache blocks (the
-  *    nearDuplicatePairsReleasable discipline);
+  *  - the recall and SemDeDup-census release hooks free their cache
+  *    blocks (the [[DedupOps.nearDuplicatePairs]] discipline);
   *  - an over-length banding grid fails loudly at plan-build time
   *    instead of silently hashing NULL-skipped band keys.
   */
@@ -64,9 +64,7 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
       assert(d21.count() === nDocs)
     } finally {
       d21.unpersist(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      SparkEntry.releasePersisted(spark)
     }
   }
 
@@ -91,15 +89,13 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
       assert(censusGot === censusWant)
     } finally {
       s17.unpersist(blocking = true)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      SparkEntry.releasePersisted(spark)
     }
   }
 
   test("FromLabels census reads a MATERIALIZED parquet label table") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val (labels, release) = GraphOps.connectedComponentsReleasable(
+    val (labels, release) = GraphOps.connectedComponents(
       DedupOps.minhashCandidatePairs(docs, "doc_id", "text"),
       "doc_a", "doc_b")
     val dir = tempDir("graft_labels_").toString
@@ -115,9 +111,7 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
         .toSet
       assert(got === want)
     } finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      SparkEntry.releasePersisted(spark)
       org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(dir))
     }
@@ -153,14 +147,14 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
   test("recall Releasable faces: release() leaves no cached blocks") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (r1, rel1) = DedupOps.lshCandidateRecallReleasable(
+    val (r1, rel1) = DedupOps.lshCandidateRecall(
       docs, "doc_id", "text", threshold = 0.6, goldN = 50)
     assert(r1.count() === 1L)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
     rel1()
     val leaked1 = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked1.isEmpty, s"recall trigram table leaked: $leaked1")
-    val (r2, rel2) = DedupOps.lshRecallSweepReleasable(
+    val (r2, rel2) = DedupOps.lshRecallSweep(
       docs, "doc_id", "text", threshold = 0.6, goldN = 50,
       cfgs = Seq((2, 6), (3, 4)))
     assert(r2.count() >= 1L)
@@ -173,13 +167,13 @@ class CensusComposeSpec extends AnyFunSuite with SparkSessionFixture {
   test("semanticDedupCensusReleasable + WithCensus free their blocks") {
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (census, rel) = SimilarityOps.semanticDedupCensusReleasable(
+    val (census, rel) = SimilarityOps.semanticDedupCensus(
       e, "vec_id", "embedding", numCentroids = 8, minCos = 0.45)
     assert(census.count() > 0)
     rel()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"census assignment table leaked: $leaked")
-    val (kc, rel2) = SimilarityOps.semanticDedupWithCensusReleasable(
+    val (kc, rel2) = SimilarityOps.semanticDedupWithCensus(
       e, "vec_id", "embedding", numCentroids = 8, minCos = 0.45)
     assert(kc.count() > 0)
     rel2()

@@ -54,17 +54,16 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
       (2L, base, 0.9),  // the copy a quality policy must keep
       (3L, "an entirely unrelated document about query planners", 0.5))
       .toDF("doc_id", "text", "score")
-    val kept = DedupOps.deduplicateCorpusKeepBest(
-        docs, "doc_id", "text", threshold = 0.6, quality = col("score"))
+    val (keepMin, keepBest, release) = DedupOps.dedupPipeline(
+      docs, "doc_id", "text", threshold = 0.6)
+    val kept = keepBest(col("score"))
       .select("doc_id").as[Long].collect().sorted
     // min-id policy would keep 1; the quality policy keeps 2
     assert(kept.toSeq == Seq(2L, 3L))
-    // sanity: the min-id variant keeps 1 on the same corpus
-    val minId = DedupOps.deduplicateCorpus(docs, "doc_id", "text", 0.6)
-      .select("doc_id").as[Long].collect().sorted
+    // sanity: the min-id policy keeps 1 on the same corpus
+    val minId = keepMin.select("doc_id").as[Long].collect().sorted
     assert(minId.toSeq == Seq(1L, 3L))
-    // both leave the CC fixpoint persisted by design (harness contract)
-    spark.catalog.clearCache()
+    release()
   }
 
   test("simhash: deterministic, identical inputs → identical fingerprints") {
@@ -212,7 +211,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
   test("nearDuplicatePairsReleasable: release() leaves no cached blocks") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (pairs, release) = DedupOps.nearDuplicatePairsReleasable(
+    val (pairs, release) = DedupOps.nearDuplicatePairs(
       docs, "doc_id", "text", threshold = 0.6)
     assert(pairs.count() >= 0) // action materializes the persisted table
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
@@ -225,7 +224,7 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
   test("semanticDedupReleasable: release() leaves no cached blocks") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (kept, release) = SimilarityOps.semanticDedupReleasable(
+    val (kept, release) = SimilarityOps.semanticDedup(
       e, "vec_id", "embedding", numCentroids = 8, minCos = 0.45)
     assert(kept.count() > 0)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty)
@@ -235,22 +234,15 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
       s"assignment table still cached after release(): $leaked")
   }
 
-  test("dedupPipelineReleasable: policies match the standalone operators") {
+  // The policies' values are checked against DuckDB by the d10/d11
+  // oracles; this pins their shared shape and the release bound.
+  test("dedupPipeline: both policies keep one doc per cluster; bounded release") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (keepMin, keepBest, release) = DedupOps.dedupPipelineReleasable(
+    val (keepMin, keepBest, release) = DedupOps.dedupPipeline(
       docs, "doc_id", "text", threshold = 0.6)
     val pMin = keepMin.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     val pBest = keepBest(col("n_chars")).select("doc_id")
       .collect().map(_.getLong(0)).sorted.toSeq
-    // the standalone frames stay referenced in vals so their RDD-level
-    // persists can't be weakly collected mid-test
-    val sMinDf = DedupOps.deduplicateCorpus(docs, "doc_id", "text", 0.6)
-    val sBestDf = DedupOps.deduplicateCorpusKeepBest(
-      docs, "doc_id", "text", 0.6, col("n_chars"))
-    val sMin = sMinDf.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    val sBest = sBestDf.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(pMin == sMin)
-    assert(pBest == sBest)
     assert(pMin.size == pBest.size, "both policies keep one doc per cluster")
     // release() frees the pipeline's materialized closure leaf when
     // the distributed star rounds ran; under the r18 driver finish
@@ -262,16 +254,13 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((before -- after).size <= 1,
       s"release() freed more than the pipeline closure: before=$before after=$after")
-    // leave no blocks behind for later tests (the harness sweep)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 
   test("tfidfCosinePairsReleasable: release() leaves no cached blocks") {
     import graft.operators.CorpusOps
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (pairs, release) = CorpusOps.tfidfCosinePairsReleasable(
+    val (pairs, release) = CorpusOps.tfidfCosinePairs(
       docs, "doc_id", split(lower(col("text")), "\\s+"),
       maxDf = 100L, minCos = 0.3)
     assert(pairs.count() >= 0)
@@ -286,20 +275,18 @@ class DedupSimilaritySpec extends AnyFunSuite with SparkSessionFixture {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val base = docs.filter(col("doc_id") % 5 =!= 0)
-    // reference FIRST (its own trigram persist is by-design unreleased
-    // — harness-swept — so it must not pollute the hygiene snapshot):
-    // full-corpus verified pairs restricted to (delta, base) cross
-    // edges, min base id per delta doc
-    val ref = DedupOps.nearDuplicatePairs(docs, "doc_id", "text", 0.6)
-      .select("doc_a", "doc_b").collect()
+    // reference: full-corpus verified pairs restricted to (delta,
+    // base) cross edges, min base id per delta doc
+    val (pairs, refRelease) =
+      DedupOps.nearDuplicatePairs(docs, "doc_id", "text", 0.6)
+    val ref = pairs.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }
       .filter { case (d, bs) => d % 5 == 0 && bs % 5 != 0 }
       .groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    refRelease()
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (admitted, release) = DedupOps.incrementalDedupReleasable(
+    val (admitted, release) = DedupOps.incrementalDedup(
       base, delta, "doc_id", "text", threshold = 0.6)
     val got = admitted.collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))

@@ -141,9 +141,7 @@ class DsirWeightsSpec extends AnyFunSuite with SparkSessionFixture {
     }
     val plan = df.queryExecution.executedPlan
     val scans = count(plan) { case _: FileSourceScanExec => true; case _ => false }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkEntry.releasePersisted(spark)
     assert(scans == 1, s"scoring pass must scan the corpus once, got $scans")
     // the t26 query adds a top-k — a TakeOrdered, whose final merge is
     // allowed; what must NOT appear is a shuffle/broadcast for the

@@ -23,10 +23,10 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
 
   private def spans(rows: Seq[(Long, String)]): Set[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    DedupOps.exactSubstringSpans(
-        rows.toDF("doc_id", "text"), "doc_id",
-        split(col("text"), " "), window = W)
-      .collect()
+    val (out, _) = DedupOps.exactSubstringSpans(
+      rows.toDF("doc_id", "text"), "doc_id",
+      split(col("text"), " "), window = W)
+    out.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
   }
@@ -127,10 +127,10 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
   private def strip(rows: Seq[(Long, String)])
       : Map[Long, (Long, Long, Long, Long, Long)] = {
     import spark.implicits._
-    DedupOps.exactSubstringStrip(
-        rows.toDF("doc_id", "text"), "doc_id",
-        split(col("text"), " "), window = W)
-      .collect()
+    val (out, _) = DedupOps.exactSubstringStrip(
+      rows.toDF("doc_id", "text"), "doc_id",
+      split(col("text"), " "), window = W)
+    out.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5))))
       .toMap
@@ -158,9 +158,9 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
   test("strip accounting is conserved on real testdata") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val got = DedupOps.exactSubstringStrip(
-        docs, "doc_id", QuerySupport.cleanTokens, window = 10)
-      .collect()
+    val (strip, _) = DedupOps.exactSubstringStrip(
+      docs, "doc_id", QuerySupport.cleanTokens, window = 10)
+    val got = strip.collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val (n, spans, stripped, tokStripped, kept) =
@@ -181,10 +181,10 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
       1L -> (words("a", 3) + " " + shared + " " + words("b", 4)),
       2L -> (words("c", 6) + " " + shared),
       3L -> words("z", 30))
-    val got = DedupOps.exactSubstringWindowSweep(
-        docs.toDF("doc_id", "text"), "doc_id",
-        split(col("text"), " "), Seq(5, 8, 9))
-      .collect()
+    val (sweep, _) = DedupOps.exactSubstringWindowSweep(
+      docs.toDF("doc_id", "text"), "doc_id",
+      split(col("text"), " "), Seq(5, 8, 9))
+    val got = sweep.collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4)))).toMap
     // W=5: spans (1,[3,10],8toks) + (2,[6,13],8toks): 4 starts each
@@ -196,10 +196,10 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
     // and each window row must agree with an independent single-window
     // span run folded the same way
     for (w <- Seq(5, 8)) {
-      val sp = DedupOps.exactSubstringSpans(
-          docs.toDF("doc_id", "text"), "doc_id",
-          split(col("text"), " "), w)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      val (spans, _) = DedupOps.exactSubstringSpans(
+        docs.toDF("doc_id", "text"), "doc_id",
+        split(col("text"), " "), w)
+      val sp = spans.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3)))
       val starts = sp.map { case (_, s, e, _) => e - w + 1 - s + 1 }.sum
       assert(got(w) === ((starts, sp.length.toLong,
@@ -320,9 +320,9 @@ class ExactSubstringSpec extends AnyFunSuite with SparkSessionFixture {
     // the committed-corpus style check on sf0.001 testdata
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    val got = DedupOps.exactSubstringSpans(
-        docs, "doc_id", QuerySupport.cleanTokens, window = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+    val (spans, _) = DedupOps.exactSubstringSpans(
+      docs, "doc_id", QuerySupport.cleanTokens, window = 10)
+    val got = spans.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3)))
     got.foreach { case (_, s, e, n) =>
       assert(n >= 10); assert(e - s + 1 === n)

@@ -9,7 +9,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   private def components(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    val (labels, release) = GraphOps.connectedComponentsReleasable(
+    val (labels, release) = GraphOps.connectedComponents(
       edges.toDF("src", "dst"), "src", "dst")
     try labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally release()
@@ -82,7 +82,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
     import spark.implicits._
     sys.props("graft.cc.finishEdges") = "0"
     try {
-      val (labels, release) = GraphOps.connectedComponentsReleasable(
+      val (labels, release) = GraphOps.connectedComponents(
         edges.toDF("src", "dst"), "src", "dst",
         assumeCanonical = canonical)
       try labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -115,7 +115,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
     val ref = unionFind(edges)
     assert(componentsDistributed(edges, canonical = true) == ref)
     import spark.implicits._
-    val (labels, release) = GraphOps.connectedComponentsReleasable(
+    val (labels, release) = GraphOps.connectedComponents(
       edges.toDF("src", "dst"), "src", "dst", assumeCanonical = true)
     try assert(
       labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == ref)
@@ -146,8 +146,10 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
   private def ranks(edges: Seq[(Long, Long)], iters: Int = 5)
       : Map[Long, Long] = {
     import spark.implicits._
-    GraphOps.pageRank(edges.toDF("src", "dst"), "src", "dst", iters)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (pr, release) =
+      GraphOps.pageRank(edges.toDF("src", "dst"), "src", "dst", iters)
+    try pr.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally release()
   }
 
   test("pageRank distributed rounds == driver finish, bit-for-bit " +
@@ -193,7 +195,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
     assert(ranks(Seq.empty) == Map.empty)
     val nulls = Seq((Some(1L), Option.empty[Long]))
       .toDF("src", "dst")
-    val got = GraphOps.pageRank(nulls, "src", "dst")
+    val (got, _) = GraphOps.pageRank(nulls, "src", "dst")
     assert(got.collect().isEmpty)
     assert(got.columns.toSeq == Seq("node", "pr_fp"))
   }
@@ -217,11 +219,11 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
   // suites first), so a global assertion is residue-flaky.
   test("pageRankReleasable leaves no cached blocks after release") {
     import spark.implicits._
-    spark.catalog.clearCache()
+    SparkEntry.releasePersisted(spark)
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L))
       .toDF("src", "dst")
-    val (pr, release) = GraphOps.pageRankReleasable(edges, "src", "dst")
+    val (pr, release) = GraphOps.pageRank(edges, "src", "dst")
     assert(pr.count() == 3)
     release()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
@@ -230,9 +232,9 @@ class GraphOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("releasable variant leaves no cached blocks after release") {
     import spark.implicits._
-    spark.catalog.clearCache() // drop any residue from sibling suites
+    SparkEntry.releasePersisted(spark) // drop any residue from sibling suites
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val (labels, release) = GraphOps.connectedComponentsReleasable(
+    val (labels, release) = GraphOps.connectedComponents(
       Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"), "src", "dst")
     assert(labels.count() == 3)
     release()

@@ -52,9 +52,10 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
   private def engine(rows: Seq[(Long, Long)], d: Int,
                      blocks: Int): Set[(Long, Long, Int)] = {
     import spark.implicits._
-    MultimodalOps.hammingNearDupPairs(
-        rows.toDF("media_id", "phash"), "media_id", "phash", d, blocks)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    // an explicit `blocks` persists nothing: the hook is a no-op
+    val (pairs, _) = MultimodalOps.hammingNearDupPairs(
+      rows.toDF("media_id", "phash"), "media_id", "phash", d, blocks)
+    pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
   }
 
   test("pair set is invariant in blocks (d = 6: default 7, 8, 10)") {
@@ -127,9 +128,11 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = corpus
     val derived = rows.toDF("media_id", "raw")
       .select(col("media_id"), decode(col("raw")).as("phash"))
-    val got = MultimodalOps.hammingNearDupPairs(
-        derived, "media_id", "phash", 6)
+    val (pairs, release) = MultimodalOps.hammingNearDupPairs(
+      derived, "media_id", "phash", 6)
+    val got = pairs
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    release()
     assert(got === truth(rows, 6))
     assert(calls.value === rows.size.toLong,
       s"decode ran ${calls.value} times for ${rows.size} rows")
@@ -139,9 +142,11 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = corpus
     val want = truth(rows, 6)
     import spark.implicits._
-    val got = MultimodalOps.hammingNearDupPairs(
-        rows.toDF("media_id", "phash"), "media_id", "phash", 6)
+    val (pairs, release) = MultimodalOps.hammingNearDupPairs(
+      rows.toDF("media_id", "phash"), "media_id", "phash", 6)
+    val got = pairs
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    release()
     assert(got === want)
   }
 
@@ -151,22 +156,16 @@ class HammingBlocksSpec extends AnyFunSuite with SparkSessionFixture {
     // The release hook must drop every block this call pinned.
     import spark.implicits._
     val rows = corpus
-    // hermetic cache baseline: earlier tests' plain-face persists
-    // share CacheManager entries with ours (same plan), so the only
-    // sound assertion starts from an empty cache
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
     def cachedRdds: Int = spark.sparkContext.getPersistentRDDs.size
     val before = cachedRdds
-    val (pairs, rel) = MultimodalOps.hammingNearDupPairsReleasable(
+    val (pairs, rel) = MultimodalOps.hammingNearDupPairs(
       rows.toDF("media_id", "phash"), "media_id", "phash", 6)
     assert(pairs.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getInt(2))).toSet === truth(rows, 6))
     rel()
     assert(cachedRdds === before,
       s"pairs release leaked ${cachedRdds - before} cached RDDs")
-    val (lab, rel2) = MultimodalOps.hammingDedupLabelsReleasable(
+    val (lab, rel2) = MultimodalOps.hammingDedupLabels(
       rows.toDF("media_id", "phash"), "media_id", "phash", 6)
     assert(lab.count() === rows.size.toLong)
     rel2()

@@ -106,9 +106,9 @@ class ImagePHashSpec extends AnyFunSuite with SparkSessionFixture {
     val hs = hashes.collect().map(h => h.media_id -> h.phash).toMap
     assert(hashes.filter(!_.ok).count() == 0)
     val maxDist = 6
-    val got = MultimodalOps.hammingNearDupPairs(
-        hashes.toDF(), "media_id", "phash", maxDist)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val (pairs, _) = MultimodalOps.hammingNearDupPairs(
+      hashes.toDF(), "media_id", "phash", maxDist)
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val want = (for {
       a <- imgs.map(_._1); b <- imgs.map(_._1) if a < b
       d = dist(hs(a), hs(b)) if d <= maxDist
@@ -145,8 +145,8 @@ class ImagePHashSpec extends AnyFunSuite with SparkSessionFixture {
       MultimodalOps.ImageHash(2L, ok = false, "corrupt: too short", 0L),
       MultimodalOps.ImageHash(3L, ok = true, null, 0L),
       MultimodalOps.ImageHash(4L, ok = true, null, 1L)).toDS().toDF()
-    val got = MultimodalOps.hammingNearDupPairs(hashes, "media_id", "phash", 6)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val (pairs, _) = MultimodalOps.hammingNearDupPairs(hashes, "media_id", "phash", 6)
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(got == Set((3L, 4L, 1)))
   }
 
@@ -164,10 +164,10 @@ class ImagePHashSpec extends AnyFunSuite with SparkSessionFixture {
       MediaRow(id, "image", "image/x-test", None, None, None, b)
     } :+ MediaRow(99L, "image", "image/x-test", None, None, None,
       Array.fill[Byte](8)(1))
-    val out = MultimodalOps.hammingDedupLabels(
-        MultimodalOps.imagePHash(media.toDS(), Dim).toDF(),
-        "media_id", "phash", maxDist = 6)
-      .collect()
+    val (labels, _) = MultimodalOps.hammingDedupLabels(
+      MultimodalOps.imagePHash(media.toDS(), Dim).toDF(),
+      "media_id", "phash", maxDist = 6)
+    val out = labels.collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
       .toMap
     assert(out.keySet == Set(0L, 1L, 2L, 10L, 11L, 20L)) // 99 excluded

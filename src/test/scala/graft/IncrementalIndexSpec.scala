@@ -7,7 +7,7 @@ import graft.operators.DedupOps
 
 /** [[DedupOps.writeSignatureIndex]] + [[DedupOps.incrementalDedupFromIndex]]
   * (r16 verdict #1): the stored-index admission must be RESULT-
-  * identical to the inline [[DedupOps.incrementalDedupReleasable]] on
+  * identical to the inline [[DedupOps.incrementalDedup]] on
   * the same (base, delta) — the index is an execution artifact, never
   * a semantics change. Also pins the layout contract: the bands table
   * is band-partitioned with no text column anywhere in the index. */
@@ -40,7 +40,7 @@ class IncrementalIndexSpec extends AnyFunSuite with SparkSessionFixture {
     val delta = docs.filter(col("doc_id") % 5 === 0)
     val stage = tempDir("incr_index").toString
 
-    val (inline, relInline) = DedupOps.incrementalDedupReleasable(
+    val (inline, relInline) = DedupOps.incrementalDedup(
       base, delta, "doc_id", "text", threshold = 0.6)
     val expected = inline.collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
@@ -80,7 +80,7 @@ class IncrementalIndexSpec extends AnyFunSuite with SparkSessionFixture {
     DedupOps.writeSignatureIndex(base, "doc_id", "text", stage, numFiles = 4)
     for (rem <- Seq(0, 5)) {
       val delta = docs.filter(col("doc_id") % 10 === rem)
-      val (inline, r1) = DedupOps.incrementalDedupReleasable(
+      val (inline, r1) = DedupOps.incrementalDedup(
         base, delta, "doc_id", "text", threshold = 0.6)
       val expected = inline.collect().map(_.toString).sorted.toSeq
       r1()

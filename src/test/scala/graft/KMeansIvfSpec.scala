@@ -19,10 +19,10 @@ class KMeansIvfSpec extends AnyFunSuite with SparkSessionFixture {
       (20L, base(0)._2.clone()),
       (21L, base(1)._2.clone()),
       (22L, Array.tabulate(8)(d => if (d < 4) 0.9f else -0.9f)))
-    val kept = SimilarityOps.semanticDedup(
+    val (keptDf, _) = SimilarityOps.semanticDedup(
       rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
       numCentroids = 4, minCos = 0.999)
-      .collect().map(_.getLong(0)).toSet
+    val kept = keptDf.collect().map(_.getLong(0)).toSet
     assert(!kept.contains(20L) && !kept.contains(21L))
     assert(kept.contains(0L) && kept.contains(1L) && kept.contains(22L))
     assert(kept.size == rows.size - 2)

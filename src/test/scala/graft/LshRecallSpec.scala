@@ -15,9 +15,9 @@ class LshRecallSpec extends AnyFunSuite with SparkSessionFixture {
   private def run(rows: Seq[(Long, String)], goldN: Int,
                   threshold: Double): (Long, Long, Long, Long, Long, Long) = {
     import spark.implicits._
-    val r = DedupOps.lshCandidateRecall(
+    val (recall, _) = DedupOps.lshCandidateRecall(
       rows.toDF("doc_id", "text"), "doc_id", "text", threshold, goldN)
-      .collect().head
+    val r = recall.collect().head
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getLong(4), r.getLong(5))
   }
@@ -56,10 +56,10 @@ class LshRecallSpec extends AnyFunSuite with SparkSessionFixture {
     val rows = Seq(1L -> base, 2L -> base, 3L -> (base + " with a tail"),
       4L -> "entirely unrelated content about geology and strata")
     val single = run(rows, goldN = 10, 0.5)
-    val sweep = DedupOps.lshRecallSweep(
-        rows.toDF("doc_id", "text"), "doc_id", "text", 0.5, 10,
-        Seq((MinhashBands, MinhashRows), (6, 2)))
-      .collect()
+    val (sweepDf, _) = DedupOps.lshRecallSweep(
+      rows.toDF("doc_id", "text"), "doc_id", "text", 0.5, 10,
+      Seq((MinhashBands, MinhashRows), (6, 2)))
+    val sweep = sweepDf.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6))).toMap
     val prod = sweep((MinhashBands.toLong, MinhashRows.toLong))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextOps
-import graft.ml.SentimentScorer
+import graft.ml.{SentimentModel, SentimentScorer}
 import graft.operators.DedupOps.{md5Hash32, md5Hash60}
 import graft.operators.DetParams._
 
@@ -88,6 +88,15 @@ object Oracles {
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
+
+  /** The stop-word filter over `model`'s own stop list as a built-in
+    * expression (`isInCollection` → optimizer-rewritten `InSet`) —
+    * the filter the scorer's margin expression folds in, spelled out
+    * so the specs can hold the folded form to the chained one. */
+  def removeStopWords(model: SentimentModel, tokens: Column): Column = {
+    val stopSet = model.stopWords.map(_.toLowerCase).distinct.toSeq.sorted
+    filter(tokens, t => !lower(t).isInCollection(stopSet))
+  }
 
   /** Scorer faces the specs compare the serving chain against. */
   implicit final class ScorerOracles(private val s: SentimentScorer)

@@ -20,9 +20,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
     val s = SparkEntry.queries(name)(spark, sf)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkEntry.releasePersisted(spark)
     s
   }
 
@@ -31,13 +29,10 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
     val s = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    // clearCache() cannot reach RDD-level persists (DatasetBridge
-    // round leaves from q38/CC paths) — sweep them too, or they leak
-    // into later suites' cache-hygiene assertions (suite order is NOT
-    // fixed: sbt runs previously-failing suites first)
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    // sweep the RDD-level round leaves too (q38/CC paths), or they
+    // leak into later suites' cache-hygiene assertions (suite order
+    // is NOT fixed: sbt runs previously-failing suites first)
+    SparkEntry.releasePersisted(spark)
     s
   }
 
@@ -171,9 +166,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
       }
       assert(ghWindows.isEmpty,
         s"$q: gh-partitioned window census — the hot-gram single-task funnel")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      SparkEntry.releasePersisted(spark)
     }
   }
 
@@ -269,9 +262,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
       case _ => p.children.map(countScans).sum
     }
     val n = countScans(df.queryExecution.executedPlan)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkEntry.releasePersisted(spark)
     assert(n == 1, s"census plan must scan the corpus once, got $n")
   }
 
@@ -402,9 +393,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
     assert(n22 == 1,
       s"t22 must scan the text column exactly once, got $n22:\n" +
         t22.queryExecution.executedPlan)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkEntry.releasePersisted(spark)
   }
 
   test("s13 sweep: more probe budgets do NOT add corpus scans") {
@@ -448,7 +437,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
     // DISTRIBUTED round's shuffle count
     sys.props("graft.pr.finishEdges") = "0"
     val (pr, release) = try graft.operators.GraphOps
-      .pageRankReleasable(edges, "src", "dst", iters = 3)
+      .pageRank(edges, "src", "dst", iters = 3)
     finally sys.props.remove("graft.pr.finishEdges")
     try {
       assert(pr.count() > 0) // materialize so AQE's final plan exists
@@ -486,9 +475,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSessionFixture {
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect()
     val p = df.queryExecution.executedPlan
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkEntry.releasePersisted(spark)
     p
   }
 

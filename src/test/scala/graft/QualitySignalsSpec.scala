@@ -104,9 +104,9 @@ class QualitySignalsSpec extends AnyFunSuite with SparkSessionFixture {
       (1L, Seq("x", "y", "c")),
       (2L, Seq("x", "y", "c")),
       (3L, Seq("c", "q"))).toDF("doc_id", "toks")
-    val got = graft.operators.CorpusOps
+    val (pairs, _) = graft.operators.CorpusOps
       .tfidfCosinePairs(docs, "doc_id", col("toks"), maxDf = 2L, minCos = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == Seq((1L, 2L, 1.0)))
   }
 
@@ -114,13 +114,13 @@ class QualitySignalsSpec extends AnyFunSuite with SparkSessionFixture {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val empty = Seq.empty[(Long, Seq[String])].toDF("doc_id", "toks")
-    assert(graft.operators.CorpusOps
+    val (fromEmpty, _) = graft.operators.CorpusOps
       .tfidfCosinePairs(empty, "doc_id", col("toks"), 10L, 0.0)
-      .collect().isEmpty)
+    assert(fromEmpty.collect().isEmpty)
     val one = Seq((1L, Seq("x", "y"))).toDF("doc_id", "toks")
-    assert(graft.operators.CorpusOps
+    val (fromOne, _) = graft.operators.CorpusOps
       .tfidfCosinePairs(one, "doc_id", col("toks"), 10L, 0.0)
-      .collect().isEmpty)
+    assert(fromOne.collect().isEmpty)
   }
 
   test("tfidfCosinePairs: all-shared vocabulary yields no pairs, not NaN") {
@@ -132,9 +132,9 @@ class QualitySignalsSpec extends AnyFunSuite with SparkSessionFixture {
     val docs = Seq(
       (1L, Seq("x", "y")),
       (2L, Seq("x", "y"))).toDF("doc_id", "toks")
-    val got = graft.operators.CorpusOps
+    val (pairs, _) = graft.operators.CorpusOps
       .tfidfCosinePairs(docs, "doc_id", col("toks"), maxDf = 10L, minCos = 0.0)
-      .collect()
+    val got = pairs.collect()
     assert(got.isEmpty)
   }
 

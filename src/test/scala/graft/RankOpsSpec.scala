@@ -31,16 +31,14 @@ class RankOpsSpec extends AnyFunSuite with SparkSessionFixture {
 
   private def twoPass(df: org.apache.spark.sql.DataFrame, tiles: Int,
                       numParts: Int): Array[(Long, Long, Long, Long, Long)] = {
-    val (ranked, release) = RankOps.globalQuantileRanksReleasable(df,
-      Seq(col("v").desc, col("id").asc), tiles, numParts)
-    try ranked
+    RankOps.globalQuantileRanks(df,
+        Seq(col("v").desc, col("id").asc), tiles, numParts)
       .select(col("id"), col("grank"), col("tile"),
         col("pct_rank_u"), col("cume_u"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
       .sortBy(_._1)
-    finally release()
   }
 
   private def corpus(n: Int, distinctVals: Int) = {
@@ -109,13 +107,11 @@ class RankOpsSpec extends AnyFunSuite with SparkSessionFixture {
     val ref = df.select(col("id"),
         row_number().over(w).cast("long").as("grank"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val (ranked, release) = RankOps.globalQuantileRanksReleasable(df,
-      Seq(col("v").desc, col("id").asc), tiles = 4, numParts = 5)
-    try {
-      val got = ranked.select(col("id"), col("grank"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      assert(got === ref)
-    } finally release()
+    val got = RankOps.globalQuantileRanks(df,
+        Seq(col("v").desc, col("id").asc), tiles = 4, numParts = 5)
+      .select(col("id"), col("grank"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    assert(got === ref)
   }
 
   test("null keys follow SortOrder defaults: asc nulls first, desc nulls last") {
@@ -129,13 +125,11 @@ class RankOpsSpec extends AnyFunSuite with SparkSessionFixture {
       val ref = df.select(col("id"),
           row_number().over(w).cast("long").as("grank"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-      val (ranked, release) = RankOps.globalQuantileRanksReleasable(df,
-        Seq(vOrd, col("id").asc), tiles = 4, numParts = 6)
-      try {
-        val got = ranked.select(col("id"), col("grank"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        assert(got === ref, s"desc=$desc")
-      } finally release()
+      val got = RankOps.globalQuantileRanks(df,
+          Seq(vOrd, col("id").asc), tiles = 4, numParts = 6)
+        .select(col("id"), col("grank"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      assert(got === ref, s"desc=$desc")
     }
   }
 
@@ -144,9 +138,7 @@ class RankOpsSpec extends AnyFunSuite with SparkSessionFixture {
         Seq(col("v").desc, col("id").asc), 10, 8)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+    SparkEntry.releasePersisted(spark)
     assert(!plan.contains("SinglePartition"),
       s"two-pass ranking funneled through one partition:\n$plan")
   }

@@ -18,7 +18,7 @@ class SparseTfIdfMarginSpec extends AnyFunSuite with SparkSessionFixture {
 
   test("expression margin == scalar model margin bit-for-bit on real docs") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val words = scorer.removeStopWords(TextOps.cleanTokens(col("text")))
+    val words = Oracles.removeStopWords(model, TextOps.cleanTokens(col("text")))
     val rows = docs
       .select(words.as("w"), scorer.marginFromWords(words).as("m"))
       .collect()
@@ -35,7 +35,7 @@ class SparseTfIdfMarginSpec extends AnyFunSuite with SparkSessionFixture {
     val toks = TextOps.cleanTokens(col("text"))
     val diff = docs.select(
         scorer.predictFromTokens(toks).as("folded"),
-        scorer.predictFromWords(scorer.removeStopWords(toks)).as("chained"))
+        scorer.predictFromWords(Oracles.removeStopWords(model, toks)).as("chained"))
       .filter(col("folded") =!= col("chained")).count()
     assert(diff == 0L)
   }
@@ -64,7 +64,7 @@ class SparseTfIdfMarginSpec extends AnyFunSuite with SparkSessionFixture {
     val toks = TextOps.cleanTokens(col("text"))
     def score() = docs
       .select(col("doc_id"), scorer.predictFromTokens(toks).as("p"),
-        scorer.marginFromWords(scorer.removeStopWords(toks)).as("m"))
+        scorer.marginFromWords(Oracles.removeStopWords(model, toks)).as("m"))
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
       .sortBy(_._1)
     val withCodegen = score()

@@ -12,7 +12,10 @@ definitions and bodies (overloads included):
     own file or in a file that imports the object's members
     (`import ...Owner._` or `import ...Owner.{..., name, ...}`);
   - a member of a class or trait is called by any `name` occurrence,
-    since its callers hold untyped instances.
+    since its callers hold untyped instances;
+  - a `def name` declaration is never a call, and neither is a dotted
+    `Other.name` when `Other` is a different object that defines
+    `name` (that occurrence calls Other's member, not this one).
 The rule is applied to a fixed point: an occurrence inside the body of
 a def that is itself uncalled does not count, so a def whose only
 callers are uncalled defs is listed too. Mains and overrides are
@@ -37,6 +40,8 @@ ROOT = args[0] if args else "."
 OWNER = re.compile(r"^(\s*)(?:(?:private\[\w+\]|private|protected|final|sealed|abstract|case|implicit)\s+)*(object|class|trait)\s+([A-Za-z_]\w*)")
 DEF = re.compile(r"^(\s*)(?:(?:private\[\w+\]|private|protected|override|final|implicit|inline)\s+)*def\s+([A-Za-z_]\w*)")
 HIDDEN = re.compile(r"^\s*(?:(?:final|implicit|inline)\s+)*(?:private|protected|override)\b|\b(?:private|override)(?:\[\w+\])?\s+def\b")
+DECLARED = re.compile(r"\bdef\s+$")
+QUALIFIER = re.compile(r"\b([A-Za-z_]\w*)\s*\.\s*$")
 TOKEN = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*', re.S)
 
 
@@ -100,6 +105,10 @@ for path, lines in code.items():
 groups = {}  # (owner, name) -> [def, ...]
 for d in defs:
     groups.setdefault((d[0], d[2]), []).append(d)
+objects_defining = {}  # name -> {object owner, ...}
+for d in defs:
+    if d[1] == "object":
+        objects_defining.setdefault(d[2], set()).add(d[0])
 
 
 def imports(text, owner, name):
@@ -122,6 +131,7 @@ def occurrences(files, owner, kind, name):
     if name == "apply":
         pats.append(r"\b%s\s*\(" % re.escape(owner))
     home = {d[3] for d in groups[(owner, name)]}
+    others = objects_defining.get(name, set()) - {owner}
     out = []
     for path, (text, newlines) in files.items():
         if name not in text:
@@ -129,6 +139,12 @@ def occurrences(files, owner, kind, name):
         anywhere = kind != "object" or path in home or imports(text, owner, name)
         for pat in pats + ([r"\b%s\b" % re.escape(name)] if anywhere else []):
             for m in re.finditer(pat, text):
+                before = text[max(0, m.start() - 120):m.start()]
+                if DECLARED.search(before):
+                    continue
+                q = QUALIFIER.search(before)
+                if q and q.group(1) in others:
+                    continue
                 out.append((path, bisect.bisect_left(newlines, m.end())))
     return out
 
